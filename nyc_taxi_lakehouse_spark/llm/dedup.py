@@ -29,11 +29,10 @@ from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect
 from ..plans.ckpt import (
-    evict_local_checkpoint,
     evict_round_checkpoint,
+    iterate,
     register_run_checkpoint,
     round_checkpoint,
-    round_checkpoint_probe,
 )
 from ..registry import df_query, sql_query
 from ..session import DEFAULT_SHUFFLE_PARTITIONS
@@ -818,87 +817,46 @@ def connected_components(
     vertices: (doc_id) — the full vertex set (isolated vertices become
     singleton components labelled by themselves).
 
-    Each iteration is one shuffle (neighbor-min join + groupBy-min), and the
+    Each round is one shuffle (neighbor-min join + groupBy-min), and the
     loop runs until a fixpoint — O(component diameter) rounds, which for
-    near-dup clusters is tiny (dup clusters are dense, diameter 2-3). The
-    iteration state is localCheckpoint()ed so the plan/lineage stays O(1)
-    instead of growing per round; the convergence probe is a LIMIT-1 count,
-    never a data collect. The edge set is materialized ONCE up front — it is
-    referenced in every round, and leaving it lazy would re-run the (often
-    expensive) edge-producing join per iteration (observed 14 s → 3 s on the
-    Jaccard edge set at sf0.1). Only vertices that touch an edge enter the loop —
-    singletons (the overwhelming majority of a real corpus) are unioned back
-    at the end without ever shuffling. At 100 TB the same loop holds: state
-    is (vertex, label) pairs hash-partitioned on vertex; the alternating
-    large-star/small-star variant would cut rounds to O(log d) but the
-    plain form is already bounded by the tiny diameter of dup clusters.
-
-    Failure domain: per-round state goes through plans.ckpt.round_checkpoint
-    — memory-speed local checkpoints by default (an executor loss mid-loop
-    fails the job loudly, never silently recomputes), or RELIABLE
-    checkpoint-dir rounds under spark.lakehouse.checkpoint.reliable=true
-    so a long-running cluster job survives routine executor loss.
+    near-dup clusters is tiny (dup clusters are dense, diameter 2-3).
+    Labels only ever decrease, so Σ(label) is a strictly decreasing
+    potential until the fixpoint: an unchanged sum IS convergence. The
+    probe is that sum as decimal(38,0) (a raw BIGINT sum overflows once
+    label ids approach 2^63-scale hash/snowflake domains), computed in the
+    same action that materializes the round (plans.ckpt.iterate). The
+    edge set is materialized ONCE up front — it is read every round, and
+    leaving it lazy would re-run the (often expensive) edge-producing join
+    per round (observed 14 s → 3 s on the Jaccard edge set at sf0.1). Only
+    vertices that touch an edge enter the loop; singletons (most of a real
+    corpus) are unioned back at the end without shuffling. Raises when
+    the diameter exceeds ``max_iter`` rather than emit partial labels.
     """
     edges = round_checkpoint(edges)
-    labels = round_checkpoint(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-    )
-    # Labels are monotonically non-increasing, so Σ(label) is a strictly
-    # decreasing potential until the fixpoint — an unchanged sum IS
-    # convergence. One scalar aggregate per round, no compare-join.
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
+
+    def min_label_round(labels, _sum, _i):
         nbr_min = edges.join(
             labels.withColumnRenamed("doc_id", "dst"), "dst"
         ).select(F.col("src").alias("doc_id"), "label")
-        # Round materialization and the Σ(label) convergence probe share
-        # ONE action (round_checkpoint_probe — optimization r11, guide
-        # §1.2: at bench scale the loop is job-count bound, and the probe
-        # was a second full query per round).
-        # decimal(38,0): raw BIGINT SUM overflows (ANSI crash) once label
-        # ids approach 2^63-scale hash/snowflake domains — two such labels
-        # already exceed the range (r9 full-file review finding).
-        new_labels, cur_sum = round_checkpoint_probe(
+        return (
             labels.unionByName(nbr_min)
             .groupBy("doc_id")
-            .agg(F.min("label").alias("label")),
-            lambda d: d.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).collect()[0][0],
+            .agg(F.min("label").alias("label"))
         )
-        # The new round materialized above — the previous round's blocks
-        # are now unreachable; release them instead of letting them pile
-        # up for the session's lifetime (VERDICT r8 #2: the decade-scale
-        # GC-churn / repeat-run-OOM cause at the default 8 GiB heap).
-        evict_round_checkpoint(labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    # The edge checkpoint is loop-internal: the returned plan references
-    # only the final labels round (+ the lazy vertices frame).
-    evict_round_checkpoint(edges)
-    if not converged:
-        # Silent partial convergence would emit WRONG cluster labels (some
-        # vertices not yet reached by their component's minimum). Refuse —
-        # and release the last round first: a caller catching this to
-        # retry with a higher max_iter must not accumulate pinned label
-        # tables across attempts (the r8 #2 hazard on the error path).
-        evict_round_checkpoint(labels)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "component diameter exceeds max_iter; raise max_iter (rounds are "
-            "O(diameter)) or pre-contract with large-star/small-star."
-        )
-    # The FINAL round is referenced by the returned plan, so the loop can
-    # never evict it — register it for post-consumption release instead
-    # (r10 review: without this, every invocation still pinned one final-
-    # round RDD for the session, the exact per-run leak the run-checkpoint
-    # registry exists to close).
+
+    # Round 0 is the first propagation, read straight off the edge set:
+    # label(v) = min(Γ(v) ∪ {v}).
+    labels, _, _ = iterate(
+        edges.groupBy("src")
+        .agg(F.least(F.min("dst"), F.col("src")).alias("label"))
+        .withColumnRenamed("src", "doc_id"),
+        min_label_round,
+        lambda d: d.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0],
+        rounds=max_iter - 1,
+        until=lambda prev, cur: prev[1] == cur[1],
+        must_converge=True,
+        inputs=(edges,),
+    )
     register_run_checkpoint(labels)
     return (
         vertices.join(labels, "doc_id", "left")
@@ -922,7 +880,9 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star contraction to the star-forest
     fixpoint. Returns (fixpoint edge set as (l=center, h=leaf), rounds)."""
 
-    def one_round(e: DataFrame) -> DataFrame:
+    def star_round(e: DataFrame, count, _i) -> DataFrame | None:
+        if count == 0:
+            return None  # an empty edge set is its own fixpoint
         # Large star: for each u, m = min(Γ(u) ∪ {u}); connect every
         # strictly-larger neighbor v > u to m. Output rows already satisfy
         # b = m <= u < v = a (low end second, no self-loops), and the
@@ -957,39 +917,21 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
         centers = m2.select(F.col("h2").alias("a"), F.col("m2").alias("b"))
         return _canon_edges(leaves.unionByName(centers), "a", "b")
 
-    e = round_checkpoint(edges)
-    rounds = 0
-    n_e = e.count()
-    if n_e == 0:
-        return e, rounds
-    while rounds < max_iter:
-        # Checkpoint materialization and the convergence count share ONE
-        # action (round_checkpoint_probe) — the count was a separate job
-        # per round before (optimization r11, guide §1.2: the loop is
-        # driver/job-count bound at bench scale).
-        new_e, n_new = round_checkpoint_probe(one_round(e), DataFrame.count)
-        rounds += 1
-        # Fixpoint = edge set unchanged by a full round. Both frames are
-        # DEDUPED canonical sets (_canon_edges), so set equality is
-        # |new| == |old| plus ONE-way containment — the count is a
-        # shuffle-free scan of the checkpointed partitions, and the
-        # second subtract of the old two-way check is never needed
-        # (r6: one set-difference shuffle per round instead of two,
-        # and zero on the early rounds where the counts still differ).
-        at_fixpoint = n_new == n_e and new_e.subtract(e).isEmpty()
-        # The fixpoint probe above was the LAST plan referencing the
-        # previous round — release its blocks either way (VERDICT r8 #2).
-        evict_round_checkpoint(e)
-        if at_fixpoint:
-            return new_e, rounds
-        e, n_e = new_e, n_new
-    # Error path must not pin the last round either — a catch-and-retry
-    # caller would otherwise accumulate edge sets across attempts.
-    evict_round_checkpoint(e)
-    raise RuntimeError(
-        f"star contraction did not converge in {max_iter} rounds — "
-        "raise max_iter (rounds are O(log diameter))."
+    # Fixpoint = edge set unchanged by a full round. Both rounds are
+    # DEDUPED canonical sets (_canon_edges), so set equality is equal
+    # counts (the probe, fused into the round's materialization) plus
+    # ONE-way containment — a set-difference shuffle only on rounds where
+    # the counts already agree.
+    e, _, rounds = iterate(
+        edges,
+        star_round,
+        DataFrame.count,
+        rounds=max_iter,
+        until=lambda prev, cur: prev[1] == cur[1]
+        and cur[0].subtract(prev[0]).isEmpty(),
+        must_converge=True,
     )
+    return e, rounds
 
 
 def connected_components_star(
@@ -1033,9 +975,6 @@ def connected_components_star(
     e0 = _canon_edges(edges, "src", "dst")
     if seed_rounds <= 0:
         e, _rounds = _star_contract(e0, max_iter)
-        # The fixpoint edge set is the loop's final checkpoint and the
-        # returned plan reads it — registry release, same as the min-label
-        # CC.
         register_run_checkpoint(e)
         labels = e.select(F.col("h").alias("doc_id"), F.col("l").alias("label"))
         return vertices.join(labels, "doc_id", "left").select(
@@ -1047,20 +986,16 @@ def connected_components_star(
     sym = e0.selectExpr("l AS u", "h AS v").unionByName(
         e0.selectExpr("h AS u", "l AS v")
     )
-    # Round 1: lab(u) = min(Γ(u) ∪ {u}).
-    lab = round_checkpoint(
-        sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("p"))
+    # Round 0: lab(u) = min(Γ(u) ∪ {u}); each later round one more hop.
+    lab, _, _ = iterate(
+        sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("p")),
+        lambda lab, _v, _i: sym.join(lab.withColumnRenamed("u", "v"), "v")
+        .select("u", "p")
+        .unionByName(lab)
+        .groupBy("u")
+        .agg(F.min("p").alias("p")),
+        rounds=seed_rounds - 1,
     )
-    for _ in range(seed_rounds - 1):
-        new_lab = round_checkpoint(
-            sym.join(lab.withColumnRenamed("u", "v"), "v")
-            .select("u", "p")
-            .unionByName(lab)
-            .groupBy("u")
-            .agg(F.min("p").alias("p"))
-        )
-        evict_round_checkpoint(lab)
-        lab = new_lab
     contracted = (
         e0.join(
             lab.withColumnRenamed("u", "l").withColumnRenamed("p", "pl"), "l"
@@ -1070,11 +1005,15 @@ def connected_components_star(
         )
         .select(F.col("pl").alias("src"), F.col("ph").alias("dst"))
     )
-    e, _rounds = _star_contract(_canon_edges(contracted, "src", "dst"), max_iter)
-    # _star_contract's entry checkpoint materialized eagerly, so the raw
-    # canonical edges are dead; lab is still referenced by the returned
-    # plan — registry release for it and the star fixpoint.
-    evict_round_checkpoint(e0)
+    # The star loop's round 0 reads e0 for the last time; lab stays
+    # referenced by the returned plan unless the loop raises.
+    try:
+        e, _rounds = _star_contract(_canon_edges(contracted, "src", "dst"), max_iter)
+    except BaseException:
+        evict_round_checkpoint(lab)
+        raise
+    finally:
+        evict_round_checkpoint(e0)
     register_run_checkpoint(e)
     register_run_checkpoint(lab)
     star = e.select(F.col("h").alias("p"), F.col("l").alias("slabel"))
@@ -1697,7 +1636,7 @@ def prod_dedup_chain(docs: DataFrame) -> DataFrame:
     try:
         labels = connected_components(edges, docs.select("doc_id"))
     finally:
-        evict_local_checkpoint(sig)
+        evict_round_checkpoint(sig)
     return labels.select(
         "doc_id",
         "cluster_id",
@@ -1973,24 +1912,16 @@ def kcore_members(edges_sym: DataFrame, k: int, rounds: int) -> DataFrame:
 
     n_part = int(edges_sym.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = round_checkpoint(edges_sym.repartition(n_part, "dst"))
-    deg = round_checkpoint(
-        e.groupBy("src").agg(F.count("*").alias("deg"))
-    )
-    for _ in range(rounds):
-        # One fused 1-row scan of the checkpointed degree table is BOTH
-        # the convergence probe (n_removed == 0 ⇒ fixpoint) and the
-        # frontier broadcast gate's measured count: the frontier is
-        # NODE-scaled (in round 1 it is every node with degree < k — at
-        # 100 TB that is most of the corpus, so an unconditional
-        # broadcast OOMs; VERDICT r06 #2). Below the gate the round is a
-        # map-side probe of the checkpointed edge partitions; above it
-        # the joins stay adaptive and hash-partition on node id, which
-        # the dst pre-partitioning already serves.
-        counts = deg.agg(
-            F.count_if(F.col("deg") < k).alias("n_removed"),
-        ).collect()[0]
-        if counts["n_removed"] == 0:
-            break
+
+    def peel_round(deg, n_removed, _i):
+        if n_removed == 0:
+            return None  # nothing below k: the fixpoint
+        # The frontier is NODE-scaled (in round 1 it is every node with
+        # degree < k — at 100 TB most of the corpus, so an unconditional
+        # broadcast OOMs; VERDICT r06 #2): it is gated on n_removed, the
+        # previous round's fused probe. Above the gate the joins stay
+        # adaptive and hash-partition on node id, which the dst
+        # pre-partitioning already serves.
         removed = deg.filter(F.col("deg") < k).select(F.col("src").alias("gone"))
         # dec is NOT hinted: its row set is every ORIGINAL-edge neighbor of
         # this round's frontier, which includes nodes peeled in EARLIER
@@ -2000,18 +1931,13 @@ def kcore_members(edges_sym: DataFrame, k: int, rounds: int) -> DataFrame:
         # dec). dec is an in-plan aggregate, so AQE measures its REAL
         # runtime size at the shuffle boundary and converts the update
         # join to broadcast exactly when it fits — the q_tfidf df-table
-        # treatment (4768c02), with no extra pass. The frontier hint stays:
-        # `removed` comes off the checkpointed deg (stats hidden from
-        # Catalyst) and n_removed is its exact measured count.
+        # treatment (4768c02), with no extra pass.
         dec = (
-            e.join(
-                gated_broadcast(removed, counts["n_removed"]),
-                e.dst == removed.gone,
-            )
+            e.join(gated_broadcast(removed, n_removed), e.dst == removed.gone)
             .groupBy("src")
             .agg(F.count("*").alias("dec"))
         )
-        new_deg = round_checkpoint(
+        return (
             deg.filter(F.col("deg") >= k)
             .join(dec, "src", "left")
             .select(
@@ -2019,18 +1945,18 @@ def kcore_members(edges_sym: DataFrame, k: int, rounds: int) -> DataFrame:
                 (F.col("deg") - F.coalesce(F.col("dec"), F.lit(0))).alias("deg"),
             )
         )
-        # new_deg materialized eagerly — the previous round's degree table
-        # is dead; release it (VERDICT r8 #2 checkpoint lifecycle).
-        evict_round_checkpoint(deg)
-        deg = new_deg
-    # The pre-partitioned edge checkpoint is loop-internal; the returned
-    # plan references only the final degree round.
-    evict_round_checkpoint(e)
-    # deg's row set IS alive after exactly `rounds` removal rounds (each
-    # iteration filters on the PREVIOUS round's degrees before updating),
-    # matching the oracle's unrolled budget — no extra filter here.
-    # Final peel round: referenced by the returned plan (and dead as soon
-    # as a caller re-checkpoints the membership) — registry release.
+
+    # Probe: the next round's frontier size. deg's row set IS alive after
+    # exactly `rounds` removal rounds (each round filters on the PREVIOUS
+    # round's degrees before updating), matching the oracle's unrolled
+    # budget — no extra filter here.
+    deg, _, _ = iterate(
+        e.groupBy("src").agg(F.count("*").alias("deg")),
+        peel_round,
+        lambda d: d.agg(F.count_if(F.col("deg") < k)).collect()[0][0],
+        rounds=rounds,
+        inputs=(e,),
+    )
     register_run_checkpoint(deg)
     return deg.select(F.col("src").alias("node"))
 

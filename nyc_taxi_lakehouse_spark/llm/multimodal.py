@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.detsql import DUCK, SPARK, Dialect
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query, sql_query
 from ..sources.tables import load_tables
 
@@ -418,7 +419,8 @@ WHERE {ham} <= {_AHASH_MAX_D}
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["documents"])
     mm = to_multimodal(t["documents"])
-    h = _phash_table(mm).localCheckpoint()  # 3 plan references below
+    # 3 plan references below
+    h = register_run_checkpoint(round_checkpoint(_phash_table(mm)))
     h.createOrReplaceTempView("phash_h")
     # The oracle writes the OR-of-bands join (fine for a reference
     # engine); here each band becomes an EQUI-join key via a 4-row

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect
-from ..plans.ckpt import evict_local_checkpoint, round_checkpoint
+from ..plans.ckpt import evict_round_checkpoint, iterate, round_checkpoint
 from ..registry import df_query, sql_query
 from ..sources.tables import load_tables
 
@@ -254,9 +254,10 @@ def kmeans_lloyd(
 
     Each round: broadcast centroid components, one corpus shuffle for the
     assignment, one hash-agg for the new means (rounded back to the integer
-    grid so every round's arithmetic stays exact). localCheckpoint truncates
-    lineage so the plan does not grow with the iteration count. Rows-only
-    (the per-step algebra is pinned by q_kmeans_step's oracle)."""
+    grid so every round's arithmetic stays exact). Each round is
+    checkpointed (plans.ckpt.iterate) so the plan does not grow with the
+    iteration count. Rows-only (the per-step algebra is pinned by
+    q_kmeans_step's oracle)."""
     from pyspark.sql import Window
 
     comp = round_checkpoint(_quant_components(embeddings))
@@ -269,24 +270,21 @@ def kmeans_lloyd(
         )
     )
     ccomp = cent_ids.join(comp, "vec_id").select("cell", "i", F.col("q").alias("cv"))
-    assign = None
-    prev = None
-    for _ in range(iterations):
-        assign = round_checkpoint(kmeans_assign(comp, ccomp))
-        # The new assignment materialized eagerly, and the lazy ccomp that
-        # referenced the previous round was consumed doing so — release the
-        # superseded round (VERDICT r8 #2 checkpoint lifecycle).
-        if prev is not None:
-            evict_local_checkpoint(prev)
-        prev = assign
-        ccomp = (
+
+    def lloyd_round(assign: DataFrame, _v, _i) -> DataFrame:
+        return kmeans_assign(
+            comp,
             assign.join(comp, "vec_id")
             .groupBy("cell", "i")
-            .agg(F.round(F.sum("q") / F.count("*")).cast("bigint").alias("cv"))
+            .agg(F.round(F.sum("q") / F.count("*")).cast("bigint").alias("cv")),
         )
+
     # The returned plan is the final assignment checkpoint alone; the
     # component table is loop-internal.
-    evict_local_checkpoint(comp)
+    assign, _, _ = iterate(
+        kmeans_assign(comp, ccomp), lloyd_round,
+        rounds=iterations - 1, inputs=(comp,),
+    )
     return assign
 
 
@@ -1268,37 +1266,29 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    from ..plans.ckpt import round_checkpoint_probe
-
-    # The per-round argmax collect IS the checkpoint's materializing scan
-    # (round_checkpoint_probe, optimization r11, guide §1.2): orderBy+LIMIT 1
-    # compiles to TakeOrderedAndProject, whose single job computes a local
-    # top-1 in EVERY partition before the driver merge — a whole-frame scan,
-    # so it satisfies the probe contract and persists all blocks. One action
-    # per round instead of two.
+    # The per-round argmax collect IS the checkpoint's materializing scan:
+    # orderBy+LIMIT 1 compiles to TakeOrderedAndProject, whose single job
+    # computes a local top-1 in EVERY partition before the driver merge —
+    # a whole-frame scan, so it satisfies the iterate probe contract.
     def _argmax(d: DataFrame):
         return d.orderBy(F.desc("dist"), "vec_id").limit(1).collect()[0]
 
     c0 = int(comp.agg(F.min("vec_id")).collect()[0][0])
     centers = [(0, c0, 0)]
-    dist, top = round_checkpoint_probe(
-        dist_to(c0).withColumnRenamed("nd", "dist"), _argmax
+
+    def pick_round(dist: DataFrame, top, i) -> DataFrame:
+        centers.append((i, int(top.vec_id), int(top.dist)))
+        return dist.join(dist_to(int(top.vec_id)), "vec_id").select(
+            "vec_id", F.least("dist", "nd").cast("bigint").alias("dist")
+        )
+
+    dist, top, _ = iterate(
+        dist_to(c0).withColumnRenamed("nd", "dist"), pick_round, _argmax,
+        rounds=_KC_K - 2, inputs=(comp,),
     )
-    for i in range(1, _KC_K):
-        vid, dd = int(top.vec_id), int(top.dist)
-        centers.append((i, vid, dd))
-        if i < _KC_K - 1:
-            new_dist, top = round_checkpoint_probe(
-                dist.join(dist_to(vid), "vec_id")
-                .select("vec_id", F.least("dist", "nd").cast("bigint").alias("dist")),
-                _argmax,
-            )
-            # Superseded min-distance round — release (VERDICT r8 #2).
-            evict_local_checkpoint(dist)
-            dist = new_dist
-    # The result is a driver-side literal: every checkpoint is dead here.
-    evict_local_checkpoint(dist)
-    evict_local_checkpoint(comp)
+    centers.append((_KC_K - 1, int(top.vec_id), int(top.dist)))
+    # The result is a driver-side literal: the last round is dead too.
+    evict_round_checkpoint(dist)
     return spark.createDataFrame(
         centers, "sel_order int, vec_id bigint, dist_at_selection bigint"
     )

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect, dec2, dstddev
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query, sql_query
 
 _FUNNEL_STEPS = ["signup", "view", "click", "purchase"]
@@ -1897,11 +1898,10 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT)")
         .alias("y"),
     )
-    xv = (
+    xv = register_run_checkpoint(round_checkpoint(
         pairs.groupBy(F.col("x").alias("v"))
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    ))
     xr = _rank2_df(xv).select(
         F.col("v").alias("x"), "c", F.col("rank2").alias("rx")
     )
@@ -2157,7 +2157,7 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dialect's epoch() exactly (unix_timestamp truncates sub-second,
     # DuckDB floor(epoch) matches — both nonnegative here)
     es = F.expr(f"CAST({SPARK.epoch('ts')} AS BIGINT)")
-    per_user = (
+    per_user = register_run_checkpoint(round_checkpoint(
         t["events"]
         .select(F.col("user_id"), es.alias("es"))
         .groupBy("user_id")
@@ -2165,8 +2165,7 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("es").cast("bigint").alias("first_es"),
             F.max("es").cast("bigint").alias("last_es"),
         )
-        .localCheckpoint(eager=True)
-    )
+    ))
     lo, hi = per_user.agg(F.min("first_es"), F.max("last_es")).first()
     mid = lo + (hi - lo) // 2
     flags = per_user.select(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import df_query
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..sources.tables import load_tables
 
 _MG_K = 64
@@ -107,7 +108,9 @@ def heavy_hitters_exact(
     # shuffles — below it the corpus-scaled input never shuffles at all.
     from ..plans.audit import gated_broadcast
 
-    cands = misra_gries_candidates(df, key_col, k).localCheckpoint(eager=True)
+    cands = register_run_checkpoint(
+        round_checkpoint(misra_gries_candidates(df, key_col, k))
+    )
     return (
         df.join(gated_broadcast(cands, cands.count()), key_col, "left_semi")
         .groupBy(key_col)

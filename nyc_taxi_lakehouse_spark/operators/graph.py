@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect
 from ..plans.ckpt import (
-    evict_local_checkpoint,
+    evict_round_checkpoint,
+    iterate,
     register_run_checkpoint,
     round_checkpoint,
 )
@@ -387,8 +388,8 @@ GROUP BY node
     "FRONTIER-optimized: each round joins only the newly discovered nodes "
     "against the once-checkpointed edge list, then anti-joins the visited "
     "set — work per round is O(frontier-adjacent edges), not O(all nodes), "
-    "which is the shape that survives a 100 TB graph (plus: the frontier "
-    "is localCheckpointed per round so lineage stays O(1), the "
+    "which is the shape that survives a 100 TB graph (plus: the distance "
+    "table is checkpointed per round so lineage stays O(1), the "
     "q_dedup_clusters discipline). Integers end to end; the oracle unrolls "
     "cumulative reach sets r0⊆r1⊆… and takes MIN first-appearance round — "
     "an intentionally different algebra that pins the frontier bookkeeping "
@@ -429,42 +430,28 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(in_graph, F.col("node") == F.col("src"), "leftsemi")
         .distinct()
     )
-    from ..plans.ckpt import deferred_round_checkpoint, round_checkpoint_probe
 
-    # ONE Spark action per round (guide §1.2 — the loop was job-count
-    # bound at two eager checkpoint jobs per hop): the round's frontier is
-    # deferred-checkpointed, and the accumulated dist checkpoint's
-    # materializing scan doubles as its probe. (A measured-gate broadcast
+    # ONE Spark action per round (guide §1.2): the round's frontier is the
+    # previous round's newest hop, read off the accumulated dist
+    # checkpoint, so only dist is materialized. (A measured-gate broadcast
     # of the frontier was tried and reverted: the per-round driver-serial
     # broadcast builds cost more wall than the 10 MB co-partitioned
     # shuffles they replaced — OPTIMIZATION_r11.md.)
-    dist = round_checkpoint(seeds.withColumn("hop", F.lit(0)))
-    frontier = dist
-    for i in range(1, _BFS_ROUNDS + 1):
+    def hop_round(dist: DataFrame, _v, i) -> DataFrame:
+        frontier = dist.where(F.col("hop") == i - 1)
         neighbors = (
             edges.join(frontier, edges.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = deferred_round_checkpoint(
+        return dist.unionAll(
             neighbors.join(dist, "node", "left_anti").withColumn("hop", F.lit(i))
         )
-        new_dist, _ = round_checkpoint_probe(
-            dist.unionAll(new), lambda d: d.count()
-        )
-        # new_dist materialized (the probe's scan) and COPIES the frontier
-        # rows, so the superseded rounds are dead — release them instead of
-        # holding one checkpoint per hop for the session (VERDICT r8 #2).
-        # Round 1 guard: the seed frame doubles as dist AND frontier.
-        evict_local_checkpoint(dist)
-        if frontier is not dist:
-            evict_local_checkpoint(frontier)
-        dist, frontier = new_dist, new
-    evict_local_checkpoint(edges)
-    if frontier is not dist:
-        evict_local_checkpoint(frontier)
-    # The final hop round is referenced by the returned plan — registry
-    # release after the harness consumes the result (r10 review).
+
+    dist, _, _ = iterate(
+        seeds.withColumn("hop", F.lit(0)), hop_round,
+        rounds=_BFS_ROUNDS, inputs=(edges,),
+    )
     register_run_checkpoint(dist)
     return dist.select(
         "node",
@@ -810,7 +797,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         rawh, row = round_checkpoint_probe(half_step(auth, "s", "c"), _totals)
         rawh_live.append(rawh)
         if len(rawh_live) > 2:
-            evict_local_checkpoint(rawh_live.pop(0))
+            evict_round_checkpoint(rawh_live.pop(0))
         tot_a = row["ta"]
         hub = norm_lit(rawh, row["th"])
     for live in rawh_live:
@@ -1086,8 +1073,9 @@ ORDER BY hop
     "from ONE cohort; this samples sources the way ANF/HyperANF does, "
     "with exact sets at 8 sources standing in for their sketched "
     "union). Frontier-optimized like q_bfs_hops: per-round work is "
-    "O(frontier-adjacent edges) per source, frontiers localCheckpointed "
-    "(O(1) lineage), anti-join on the accumulated (source, node) set.",
+    "O(frontier-adjacent edges) per source, the distance table "
+    "checkpointed per round (O(1) lineage), anti-join on the accumulated "
+    "(source, node) set.",
 )
 def q_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders", "lineitem", "customer"])
@@ -1109,8 +1097,6 @@ def q_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order, so rounds would join exchange-free — was tried and REVERTED:
     # the per-round columnar-cache-to-row conversion cost more than the
     # exchanges it saved, 3.7 s -> 5.6 s warm at sf0.1.)
-    from ..plans.ckpt import deferred_round_checkpoint, round_checkpoint_probe
-
     p_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = round_checkpoint(
         _sym_edges(pairs)
@@ -1124,43 +1110,31 @@ def q_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_ED_SOURCES)
         .select(F.col("src").alias("source"))
     )
-    dist, n_dist = round_checkpoint_probe(
-        seeds.select("source", F.col("source").alias("node")).withColumn(
-            "hop", F.lit(0)
-        ),
-        lambda d: d.count(),
-    )
-    frontier = dist
-    for i in range(1, _ED_ROUNDS + 1):
+
+    def hop_round(dist: DataFrame, _n, i) -> DataFrame:
+        frontier = dist.where(F.col("hop") == i - 1)
         neighbors = (
             edges.join(frontier, edges.src == frontier.node)
             .select("source", F.col("dst").alias("node"))
             .distinct()
         )
-        new = deferred_round_checkpoint(
+        return dist.unionAll(
             neighbors.join(
                 dist.select("source", "node"), ["source", "node"], "left_anti"
             ).withColumn("hop", F.lit(i))
         )
-        new_dist, n_new = round_checkpoint_probe(
-            dist.unionAll(new), lambda d: d.count()
-        )
-        if n_new == n_dist:
-            # Empty frontier: the union added nothing — drop the round's
-            # frames (both materialized under the probe's scan) and stop.
-            evict_local_checkpoint(new_dist)
-            evict_local_checkpoint(new)
-            break
-        # Superseded rounds are dead once new_dist materialized (its union
-        # copied the frontier rows) — release per round, VERDICT r8 #2.
-        evict_local_checkpoint(dist)
-        if frontier is not dist:
-            evict_local_checkpoint(frontier)
-        n_dist = n_new
-        dist, frontier = new_dist, new
-    evict_local_checkpoint(edges)
-    if frontier is not dist:
-        evict_local_checkpoint(frontier)
+
+    # An unchanged pair count means an empty frontier: the walk is done.
+    dist, _, _ = iterate(
+        seeds.select("source", F.col("source").alias("node")).withColumn(
+            "hop", F.lit(0)
+        ),
+        hop_round,
+        DataFrame.count,
+        rounds=_ED_ROUNDS,
+        until=lambda prev, cur: prev[1] == cur[1],
+        inputs=(edges,),
+    )
     register_run_checkpoint(dist)
     hist = dist.groupBy("hop").agg(F.count("*").alias("n_pairs"))
     from pyspark.sql import Window

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query, sql_query
 
 
@@ -1112,7 +1113,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["documents"])
     a, b = _kappa_classes(_S)
-    cells = (
+    cells = register_run_checkpoint(round_checkpoint(
         t["documents"]
         .select(
             F.expr(a).cast("bigint").alias("class_a"),
@@ -1120,8 +1121,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("class_a", "class_b")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .localCheckpoint(eager=True)
-    )
+    ))
     r = cells.groupBy("class_a").agg(F.sum("n_docs").cast("bigint").alias("r_tot"))
     c = cells.groupBy("class_b").agg(F.sum("n_docs").cast("bigint").alias("c_tot"))
     n = cells.agg(F.sum("n_docs")).first()[0]

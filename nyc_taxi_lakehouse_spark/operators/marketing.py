@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK, SPARK, Dialect
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query, sql_query
 from ..sources.tables import load_tables
 
@@ -755,13 +756,12 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo, hi = od.agg(F.min("day_no"), F.max("day_no")).first()
     split_day = lo + (hi - lo) * 8 // 10
-    op = (
+    op = register_run_checkpoint(round_checkpoint(
         t["lineitem"]
         .select(F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pkey"))
         .join(od, "okey")
         .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ))
     train = op.filter(F.col("day_no") < split_day).select("okey", "pkey")
     test_items = op.filter(F.col("day_no") >= split_day).select("okey", "pkey")
     disc_case = "CASE rk " + " ".join(

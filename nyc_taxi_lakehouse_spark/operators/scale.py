@@ -318,6 +318,7 @@ SELECT (SELECT n FROM tot) AS n,
 
 
 def _register_quantile_bisect():
+    from ..plans.ckpt import evict_round_checkpoint, round_checkpoint
     from ..registry import df_query
     from ..sources.tables import load_tables
 
@@ -340,10 +341,9 @@ def _register_quantile_bisect():
     )
     def q_exact_quantile_bisect(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = load_tables(spark, sf_dir, ["lineitem"])
-        vals = (
+        vals = round_checkpoint(
             t["lineitem"]
             .select((F.col("l_extendedprice") * 100).cast("bigint").alias("v"))
-            .localCheckpoint()
         )
         row = vals.agg(
             F.count("*").alias("n"), F.min("v").alias("lo"), F.max("v").alias("hi")
@@ -381,6 +381,8 @@ def _register_quantile_bisect():
                         break
                     cum += int(r.c)
             out[alias] = lo
+        # The result is a driver-side literal: the column is dead.
+        evict_round_checkpoint(vals)
         return spark.createDataFrame(
             [tuple(out[c] for c in ["n"] + [a for _, a in _QB_PS])],
             "n bigint, " + ", ".join(f"{a} bigint" for _, a in _QB_PS),
@@ -396,6 +398,7 @@ _register_quantile_bisect()
 
 
 def _register_dense_ids():
+    from ..plans.ckpt import register_run_checkpoint, round_checkpoint
     from ..registry import df_query
     from ..sources.tables import load_tables
 
@@ -426,15 +429,15 @@ FROM orders
         from pyspark.sql import Window
 
         t = load_tables(spark, sf_dir, ["orders"])
-        parts = (
+        # Pin the sampled range boundaries: the count pass and the id pass
+        # must see the SAME partitioning.
+        parts = register_run_checkpoint(round_checkpoint(
             t["orders"]
             .select("o_orderkey")
             .repartitionByRange(32, "o_orderkey")
             .sortWithinPartitions("o_orderkey")
             .withColumn("pid", F.spark_partition_id())
-            .localCheckpoint()  # pin the sampled range boundaries: the count
-            # pass and the id pass must see the SAME partitioning
-        )
+        ))
         counts = {
             int(r.pid): int(r.c)
             for r in parts.groupBy("pid").agg(F.count("*").alias("c")).collect()

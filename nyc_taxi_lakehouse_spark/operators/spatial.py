@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.detsql import DUCK, SPARK, Dialect
 from ..plans.ckpt import (
     deferred_round_checkpoint,
-    evict_local_checkpoint,
+    evict_round_checkpoint,
     register_run_checkpoint,
     round_checkpoint,
     round_checkpoint_probe,
@@ -514,7 +514,7 @@ def _knn_exact_loop(
         # The done-slice job above materialized new_state — the previous
         # round's checkpoint is now dead and safe to release.
         if prev_state_ckpt is not None:
-            evict_local_checkpoint(prev_state_ckpt)
+            evict_round_checkpoint(prev_state_ckpt)
         prev_state_ckpt = new_state
         # Checkpoint + emptiness test in ONE action (the count probe is the
         # materializing scan) instead of a checkpoint job followed by
@@ -522,12 +522,12 @@ def _knn_exact_loop(
         new_pending, n_pending = round_checkpoint_probe(
             pending.join(complete, "ck", "left_anti"), lambda d: d.count()
         )
-        evict_local_checkpoint(pending)
+        evict_round_checkpoint(pending)
         pending = new_pending
         if n_pending == 0:
             # The returned union reads only the materialized done slices.
-            evict_local_checkpoint(pending)
-            evict_local_checkpoint(state)
+            evict_round_checkpoint(pending)
+            evict_round_checkpoint(state)
             break
         # Narrow LAZILY to the still-pending probes: the join is absorbed
         # into the next round's union checkpoint (one eager checkpoint per
@@ -600,7 +600,7 @@ def q_spatial_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _knn_exact_loop(spark, probes, supp_cell, _KNN_K)
     # The loop has fully materialized its done slices — the supplier cell
     # table is no longer referenced by any live plan.
-    evict_local_checkpoint(supp_cell)
+    evict_round_checkpoint(supp_cell)
     return out.select(
         F.col("ck").alias("custkey"),
         F.col("rk").cast("bigint").alias("rk"),

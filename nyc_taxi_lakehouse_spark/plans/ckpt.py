@@ -1,22 +1,26 @@
-"""Local-checkpoint lifecycle management for iterative operators.
+"""Checkpoint lifecycle for iterative operators and materialize-once tables.
 
-VERDICT r8 #2: the iterative pipelines (CC star loop, k-core peel, the
-production dedup chain) localCheckpoint per-round state to keep lineage
-O(1), but a long-lived session never released SUPERSEDED rounds — every
-round's blocks stayed persisted until the driver GC'd the Python frame and
-the async ContextCleaner caught up. At decade scale (sf1-equivalent) that
-accumulation is what produced the GC churn / repeat-run OOM at the default
-8 GiB single-JVM heap. The fix is explicit eviction: once round N+1 has
-eagerly materialized, round N's blocks are unreachable by any live plan and
-are released immediately.
+Loops go through ``iterate``: it materializes each round (fused with the
+round's convergence probe into one Spark action), evicts the superseded
+round once the next one has materialized, releases the loop's inputs on
+return and on every raise, and hands the final round to the caller, who
+registers it (``register_run_checkpoint``) when the returned plan reads it
+or evicts it (``evict_round_checkpoint``) when the result is a driver
+value. Tables materialized once per query go through ``round_checkpoint``
+and the same register-or-evict choice. No module outside this one calls
+``localCheckpoint`` or ``checkpoint`` (tests/test_ckpt_lifecycle.py scans
+for it), so this is the one place that decides when blocks die.
 
-Safety model: local checkpoints TRUNCATE lineage, so an action on an
-evicted frame fails LOUDLY (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) rather than
-silently recomputing stale data — misplacing an evict is a crash in tests,
-never a wrong answer. Eviction sites therefore only release state that is
-provably dead: the previous round after the next round materialized
-eagerly, and loop-internal inputs (edge sets) after the loop has produced
-its final checkpoint.
+Why eviction matters: a long-lived session never released superseded
+rounds on its own — their blocks stayed persisted until the driver GC'd
+the Python frame and the async ContextCleaner caught up, which at decade
+scale (sf1-equivalent) produced GC churn and repeat-run OOMs at the
+default 8 GiB single-JVM heap.
+
+Safety model: checkpoints TRUNCATE lineage, so an action on an evicted
+frame fails LOUDLY (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) rather than
+silently recomputing stale data — misplacing an evict is a crash in
+tests, never a wrong answer.
 """
 
 from __future__ import annotations
@@ -48,7 +52,11 @@ RELIABLE_CONF = "spark.lakehouse.checkpoint.reliable"
 _post_checkpoint_hook = None
 
 
-def round_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+def _reliable(spark) -> bool:
+    return str(spark.conf.get(RELIABLE_CONF, "false")).lower() == "true"
+
+
+def round_checkpoint(df: DataFrame) -> DataFrame:
     """Materialize one round of iterative-loop state.
 
     Default: ``localCheckpoint`` (executor-memory blocks, lineage
@@ -58,7 +66,7 @@ def round_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     surviving executor loss at the cost of a round-state write+read.
     """
     spark = df.sparkSession
-    if str(spark.conf.get(RELIABLE_CONF, "false")).lower() == "true":
+    if _reliable(spark):
         if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
             raise RuntimeError(
                 f"{RELIABLE_CONF}=true but no checkpoint dir is set — call "
@@ -67,9 +75,9 @@ def round_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
                 "state must live OUTSIDE the executors to survive their "
                 "loss)."
             )
-        out = df.checkpoint(eager=eager)
+        out = df.checkpoint(eager=True)
     else:
-        out = df.localCheckpoint(eager=eager)
+        out = df.localCheckpoint(eager=True)
     if _post_checkpoint_hook is not None:
         _post_checkpoint_hook(out)
     return out
@@ -99,8 +107,7 @@ def round_checkpoint_probe(df: DataFrame, probe):
     preserving the kill-the-materialized-round injection contract.
     Returns ``(checkpointed_frame, probe_value)``.
     """
-    spark = df.sparkSession
-    if str(spark.conf.get(RELIABLE_CONF, "false")).lower() == "true":
+    if _reliable(df.sparkSession):
         out = round_checkpoint(df)  # eager; hook fires inside
         return out, probe(out)
     out = df.localCheckpoint(eager=False)
@@ -123,8 +130,7 @@ def deferred_round_checkpoint(df: DataFrame) -> DataFrame:
     lineage at job end to write the round files (the classic gotcha), so
     deferring would double the round's work there.
     """
-    spark = df.sparkSession
-    if str(spark.conf.get(RELIABLE_CONF, "false")).lower() == "true":
+    if _reliable(df.sparkSession):
         return round_checkpoint(df)
     out = df.localCheckpoint(eager=False)
     if _post_checkpoint_hook is not None:
@@ -167,10 +173,66 @@ def evict_round_checkpoint(df: DataFrame) -> None:
     jrdd.unpersist(False)
 
 
-# Back-compat name for the r8/r9 call sites; same guard, same semantics
-# (and since r10 it also releases reliable-round files when the loop ran
-# under the opt-in conf).
-evict_local_checkpoint = evict_round_checkpoint
+def iterate(init, step, probe=None, *, rounds, until=None,
+            must_converge=False, inputs=()):
+    """Run an iterative loop over checkpointed round state.
+
+    Round 0 is ``init``; round ``i`` (1..``rounds``) is ``step(state,
+    value, i)`` over the previous round's checkpointed ``state`` and its
+    probe ``value``. A step that returns None declares the previous round
+    the fixpoint without running another one (an empty frontier, nothing
+    left to peel). Each round is materialized in ONE Spark action
+    together with ``probe`` (``round_checkpoint_probe``; the probe must
+    scan the whole frame), or by an eager ``round_checkpoint`` with
+    ``value`` None when there is no probe.
+
+    After round ``i`` materialized, ``until((prev_state, prev_value),
+    (state, value))`` decides whether it is the fixpoint; only then is the
+    previous round evicted, so ``until`` may still read both frames. With
+    ``must_converge`` set, a loop whose ``until`` never held within
+    ``rounds`` raises RuntimeError (silent partial convergence would be a
+    wrong answer); without it ``rounds`` is a budget. ``inputs`` are the
+    caller's loop-internal checkpoints (edge sets, component tables),
+    evicted on return and on every raise; a raise also evicts the live
+    round, so a caller that catches and retries pins nothing.
+
+    Returns ``(state, value, rounds_run)``. The final ``state`` is the
+    caller's: register it when the returned plan reads it, evict it when
+    the result is a driver value.
+    """
+
+    def materialize(df):
+        if probe is None:
+            return round_checkpoint(df), None
+        return round_checkpoint_probe(df, probe)
+
+    live = []  # materialized (state, value) rounds not yet evicted
+    try:
+        live.append(materialize(init))
+        for i in range(1, rounds + 1):
+            prev = live[-1]
+            nxt = step(*prev, i)
+            if nxt is None:
+                return (*prev, i - 1)
+            live.append(materialize(nxt))
+            done = until is not None and until(prev, live[-1])
+            evict_round_checkpoint(live.pop(0)[0])
+            if done:
+                return (*live[0], i)
+        if must_converge:
+            name = getattr(step, "__qualname__", "iterate")
+            raise RuntimeError(
+                f"{name.replace('.<locals>', '')} did not converge in "
+                f"{rounds} rounds; raise the round budget"
+            )
+        return (*live[0], max(rounds, 0))
+    except BaseException:
+        for state, _ in live:
+            evict_round_checkpoint(state)
+        raise
+    finally:
+        for df in inputs:
+            evict_round_checkpoint(df)
 
 
 # ---------------------------------------------------------------------------

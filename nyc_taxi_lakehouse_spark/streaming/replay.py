@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.detsql import DUCK
+from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query
 from ..sources.tables import load_tables
 from .cdc import file_replay_source, parse_cdc, windowed_aggregation
@@ -856,15 +857,14 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Final summary per shard = the emission at that shard's highest n
     # (n is monotone across micro-batches).
     last_n = emitted.groupBy("shard").agg(F.max("shard_n").alias("shard_n"))
-    cands = (
+    # Eager checkpoint: the gate below needs a measured count, and the
+    # checkpoint makes that count a re-scan of the (k·shards-bounded)
+    # candidate set instead of a second execution of the sink join.
+    cands = register_run_checkpoint(round_checkpoint(
         emitted.join(last_n, ["shard", "shard_n"])
         .select(F.col("key").cast("bigint").alias("user_id"))
         .distinct()
-        # Eager checkpoint: the gate below needs a measured count, and the
-        # checkpoint makes that count a re-scan of the (k·shards-bounded)
-        # candidate set instead of a second execution of the sink join.
-        .localCheckpoint(eager=True)
-    )
+    ))
     # Exact recount of the candidate superset against the batch table —
     # the MG guarantee makes this the exact heavy-hitter answer.
     ev = t["events"].filter(

@@ -10,7 +10,11 @@ by one per iteration round or per repeat run.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_lakehouse_spark.llm.dedup import (
@@ -20,7 +24,7 @@ from nyc_taxi_lakehouse_spark.llm.dedup import (
     prod_dedup_chain,
 )
 from nyc_taxi_lakehouse_spark.plans.ckpt import (
-    evict_local_checkpoint,
+    evict_round_checkpoint,
     persistent_rdd_count,
 )
 
@@ -31,9 +35,9 @@ from tests.conftest import path_edges as _path_edges
 def test_evict_requires_checkpoint_frame(spark):
     ck = spark.range(10).localCheckpoint(eager=True)
     with pytest.raises(TypeError, match="LogicalRDD"):
-        evict_local_checkpoint(ck.selectExpr("id * 2 AS y"))
+        evict_round_checkpoint(ck.selectExpr("id * 2 AS y"))
     before = persistent_rdd_count(spark)
-    evict_local_checkpoint(ck)
+    evict_round_checkpoint(ck)
     assert persistent_rdd_count(spark) == before - 1
 
 
@@ -238,3 +242,92 @@ def test_release_run_checkpoints_is_idempotent(spark):
     assert ck.count() == 10
     assert release_run_checkpoints() == 1
     assert release_run_checkpoints() == 0
+
+
+@pytest.mark.parametrize(
+    "qname",
+    ["q_heavy_hitters", "q_spearman", "q_capture_recapture", "q_ndcg",
+     "q_cohens_kappa", "q_stream_heavy_hitters", "q_multimodal_phash_dedup",
+     "q_exact_quantile_bisect", "q_dense_ids"],
+)
+def test_materialize_once_query_returns_to_baseline(spark, qname):
+    """Queries that materialize one table per run either register it (the
+    returned plan reads it) or evict it (the result is a driver value):
+    after consumption and release nothing stays pinned."""
+    from nyc_taxi_lakehouse_spark.plans.ckpt import release_run_checkpoints
+    from nyc_taxi_lakehouse_spark.registry import all_queries
+
+    release_run_checkpoints()
+    base = persistent_rdd_count(spark)
+    out = all_queries()[qname].fn(spark, SF)
+    assert out.count() > 0
+    release_run_checkpoints()
+    assert persistent_rdd_count(spark) <= base
+
+
+def test_iterate_releases_inputs_and_round_on_raise(spark):
+    """A step that fails mid-loop leaves neither the live round nor the
+    loop's inputs pinned."""
+    from nyc_taxi_lakehouse_spark.plans.ckpt import iterate, round_checkpoint
+
+    base = persistent_rdd_count(spark)
+    side = round_checkpoint(spark.range(4))
+
+    def step(df, _value, i):
+        if i == 3:
+            raise ValueError("boom")
+        return df.crossJoin(side.limit(1).selectExpr("id AS k")).select("id")
+
+    with pytest.raises(ValueError, match="boom"):
+        iterate(spark.range(8), step, rounds=5, inputs=(side,))
+    assert persistent_rdd_count(spark) <= base
+
+    state, value, rounds_run = iterate(
+        spark.range(8), lambda df, n, i: None if n == 8 else df, DataFrame.count,
+        rounds=5,
+    )
+    assert (value, rounds_run) == (8, 0)
+    evict_round_checkpoint(state)
+    assert persistent_rdd_count(spark) <= base
+
+
+def _checkpoint_calls(source: str) -> list[int]:
+    """Line numbers of ``localCheckpoint(...)`` / ``.checkpoint(...)`` calls;
+    comments and docstrings are not calls, so they never match."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and (
+            (isinstance(node.func, ast.Attribute)
+             and node.func.attr in ("localCheckpoint", "checkpoint"))
+            or (isinstance(node.func, ast.Name)
+                and node.func.id == "localCheckpoint")
+        )
+    ]
+
+
+def test_checkpoint_scanner_ignores_comments_and_docstrings():
+    src = (
+        'def f(df):\n'
+        '    """Calls df.localCheckpoint(eager=True) once."""\n'
+        '    # df.checkpoint(eager=True)\n'
+        '    return df.localCheckpoint(eager=True)\n'
+    )
+    assert _checkpoint_calls(src) == [4]
+
+
+def test_checkpoints_only_in_ckpt_module():
+    """Every materialize/release decision lives in plans/ckpt.py: any
+    other module calling localCheckpoint/checkpoint directly bypasses the
+    eviction lifecycle and the reliable-checkpoint conf."""
+    import nyc_taxi_lakehouse_spark
+
+    root = pathlib.Path(nyc_taxi_lakehouse_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{line}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "plans/ckpt.py"
+        for line in _checkpoint_calls(path.read_text())
+    ]
+    assert not offenders, offenders

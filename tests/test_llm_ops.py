@@ -306,15 +306,31 @@ def test_connected_components_convergence_guard(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from nyc_taxi_lakehouse_spark.llm.dedup import connected_components
+    from nyc_taxi_lakehouse_spark.llm.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+    from nyc_taxi_lakehouse_spark.plans.ckpt import persistent_rdd_count
 
     n = 12  # path 0-1-2-...-11, diameter 11
     verts = spark.range(n).selectExpr("id AS doc_id")
     fwd = spark.range(n - 1).selectExpr("id AS src", "id + 1 AS dst")
     edges = fwd.unionByName(fwd.selectExpr("dst AS src", "src AS dst"))
 
+    # The raise must release every checkpoint it made (edge set and the
+    # live round), so a caller that catches and retries pins nothing.
+    base = persistent_rdd_count(spark)
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, verts, max_iter=3)
+    assert persistent_rdd_count(spark) <= base
+
+    # Star contraction on a 64-node path needs several rounds; one is not
+    # enough, and its raise releases too.
+    fwd64 = spark.range(63).selectExpr("id AS src", "id + 1 AS dst")
+    verts64 = spark.range(64).selectExpr("id AS doc_id")
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(fwd64, verts64, max_iter=1)
+    assert persistent_rdd_count(spark) <= base
 
     labels = connected_components(edges, verts, max_iter=n + 2)
     assert [r.cluster_id for r in labels.orderBy("doc_id").collect()] == [0] * n

@@ -112,3 +112,24 @@ def test_query_parity_sf01_spot(name, spark, duck_sf01):
     result = spec.fn(spark, "/root/testdata/sf0.1")
     expected = duck_sf01.execute(spec.oracle).fetchdf()
     compare(result, expected, name)
+
+
+def test_every_query_in_a_default_sweep():
+    """The default run's sampling must still exercise every registered
+    query in at least one registry-wide sweep (a query with no oracle
+    cannot run in the smoke-SF sweep, so its residue must land elsewhere)."""
+    from .conftest import sampled_in
+
+    oracle_names = {n for n in SPECS if SPECS[n].oracle}
+    sweeps = {
+        ("test_oracle_parity.py", "test_query_parity"): set(SPECS),
+        ("test_oracle_parity.py", "test_query_parity_smoke_sf"): oracle_names,
+        ("test_plan_lint.py", "test_no_unbounded_plan_shapes"): set(SPECS),
+        ("test_plan_lint.py", "test_driver_safe_output_schema"): set(SPECS),
+    }
+    missed = sorted(
+        n for n in SPECS
+        if not any(n in names and sampled_in(f, b, n)
+                   for (f, b), names in sweeps.items())
+    )
+    assert not missed, missed
