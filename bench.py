@@ -67,7 +67,7 @@ HEADLINE = [
     "q_sessionization",
     "q_contamination",
     "q_asof_join",
-    # Round-3 flagships: O(log d) star-contraction CC, streaming session
+    # Round-3 flagships: CC dedup (q_dedup_clusters' body), streaming session
     # windows, char-shingle Jaccard, int8 quantization, quality gate.
     "q_dedup_clusters_star",
     "q_session_stream",

@@ -808,63 +808,121 @@ def embedding_pairs_blocked(embeddings: DataFrame, n_blocks: int = _GEMM_BLOCKS)
 # ---------------------------------------------------------------------------
 
 
+# A propagation round whose Σ(label) drop is more than this fraction of the
+# previous round's drop is still walking a long chain one hop at a time;
+# star contraction finishes that in O(log d) rounds instead. Measured
+# per-round drop ratios: <= 0.09 on the sf0.1 Jaccard dup graph (fixpoint
+# in propagation), 0.36 on q_dbscan's core-edge graph (switches).
+_STAR_SWITCH_RATIO = 0.25
+
+
 def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 25
+    edges: DataFrame, vertices: DataFrame, max_iter: int = 30
 ) -> DataFrame:
-    """Min-label propagation connected components, Spark-first.
+    """Connected components, Spark-first: min-label propagation that
+    switches to large-star/small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) when the
+    graph turns out to be chain-shaped.
 
-    edges: (src, dst) — undirected input given in BOTH orientations.
-    vertices: (doc_id) — the full vertex set (isolated vertices become
-    singleton components labelled by themselves).
+    edges: (src, dst) — undirected, each pair in either orientation (or
+    both). vertices: (doc_id) — the full vertex set; vertices without an
+    edge are singletons labelled by themselves. Output: (doc_id,
+    cluster_id) with cluster_id = the component's minimum vertex id.
 
-    Each round is one shuffle (neighbor-min join + groupBy-min), and the
-    loop runs until a fixpoint — O(component diameter) rounds, which for
-    near-dup clusters is tiny (dup clusters are dense, diameter 2-3).
-    Labels only ever decrease, so Σ(label) is a strictly decreasing
-    potential until the fixpoint: an unchanged sum IS convergence. The
-    probe is that sum as decimal(38,0) (a raw BIGINT sum overflows once
-    label ids approach 2^63-scale hash/snowflake domains), computed in the
-    same action that materializes the round (plans.ckpt.iterate). The
-    edge set is materialized ONCE up front — it is read every round, and
-    leaving it lazy would re-run the (often expensive) edge-producing join
-    per round (observed 14 s → 3 s on the Jaccard edge set at sf0.1). Only
-    vertices that touch an edge enter the loop; singletons (most of a real
-    corpus) are unioned back at the end without shuffling. Raises when
-    the diameter exceeds ``max_iter`` rather than emit partial labels.
+    The edge set is materialized once (every round reads it; left lazy,
+    the edge-producing join would rerun per round), oriented (least,
+    greatest) with self-loops dropped. It is not deduplicated: the
+    min-aggregate ignores duplicate rows and the star loop canonicalizes
+    its output. Only vertices that touch an edge enter the loops.
+    Each propagation round is one join + one groupBy-min; labels only
+    decrease, so Σ(label) falls strictly until the fixpoint, and an
+    unchanged sum IS convergence. The probe reads Σ(label) and Σ(id) as
+    decimal(38,0) (a BIGINT sum overflows on hash-scale ids) in the action
+    that materializes the round (plans.ckpt.iterate), both coalesced to 0
+    so an empty edge set reads as a fixpoint. Round 0's drop is
+    Σ(id) − Σ(label).
+
+    Which path runs is decided by the input. Shallow dup clusters (diameter
+    2-3) drop most of Σ in round 0 and reach the fixpoint in propagation,
+    which is the answer. On a long chain every round moves labels only
+    one hop, so the drop barely shrinks: once a round's drop exceeds
+    ``_STAR_SWITCH_RATIO`` of the previous one, propagation stops and the
+    label-contracted graph (lab(u), lab(v)) is star-contracted, O(log d)
+    rounds where propagation needs O(d). Composing the two maps keeps the
+    labels exact: propagation labels are vertex ids inside the same
+    component (the component minimum labels itself), so the contracted
+    graph has the same partition, the star fixpoint's centers are the same
+    component minima, and star(lab(u)) — with each map's roots labelling
+    themselves — is the component minimum of u. The composed labels are
+    materialized once, so the returned plan reads exactly one checkpoint.
+
+    ``max_iter`` bounds the propagation and star rounds together; a graph
+    that needs more raises rather than emit partial labels.
     """
-    edges = round_checkpoint(edges)
+    e = round_checkpoint(
+        edges.select(
+            F.least("src", "dst").alias("l"), F.greatest("src", "dst").alias("h")
+        ).filter(F.col("l") != F.col("h"))
+    )
+    sym = e.selectExpr("l AS u", "h AS v").unionByName(
+        e.selectExpr("h AS u", "l AS v")
+    )
+    sums = []  # Σ(id), then Σ(label) of each propagation round
 
-    def min_label_round(labels, _sum, _i):
-        nbr_min = edges.join(
-            labels.withColumnRenamed("doc_id", "dst"), "dst"
-        ).select(F.col("src").alias("doc_id"), "label")
+    def probe(lab):
+        row = lab.agg(
+            *(F.coalesce(F.sum(F.col(c).cast("decimal(38,0)")), F.lit(0))
+              for c in ("p", "u"))
+        ).collect()[0]
+        return int(row[0]), int(row[1])
+
+    def settled(prev, cur):
+        if not sums:
+            sums.extend(prev[1][::-1])
+        sums.append(cur[1][0])
+        a, b, c = sums[-3:]
+        return b == c or b - c > (a - b) * _STAR_SWITCH_RATIO
+
+    def propagate(lab, _sums, _i):
         return (
-            labels.unionByName(nbr_min)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
+            sym.join(lab.withColumnRenamed("u", "v"), "v")
+            .select("u", "p")
+            .unionByName(lab)
+            .groupBy("u")
+            .agg(F.min("p").alias("p"))
         )
 
-    # Round 0 is the first propagation, read straight off the edge set:
-    # label(v) = min(Γ(v) ∪ {v}).
-    labels, _, _ = iterate(
-        edges.groupBy("src")
-        .agg(F.least(F.min("dst"), F.col("src")).alias("label"))
-        .withColumnRenamed("src", "doc_id"),
-        min_label_round,
-        lambda d: d.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0],
-        rounds=max_iter - 1,
-        until=lambda prev, cur: prev[1] == cur[1],
-        must_converge=True,
-        inputs=(edges,),
-    )
-    register_run_checkpoint(labels)
-    return (
-        vertices.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
+    dead = [e]  # checkpoints the returned plan does not read
+    try:
+        # Round 0: lab(u) = min(Γ(u) ∪ {u}); each later round one more hop.
+        lab, _, k = iterate(
+            sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("p")),
+            propagate,
+            probe,
+            rounds=max_iter - 1,
+            until=settled,
+            must_converge=True,
         )
-    )
+        if sums[-1] != sums[-2]:  # switched before the fixpoint
+            dead.append(lab)
+            lo = lab.withColumnRenamed("u", "l").withColumnRenamed("p", "pl")
+            hi = lab.withColumnRenamed("u", "h").withColumnRenamed("p", "ph")
+            star, _ = _star_contract(
+                e.join(lo, "l").join(hi, "h").selectExpr("pl AS l", "ph AS h"),
+                max_iter - 1 - k,  # propagation ran rounds 0..k
+            )
+            dead.append(star)
+            lab = round_checkpoint(
+                lab.join(star.selectExpr("h AS p", "l AS s"), "p", "left")
+                .select("u", F.coalesce("s", "p").alias("p"))
+            )
+    finally:
+        for df in dead:
+            evict_round_checkpoint(df)
+    register_run_checkpoint(lab)
+    return vertices.join(
+        lab.selectExpr("u AS doc_id", "p AS label"), "doc_id", "left"
+    ).select("doc_id", F.coalesce("label", F.col("doc_id")).alias("cluster_id"))
 
 
 def _canon_edges(df: DataFrame, a: str, b: str) -> DataFrame:
@@ -877,10 +935,15 @@ def _canon_edges(df: DataFrame, a: str, b: str) -> DataFrame:
 
 
 def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
-    """Alternating large-star / small-star contraction to the star-forest
-    fixpoint. Returns (fixpoint edge set as (l=center, h=leaf), rounds)."""
+    """Alternating large-star / small-star contraction of an (l, h) edge
+    set (any orientation, duplicates and self-loops allowed) to the
+    star-forest fixpoint, in at most ``max_iter`` rounds. Round 0 is the
+    first contraction of the input itself, so the input is never
+    materialized on its own. Returns (fixpoint edge set as (l=center,
+    h=leaf), star rounds run, the one that confirmed the fixpoint
+    included); rounds == 0 means the input was empty."""
 
-    def star_round(e: DataFrame, count, _i) -> DataFrame | None:
+    def star_round(e: DataFrame, count=None, _i=0) -> DataFrame | None:
         if count == 0:
             return None  # an empty edge set is its own fixpoint
         # Large star: for each u, m = min(Γ(u) ∪ {u}); connect every
@@ -917,113 +980,21 @@ def _star_contract(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
         centers = m2.select(F.col("h2").alias("a"), F.col("m2").alias("b"))
         return _canon_edges(leaves.unionByName(centers), "a", "b")
 
-    # Fixpoint = edge set unchanged by a full round. Both rounds are
-    # DEDUPED canonical sets (_canon_edges), so set equality is equal
+    # Fixpoint = edge set unchanged by a full round. Every round is a
+    # DEDUPED canonical set (_canon_edges), so set equality is equal
     # counts (the probe, fused into the round's materialization) plus
     # ONE-way containment — a set-difference shuffle only on rounds where
     # the counts already agree.
-    e, _, rounds = iterate(
-        edges,
+    e, count, rounds = iterate(
+        star_round(edges),
         star_round,
         DataFrame.count,
-        rounds=max_iter,
+        rounds=max_iter - 1,
         until=lambda prev, cur: prev[1] == cur[1]
         and cur[0].subtract(prev[0]).isEmpty(),
         must_converge=True,
     )
-    return e, rounds
-
-
-def connected_components_star(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 30,
-    seed_rounds: int = 0,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star contraction
-    (the two-phase algorithm of Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — same API and output contract as
-    connected_components().
-
-    Why it exists: min-label propagation runs O(component diameter) rounds.
-    Dup clusters are usually shallow, but chain-shaped near-dup graphs
-    (boilerplate-heavy web corpora: page A ~ B ~ C ... with no A ~ C edge)
-    have large diameter. Each large-star/small-star round roughly halves
-    every component's height, so the fixpoint arrives in O(log d) rounds —
-    tests/test_llm_ops.py pins a 64-node path converging in ≤ 8 rounds where
-    propagation needs 63. Per round: two groupBy-min shuffles + one join,
-    all keyed on vertex ids; the edge set only ever shrinks toward one edge
-    per non-root vertex, so round cost is bounded by the input edge count.
-    At the fixpoint the edge set IS the answer: a star forest whose centers
-    are the component minima.
-
-    ``seed_rounds`` > 0 prepends that many MIN-LABEL PROPAGATION rounds and
-    star-contracts the label-contracted graph instead (optimization r12,
-    VERDICT r11 #5 — guide §1.2): each propagation round is one join + one
-    groupBy-min (cheaper than a star round's two groupBy-mins + join +
-    dedup), and contracting every vertex into the minimum of its
-    seed_rounds-hop ball divides the residual diameter by ~(2·seed_rounds
-    + 1), cutting the number of expensive star rounds. Exactness is
-    structural, not empirical: propagation labels are vertex ids INSIDE the
-    same component (the component minimum labels itself), so the contracted
-    graph has the same component partition, the star fixpoint's centers are
-    the same global component minima, and composing the two maps
-    (star_label(prop_label(u)), with each map's roots labelling themselves)
-    reproduces connected_components_star(seed_rounds=0) bit-for-bit. The
-    q_dbscan core-edge graph (eps-chains > 25 hops) measured 6.59 -> 5.59 s
-    median-of-5 with seed_rounds=2, label hash identical; dup-cluster
-    graphs (diameter 2-3) gain nothing, so 0 stays the default.
-    """
-    e0 = _canon_edges(edges, "src", "dst")
-    if seed_rounds <= 0:
-        e, _rounds = _star_contract(e0, max_iter)
-        register_run_checkpoint(e)
-        labels = e.select(F.col("h").alias("doc_id"), F.col("l").alias("label"))
-        return vertices.join(labels, "doc_id", "left").select(
-            "doc_id", F.coalesce("label", F.col("doc_id")).alias("cluster_id")
-        )
-    # Seeded path: the canonical edge set is scanned once per propagation
-    # round and once by the contraction join — checkpoint it.
-    e0 = round_checkpoint(e0)
-    sym = e0.selectExpr("l AS u", "h AS v").unionByName(
-        e0.selectExpr("h AS u", "l AS v")
-    )
-    # Round 0: lab(u) = min(Γ(u) ∪ {u}); each later round one more hop.
-    lab, _, _ = iterate(
-        sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("p")),
-        lambda lab, _v, _i: sym.join(lab.withColumnRenamed("u", "v"), "v")
-        .select("u", "p")
-        .unionByName(lab)
-        .groupBy("u")
-        .agg(F.min("p").alias("p")),
-        rounds=seed_rounds - 1,
-    )
-    contracted = (
-        e0.join(
-            lab.withColumnRenamed("u", "l").withColumnRenamed("p", "pl"), "l"
-        )
-        .join(
-            lab.withColumnRenamed("u", "h").withColumnRenamed("p", "ph"), "h"
-        )
-        .select(F.col("pl").alias("src"), F.col("ph").alias("dst"))
-    )
-    # The star loop's round 0 reads e0 for the last time; lab stays
-    # referenced by the returned plan unless the loop raises.
-    try:
-        e, _rounds = _star_contract(_canon_edges(contracted, "src", "dst"), max_iter)
-    except BaseException:
-        evict_round_checkpoint(lab)
-        raise
-    finally:
-        evict_round_checkpoint(e0)
-    register_run_checkpoint(e)
-    register_run_checkpoint(lab)
-    star = e.select(F.col("h").alias("p"), F.col("l").alias("slabel"))
-    comp = lab.join(star, "p", "left").select(
-        F.col("u").alias("doc_id"),
-        F.coalesce("slabel", F.col("p")).alias("label"),
-    )
-    return vertices.join(comp, "doc_id", "left").select(
-        "doc_id", F.coalesce("label", F.col("doc_id")).alias("cluster_id")
-    )
+    return e, rounds + 1 if count else 0
 
 
 def _cluster_oracle_sql(d: Dialect) -> str:
@@ -1075,55 +1046,42 @@ FROM labels
 
 
 @df_query(
+    "q_dedup_clusters_star",
+    duck_sql=_cluster_oracle_sql(DUCK),
+    tables=["documents"],
+    doc="Dedup clustering, registered under the name of its former "
+    "star-contraction variant so bench and retry-invariance runs keep "
+    "their query: the same plan as q_dedup_clusters (Jaccard >= 0.8 pair "
+    "graph -> the adaptive connected_components, which reaches its "
+    "fixpoint in min-label propagation on these diameter-2-3 dup clusters "
+    "and star-contracts (Kiveris et al. SoCC'14) only chain-shaped "
+    "graphs), checked against the same recursive-CTE transitive-closure "
+    "oracle. cluster_id = component min doc_id, singletons label "
+    "themselves, is_canonical marks the kept row.",
+)
+@df_query(
     "q_dedup_clusters",
     duck_sql=_cluster_oracle_sql(DUCK),
     tables=["documents"],
     doc="Dedup clustering: connected components over the Jaccard >= 0.8 "
     "near-dup pair graph (same edge set as q_dedup_jaccard). Spark side is "
-    "iterative min-label propagation — one shuffle per round, O(diameter) "
-    "rounds, lineage truncated per round with localCheckpoint; the DuckDB "
-    "oracle computes the identical fixpoint by recursive-CTE transitive "
-    "closure. Output covers the WHOLE corpus: cluster_id = min doc_id of "
-    "the component (singletons label themselves), is_canonical marks the "
-    "one row per cluster a dedup pipeline keeps.",
+    "the adaptive connected_components: min-label propagation (one "
+    "shuffle per round, each round checkpointed and its Σ(label) probe "
+    "fused into the same action) that switches to large-star/small-star "
+    "contraction when the Σ drop stops shrinking, i.e. on chain-shaped "
+    "graphs; the DuckDB oracle computes the identical fixpoint by "
+    "recursive-CTE transitive closure. Output covers the WHOLE corpus: "
+    "cluster_id = min doc_id of the component (singletons label "
+    "themselves), is_canonical marks the one row per cluster a dedup "
+    "pipeline keeps.",
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir, ["documents"])
-    pairs = spark.sql(_jaccard_sql(SPARK)).select("doc_a", "doc_b")
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    labels = connected_components(edges, t["documents"].select("doc_id"))
-    return labels.select(
-        "doc_id",
-        "cluster_id",
-        F.count("*").over(Window.partitionBy("cluster_id")).alias("cluster_size"),
-        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-    )
-
-
-@df_query(
-    "q_dedup_clusters_star",
-    duck_sql=_cluster_oracle_sql(DUCK),
-    tables=["documents"],
-    doc="Dedup clustering via large-star/small-star contraction (Kiveris et "
-    "al. SoCC'14) over the same Jaccard >= 0.8 edge set — the O(log "
-    "diameter) upgrade of q_dedup_clusters' O(diameter) label propagation, "
-    "verified against the identical recursive-CTE transitive-closure "
-    "oracle. Same whole-corpus output contract: cluster_id = component min "
-    "doc_id, singletons label themselves, is_canonical marks the kept row.",
-)
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    t = load_tables(spark, sf_dir, ["documents"])
-    pairs = spark.sql(_jaccard_sql(SPARK)).select("doc_a", "doc_b")
-    labels = connected_components_star(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+    pairs = spark.sql(_jaccard_sql(SPARK))
+    labels = connected_components(
+        pairs.selectExpr("doc_a AS src", "doc_b AS dst"),
         t["documents"].select("doc_id"),
     )
     return labels.select(
@@ -1579,7 +1537,7 @@ _PROD_VERIFY_MIN_MATCHES = 14  # est. Jaccard >= 0.875 to become an edge
     "matching hashes, est. Jaccard >= 0.875) -> connected components -> "
     "per-doc keep verdict (canonical = min doc_id of its cluster). This is "
     "the exact chain a 100 TB corpus dedup runs; every stage is the "
-    "scale-path variant (xxhash, banding, min-label CC). Rows-only by "
+    "scale-path variant (xxhash, banding, adaptive CC). Rows-only by "
     "necessity (xxhash64 has no DuckDB equivalent) — but each stage's "
     "algebra is oracle-pinned by its dictionary-encoded twin "
     "(q_dedup_minhash, q_dedup_clusters) and the banding S-curve is "
@@ -1621,11 +1579,7 @@ def prod_dedup_chain(docs: DataFrame) -> DataFrame:
         .filter(F.col("matching") >= _PROD_VERIFY_MIN_MATCHES)
         .select("doc_a", "doc_b")
     )
-    edges = verified.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        verified.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
+    edges = verified.selectExpr("doc_a AS src", "doc_b AS dst")
     # connected_components materializes its internal edge checkpoint (the
     # loop runs eagerly), so on return nothing live references the
     # signature table — release it instead of holding ~16 hash columns ×
@@ -2263,22 +2217,21 @@ ORDER BY doc_id
     "ascending on ties), DROP the rest — the keep-the-most-complete-copy "
     "policy a production dedup applies, upgrading q_dedup_clusters' "
     "min-id convention into an explicit keep/drop action table over the "
-    "whole corpus. Spark side reuses the iterative min-label CC "
-    "(localCheckpoint per round) and a cluster-partitioned rank window; "
-    "the oracle recomputes the identical fixpoint by recursive-CTE "
-    "transitive closure plus the same rank.",
+    "whole corpus. Spark side reuses the adaptive connected_components "
+    "(min-label propagation to its fixpoint on these shallow dup "
+    "clusters, one checkpointed round per hop) and a cluster-partitioned "
+    "rank window; the oracle recomputes the identical fixpoint by "
+    "recursive-CTE transitive closure plus the same rank.",
 )
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir, ["documents"])
-    pairs = spark.sql(_jaccard_sql(SPARK)).select("doc_a", "doc_b")
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    pairs = spark.sql(_jaccard_sql(SPARK))
+    labels = connected_components(
+        pairs.selectExpr("doc_a AS src", "doc_b AS dst"),
+        t["documents"].select("doc_id"),
     )
-    labels = connected_components(edges, t["documents"].select("doc_id"))
     sized = labels.join(
         t["documents"].select("doc_id", F.col("n_chars").cast("bigint").alias("n_chars")),
         "doc_id",

@@ -81,11 +81,10 @@ def dedup_exact_canonical(docs: DataFrame, with_counts: bool = False) -> DataFra
 def dedup_neardup_canonical(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Keep the cluster-canonical doc per Jaccard>=0.8 connected component."""
     docs.createOrReplaceTempView("documents")
-    pairs = spark.sql(_jaccard_sql(SPARK)).select("doc_a", "doc_b")
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
+    pairs = spark.sql(_jaccard_sql(SPARK))
+    labels = connected_components(
+        pairs.selectExpr("doc_a AS src", "doc_b AS dst"), docs.select("doc_id")
     )
-    labels = connected_components(edges, docs.select("doc_id"))
     return docs.join(
         labels.where(F.col("doc_id") == F.col("cluster_id")).select("doc_id"),
         "doc_id",

@@ -712,10 +712,11 @@ ORDER BY custkey
     "mirrors, so the candidate join carries half the naive 3x3 fanout "
     "and the pair space never exceeds actual eps-neighborhoods; cluster "
     "formation is connected "
-    "components over the CORE-core edge set via the shared large-star/"
-    "small-star contraction (llm.dedup.connected_components_star — "
-    "O(log diameter) rounds; eps-chains in dense regions exceed 25 hops "
-    "at sf0.1, so plain min-label propagation is the wrong primitive); "
+    "components over the CORE-core edge set via the shared adaptive "
+    "llm.dedup.connected_components — eps-chains in dense regions exceed "
+    "25 hops at sf0.1, so after two min-label rounds the Σ(label) drop "
+    "is still 0.36 of the previous one and the routine switches to "
+    "large-star/small-star contraction, O(log diameter) rounds; "
     "border points take the MINIMUM cluster label among their core "
     "neighbors, removing textbook DBSCAN's scan-order dependence so the "
     "result is hash-deterministic. The oracle recomputes everything "
@@ -738,7 +739,7 @@ def _dbscan_frame(
     density-scaled SF-scaling run (PLANS.md round-6 row) shrinks eps as
     the plane densifies to hold mean neighborhood size roughly constant,
     pinning the Θ(eps-neighborhood pairs) cost claim."""
-    from ..llm.dedup import connected_components_star
+    from ..llm.dedup import connected_components
 
     if _SPACE % cell != 0:
         # Not an assert: under `python -O` a non-dividing cell would pass
@@ -841,24 +842,16 @@ def _dbscan_frame(
     # No forced broadcasts below: cores/labels/border scale with the
     # corpus (unlike a dimension table), so the joins stay adaptive —
     # AQE broadcasts them locally, shuffles them at cluster scale.
+    # Each unordered core pair once: connected_components orients its
+    # edges itself.
     core_edges = (
-        nbrs.join(cores.withColumnRenamed("ck", "a"), "a")
+        nbrs.filter(F.col("a") < F.col("b"))
+        .join(cores.withColumnRenamed("ck", "a"), "a")
         .join(cores.withColumnRenamed("ck", "b"), "b")
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
-    # Star contraction, not plain min-label propagation: eps-chains in
-    # dense regions give core components whose DIAMETER exceeds any fixed
-    # propagation budget (measured: > 25 hops at sf0.1) — the O(log d)
-    # large-star/small-star rounds converge regardless of chain length.
-    # seed_rounds=2: eps-chains in dense regions give this graph > 25-hop
-    # diameter, so two cheap min-label rounds contract it before the star
-    # loop — star rounds 9 -> 7 (plus the 2 one-shuffle seed rounds), the
-    # loop's shuffle bytes 10.4 -> 4.3 MB, jobs 127 -> 117, and
-    # 6.59 -> 5.59 s median-of-5 at sf0.1 with the label hash identical
-    # (optimization r12, VERDICT r11 #5; seed_rounds=1/3 measured worse;
-    # exactness argument in connected_components_star's docstring).
-    core_labels = connected_components_star(
-        core_edges, cores.withColumnRenamed("ck", "doc_id"), seed_rounds=2
+    core_labels = connected_components(
+        core_edges, cores.withColumnRenamed("ck", "doc_id")
     ).select(F.col("doc_id").alias("ck"), "cluster_id")
     border = (
         nbrs.join(core_labels.withColumnRenamed("ck", "b"), "b")

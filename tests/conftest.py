@@ -153,3 +153,16 @@ def path_edges(spark, n):
         [(i, i + 1) for i in range(n - 1)], "src LONG, dst LONG"
     )
     return half.unionByName(half.selectExpr("dst AS src", "src AS dst"))
+
+
+def geometric_path(spark, n):
+    """The path over the ids 0, 1, 5, 25, ... (each id five times the one
+    before), as (symmetric edges, doc_id vertices). Min-label propagation
+    still moves one hop per round, but round r's Σ(label) drop is the
+    (n-1-r)-th id, at most a fifth of the previous round's drop, so
+    connected_components stays in propagation for all n - 1 hops instead
+    of switching to star contraction. n <= 28 keeps the ids in LONG."""
+    ids = [0] + [5**i for i in range(n - 1)]
+    half = spark.createDataFrame(list(zip(ids, ids[1:])), "src LONG, dst LONG")
+    edges = half.unionByName(half.selectExpr("dst AS src", "src AS dst"))
+    return edges, spark.createDataFrame([(i,) for i in ids], "doc_id LONG")

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_lakehouse_spark.llm.dedup import (
     connected_components,
-    connected_components_star,
     kcore_members,
 )
 from nyc_taxi_lakehouse_spark.plans import ckpt
@@ -41,6 +40,7 @@ from nyc_taxi_lakehouse_spark.plans.ckpt import (
 )
 
 
+from tests.conftest import geometric_path
 from tests.conftest import path_edges as _path_edges
 
 
@@ -85,10 +85,9 @@ def _clear_hook():
 
 def test_local_mode_block_loss_fails_loudly_never_wrong(spark):
     spark.conf.set(RELIABLE_CONF, "false")
-    edges = _path_edges(spark, 16)
-    verts = spark.range(16).withColumnRenamed("id", "doc_id")
+    edges, verts = geometric_path(spark, 16)  # stays in propagation
     # call 1 = edge checkpoint, 2 = initial labels, 3+ = per-round labels:
-    # kill a mid-loop round so the convergence probe reads lost state.
+    # kill a mid-loop round so the next round reads lost state.
     ckpt._post_checkpoint_hook = _KillRound(4)
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         connected_components(edges, verts, max_iter=25).count()
@@ -97,15 +96,14 @@ def test_local_mode_block_loss_fails_loudly_never_wrong(spark):
 def test_local_mode_star_loop_block_loss_fails_loudly(spark):
     spark.conf.set(RELIABLE_CONF, "false")
     edges = _path_edges(spark, 64)
-    ckpt._post_checkpoint_hook = _KillRound(2)  # first contraction round
+    ckpt._post_checkpoint_hook = _KillRound(4)  # first contraction round
     with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
         verts = spark.range(64).withColumnRenamed("id", "doc_id")
-        connected_components_star(edges, verts).count()
+        connected_components(edges, verts).count()
 
 
 def test_reliable_mode_survives_the_same_injection(spark, reliable):
-    edges = _path_edges(spark, 16)
-    verts = spark.range(16).withColumnRenamed("id", "doc_id")
+    edges, verts = geometric_path(spark, 16)  # stays in propagation
 
     # Baseline WITHOUT injection, same (reliable) mode.
     expect = sorted(
@@ -166,13 +164,12 @@ def test_reliable_mode_evicts_superseded_round_files(spark, reliable):
     """The eviction discipline carries over: superseded reliable rounds'
     FILES are deleted eagerly, so a long loop's checkpoint dir holds
     O(live rounds), not O(iterations)."""
-    edges = _path_edges(spark, 32)  # ~31 min-label rounds on a path
-    verts = spark.range(32).withColumnRenamed("id", "doc_id")
+    edges, verts = geometric_path(spark, 24)  # 24 min-label rounds
     out = connected_components(edges, verts, max_iter=40)
-    assert out.count() == 32
+    assert out.count() == 24
     rdd_dirs = glob.glob(os.path.join(reliable, "*", "rdd-*"))
     # only the FINAL labels round (referenced by the returned plan) may
-    # keep its files; ~31 leaked round dirs would mean eviction is lost
+    # keep its files; ~24 leaked round dirs would mean eviction is lost
     assert len(rdd_dirs) <= 1, rdd_dirs
 
 
@@ -180,11 +177,10 @@ def test_reliable_mode_bounded_persistent_rdds(spark, reliable):
     """Reliable rounds must not ALSO pin block-manager entries: the
     persistent-RDD bound the r9 lifecycle tests pin for local mode holds
     unchanged under the opt-in."""
-    edges = _path_edges(spark, 32)
-    verts = spark.range(32).withColumnRenamed("id", "doc_id")
+    edges, verts = geometric_path(spark, 24)
     before = persistent_rdd_count(spark)
     out = connected_components(edges, verts, max_iter=40)
-    assert out.count() == 32
+    assert out.count() == 24
     assert persistent_rdd_count(spark) - before <= 1
 
 

@@ -19,16 +19,17 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_lakehouse_spark.llm.dedup import (
     connected_components,
-    connected_components_star,
     kcore_members,
     prod_dedup_chain,
 )
 from nyc_taxi_lakehouse_spark.plans.ckpt import (
     evict_round_checkpoint,
     persistent_rdd_count,
+    release_run_checkpoints,
 )
 
 
+from tests.conftest import geometric_path
 from tests.conftest import path_edges as _path_edges
 
 
@@ -42,8 +43,7 @@ def test_evict_requires_checkpoint_frame(spark):
 
 
 def test_connected_components_releases_rounds(spark):
-    edges = _path_edges(spark, 16)  # min-label propagation: ~15 rounds
-    verts = spark.range(16).withColumnRenamed("id", "doc_id")
+    edges, verts = geometric_path(spark, 16)  # 16 min-label rounds
     before = persistent_rdd_count(spark)
     out = connected_components(edges, verts, max_iter=25)
     assert out.count() == 16
@@ -52,12 +52,28 @@ def test_connected_components_releases_rounds(spark):
     # the edge checkpoint would linger without eviction.
     assert persistent_rdd_count(spark) - before <= 1
 
+    # Degenerate inputs: an empty edge set (Σ over no rows is NULL, which
+    # the probe must read as a fixpoint) and self-loops only (dropped, so
+    # also empty). Every vertex is its own cluster, and once the harness
+    # releases the run checkpoint nothing stays pinned.
+    release_run_checkpoints()
+    base = persistent_rdd_count(spark)
+    for degenerate in (
+        edges.limit(0),
+        verts.selectExpr("doc_id AS src", "doc_id AS dst"),
+    ):
+        out = connected_components(degenerate, verts).collect()
+        assert len(out) == 16
+        assert all(r.cluster_id == r.doc_id for r in out)
+        release_run_checkpoints()
+        assert persistent_rdd_count(spark) == base
+
 
 def test_star_contraction_releases_rounds(spark):
     edges = _path_edges(spark, 64)  # O(log d) rounds, still several
     verts = spark.range(64).withColumnRenamed("id", "doc_id")
     before = persistent_rdd_count(spark)
-    out = connected_components_star(edges, verts, max_iter=30)
+    out = connected_components(edges, verts, max_iter=30)
     assert out.count() == 64
     assert out.select("cluster_id").distinct().count() == 1
     # Only the fixpoint edge set may survive (the returned labels read it).

@@ -306,10 +306,7 @@ def test_connected_components_convergence_guard(spark):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from nyc_taxi_lakehouse_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from nyc_taxi_lakehouse_spark.llm.dedup import connected_components
     from nyc_taxi_lakehouse_spark.plans.ckpt import persistent_rdd_count
 
     n = 12  # path 0-1-2-...-11, diameter 11
@@ -329,7 +326,7 @@ def test_connected_components_convergence_guard(spark):
     fwd64 = spark.range(63).selectExpr("id AS src", "id + 1 AS dst")
     verts64 = spark.range(64).selectExpr("id AS doc_id")
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_star(fwd64, verts64, max_iter=1)
+        connected_components(fwd64, verts64, max_iter=1)
     assert persistent_rdd_count(spark) <= base
 
     labels = connected_components(edges, verts, max_iter=n + 2)
@@ -421,10 +418,7 @@ def test_connected_components_vs_union_find(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from nyc_taxi_lakehouse_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from nyc_taxi_lakehouse_spark.llm.dedup import connected_components
 
     edge_st = st.tuples(st.integers(0, 14), st.integers(0, 14))
 
@@ -447,48 +441,83 @@ def test_connected_components_vs_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         want = {v: min(u for u in range(n) if find(u) == find(v)) for v in range(n)}
 
-        verts = spark.range(n).selectExpr("id AS doc_id")
-        if edge_list:
-            fwd = spark.createDataFrame(edge_list, "src long, dst long")
-            edges = fwd.unionByName(fwd.selectExpr("dst AS src", "src AS dst"))
-        else:
-            edges = verts.selectExpr("doc_id AS src", "doc_id AS dst").limit(0)
+        # A 10-node path beside the random components: its Σ(label) drop
+        # shrinks by one per round, which no component of 15 small ids can
+        # outweigh for 9 rounds, so every example switches to star
+        # contraction and checks the composed labels star(lab(u)) across
+        # several components.
+        path = [(100 + i, 101 + i) for i in range(9)]
+        want.update({v: 100 for v in range(100, 110)})
+        verts = (
+            spark.range(n).unionByName(spark.range(100, 110))
+            .selectExpr("id AS doc_id")
+        )
+        fwd = spark.createDataFrame(edge_list + path, "src long, dst long")
+        edges = fwd.unionByName(fwd.selectExpr("dst AS src", "src AS dst"))
         got = {
             r.doc_id: r.cluster_id
             for r in connected_components(edges, verts, max_iter=40).collect()
         }
         assert got == want, (edge_list, got, want)
-        got_star = {
-            r.doc_id: r.cluster_id
-            for r in connected_components_star(edges, verts).collect()
-        }
-        assert got_star == want, (edge_list, got_star, want)
 
     check()
+
+
+def _cc_rounds(spark, n, pairs):
+    """connected_components over ``pairs`` on vertices 0..n-1, with its
+    rounds counted at the checkpoint hook: after the edge checkpoint,
+    label rounds are (u, p) frames and star rounds (l, h) frames; the
+    (u, p) frame after the star loop is the composed labels. Returns
+    (labels, propagation rounds, star rounds)."""
+    from nyc_taxi_lakehouse_spark.llm.dedup import connected_components
+    from nyc_taxi_lakehouse_spark.plans import ckpt
+
+    seen = []
+    ckpt._post_checkpoint_hook = lambda df: seen.append(df.columns)
+    try:
+        labels = {
+            r.doc_id: r.cluster_id
+            for r in connected_components(
+                spark.createDataFrame(pairs, "src long, dst long"),
+                spark.range(n).selectExpr("id AS doc_id"),
+            ).collect()
+        }
+    finally:
+        ckpt._post_checkpoint_hook = None
+    kinds = ["star" if c == ["l", "h"] else "prop" for c in seen[1:]]
+    if "star" not in kinds:
+        return labels, len(kinds), 0
+    return labels, kinds.index("star"), kinds.count("star")
 
 
 def test_star_contraction_logarithmic_rounds_on_chain(spark):
     """A 64-node path (diameter 63) — adversarial for label propagation
     (63 rounds) — must converge in O(log d) large-star/small-star rounds,
-    with every node labelled by the component minimum."""
-    from nyc_taxi_lakehouse_spark.llm.dedup import (
-        _canon_edges,
-        _star_contract,
-        connected_components_star,
-    )
+    with every node labelled by the component minimum. The adaptive
+    connected_components leaves propagation after at most 2 rounds on it
+    and converges within its default ``max_iter``."""
+    from nyc_taxi_lakehouse_spark.llm.dedup import _canon_edges, _star_contract
 
     n = 64
-    fwd = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
+    pairs = [(i, i + 1) for i in range(n - 1)]
+    fwd = spark.createDataFrame(pairs, "src long, dst long")
     _, rounds = _star_contract(_canon_edges(fwd, "src", "dst"), max_iter=30)
     assert rounds <= 8, rounds
-    verts = spark.range(n).selectExpr("id AS doc_id")
-    got = {
-        r.doc_id: r.cluster_id
-        for r in connected_components_star(fwd, verts).collect()
-    }
-    assert got == {v: 0 for v in range(n)}
+    labels, prop, star = _cc_rounds(spark, n, pairs)
+    assert labels == {v: 0 for v in range(n)}
+    assert prop <= 2 and 1 <= star <= 8, (prop, star)
+
+
+def test_connected_components_input_picks_the_path(spark):
+    """The input, not a parameter, picks the CC path: disjoint triangles
+    reach the fixpoint in min-label propagation and never enter the star
+    loop (the 64-node path that does is in the chain test above)."""
+    triangles = [
+        (t + a, t + b) for t in (0, 3, 6) for a, b in ((0, 1), (1, 2), (0, 2))
+    ]
+    labels, prop, star = _cc_rounds(spark, 9, triangles)
+    assert labels == {v: v - v % 3 for v in range(9)}
+    assert star == 0 and prop == 2, (prop, star)
 
 
 def test_asof_join_null_payload_column_fills_atomically(spark):

@@ -56,9 +56,15 @@ def test_chunked_delivery_matches_single_batch(spark, qname):
 
 
 def test_chunked_mode_actually_chunks(spark):
-    """Non-vacuousness: the parametrized runs above must have built _c4
-    replay artifacts with multiple chunk files — a conf typo that silently
-    fell back to single-file delivery would pass every hash check."""
+    """Non-vacuousness: a chunked replay must build _c4 replay artifacts
+    with multiple chunk files — a conf typo that silently fell back to
+    single-file delivery would pass every hash check above. Runs one cheap
+    chunked drain itself, so it holds in any selection of tests."""
+    spark.conf.set(REPLAY_CHUNKS_CONF, "4")
+    try:
+        all_queries()["q_cdc_windowed"].fn(spark, SF).count()
+    finally:
+        spark.conf.set(REPLAY_CHUNKS_CONF, "1")
     chunk_dirs = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*"))
     assert chunk_dirs, "no chunked replay artifacts were created"
     chunk_files = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*", "chunk-0003.*"))
