@@ -2,8 +2,10 @@
 """Benchmark harness: runs the headline query suite at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line LAST on stdout: {"metric": ..., "value": total_sec,
-"unit": "sec", "queries": {<frozen-13 core>: sec}, "core13": sec,
-"sf": ..., "n_queries": N, "loadavg": [...]}.
+"unit": "sec", "queries": {<frozen-13 core + heavy tail>: sec}, "core13":
+sec, "best_of_runs": {<same queries>: sec}, "sf": ..., "n_queries": N,
+"loadavg": [...]}. The side JSON also records each query's
+"codegen_compiles": the generated classes its first run compiled.
 
 Output protocol (round-5 fix; BENCH_r04.json arrived "parsed": null
 because the 110-entry per-query map overflowed the driver's tail
@@ -39,7 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nyc_taxi_lakehouse_spark.plans.ckpt import release_run_checkpoints
 from nyc_taxi_lakehouse_spark.registry import all_queries
-from nyc_taxi_lakehouse_spark.session import get_spark
+from nyc_taxi_lakehouse_spark.session import codegen_compiles, get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -290,14 +292,21 @@ def main() -> None:
     timings: dict[str, float] = {}
     bests: dict[str, float] = {}
     first_drain: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in names:
         fn = specs[name].fn
         samples, n = [], 0
-        for _ in range(runs):
+        for i in range(runs):
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             n = df.count()
             samples.append(time.perf_counter() - t0)
+            if i == 0:
+                # The query's generated-class footprint: the classes its
+                # first run compiled (session.CODEGEN_CACHE_ENTRIES is
+                # sized against the suite's total).
+                compiles[name] = codegen_compiles(spark) - c0
             # The run's result is consumed — release any materialize-once
             # checkpoints it registered (ADVICE r9: otherwise a long bench
             # session pins one RDD per invocation of the chargram/minhash/
@@ -337,6 +346,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "best_of_runs": bests,
+        "codegen_compiles": compiles,
+        "codegen_compiles_total": sum(compiles.values()),
         "runs_per_query": runs,
         "core13": round(sum(timings[n] for n in CORE13 if n in timings), 4),
         "sf": sf_val,
@@ -376,6 +387,11 @@ def main() -> None:
             n: timings[n] for n in CORE13 + HEAVY_TAIL if n in timings
         },
         "core13": full["core13"],
+        # Best-of-runs beside the medians, so a load-inflated median can be
+        # told from a real regression.
+        "best_of_runs": {
+            n: bests[n] for n in CORE13 + HEAVY_TAIL if n in bests
+        },
         "sf": sf_val,
         "n_queries": len(timings),
         "nproc": os.cpu_count(),

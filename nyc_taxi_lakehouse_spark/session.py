@@ -8,6 +8,17 @@ engine uses a plain parquet warehouse (delta-spark is unavailable in this
 environment) with an explicit lakehouse table layer in ``tables.py`` that
 carries the same semantics (partitioned writes, delete+append refresh,
 schema merge).
+
+The session also sizes Spark's JVM-wide generated-class cache
+(``spark.sql.codegen.cache.maxEntries``, default 100) to the engine's working
+set, ``CODEGEN_CACHE_ENTRIES``. A pass over the six marts of
+``perfbench/workloads.py`` compiles 122-136 distinct whole-stage-codegen
+classes, and a lake ETL cycle 118-124 (after 8 at set-up). At 100 entries
+each round-robin pass evicted classes before their reuse: Janino recompiled
+124-128 classes per warm marts pass and 90-96 per warm lake cycle, and
+HotSpot's JIT compiled every new class again. With the working set cached, a
+warm marts pass compiles 0-10 classes (AQE plan variants it had not met
+before) and a warm lake cycle 4.
 """
 
 from __future__ import annotations
@@ -17,6 +28,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Entries of the JVM-wide generated-class cache. It holds at least the
+# distinct classes of one cold bench.py headline pass at sf0.1 (1521 over 122
+# queries; bench.py records each query's ``codegen_compiles``), so a warm pass
+# of any engine workload finds its classes cached. A static conf, fixed when
+# the JVM starts.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -30,6 +48,12 @@ def get_spark(
 
     Reference parity (spark-defaults.conf:16-18, comprehensive_analytics_pipeline.py:100-102):
     AQE enabled, partition coalescing, Kryo serializer, zstd parquet.
+
+    The generated-class cache holds ``CODEGEN_CACHE_ENTRIES`` classes instead
+    of Spark's 100: the marts' working set is 122-136 classes and a lake ETL
+    cycle's 118-124, and at 100 entries each warm pass recompiled 90-128 of
+    them. The cache is JVM-wide and sized once, so ``getOrCreate`` on a
+    running session keeps that session's size.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -49,6 +73,11 @@ def get_spark(
         # Arrow for the (rare) pandas-UDF paths — the LLM-pipeline operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The cache is keyed on the generated source. AQE numbers codegen
+        # stages in the order it plans them, which varies run to run, so a
+        # stage id in the class name made one pipeline several classes.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
@@ -66,6 +95,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     The driver hands our entry points an already-built session; timezone and
     AQE are runtime-settable, so pin the ones correctness depends on (UTC so
     unix_timestamp() agrees with DuckDB's epoch()).
+
+    Static conf cannot be set on a running session, so such a session (the
+    ``__spark_entry__`` driver's) keeps its own generated-class cache size;
+    only sessions built by ``get_spark`` get ``CODEGEN_CACHE_ENTRIES``.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -79,3 +112,11 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     # with DuckDB's epoch()/epoch_ns() on the same files.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM (Spark's ``CodegenMetrics``
+    compilation-time count). A generated-class cache miss compiles one
+    class; a hit compiles none."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
