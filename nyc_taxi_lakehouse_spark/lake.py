@@ -300,6 +300,25 @@ class LakeTable(TxnLedger):
         df.write.parquet(staging)
         return self.spark.read.schema(df.schema).parquet(staging), staging
 
+    def _overwrite_partitions(self, df: DataFrame, parts: list[tuple]) -> None:
+        """Replace partitions ``parts`` with the (staged) rows of ``df``,
+        leaving every other partition's files untouched. Dynamic overwrite
+        is a per-write option, so the session's partitionOverwriteMode is
+        never touched. It only replaces partitions PRESENT in the written
+        data — a partition of ``parts`` whose every row was deleted writes
+        nothing and would silently survive, so its directory is dropped
+        explicitly."""
+        pcols = self.partition_cols
+        survived = {tuple(r) for r in df.select(*pcols).distinct().collect()}
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*pcols).parquet(self.path)
+        for p in parts:
+            if p not in survived:
+                sub = _partition_subdir(pcols, p)
+                self.fs.delete(os.path.join(self.path, sub), recursive=True)
+        self._invalidate()
+
     def delete_where(self, predicate: str) -> None:
         """DELETE FROM t WHERE predicate (reference S9).
 
@@ -331,32 +350,7 @@ class LakeTable(TxnLedger):
             cond = _partition_filter(self.partition_cols, parts)
             survivors, staging = self._stage(current.filter(cond).filter(keep_pred))
             try:
-                survived_parts = {
-                    tuple(r)
-                    for r in survivors.select(*self.partition_cols).distinct().collect()
-                }
-                prev = self.spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                self.spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic"
-                )
-                try:
-                    survivors.write.mode("overwrite").partitionBy(
-                        *self.partition_cols
-                    ).parquet(self.path)
-                finally:
-                    self.spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev
-                    )
-                # Dynamic overwrite only replaces partitions PRESENT in the
-                # written data — a fully-deleted partition writes nothing and
-                # would silently survive. Drop those directories explicitly.
-                for p in parts:
-                    if p not in survived_parts:
-                        sub = _partition_subdir(self.partition_cols, p)
-                        self.fs.delete(os.path.join(self.path, sub), recursive=True)
-                self._invalidate()
+                self._overwrite_partitions(survivors, parts)
             finally:
                 self.fs.delete(staging, recursive=True)
         else:
@@ -455,24 +449,7 @@ class LakeTable(TxnLedger):
         kept = current.filter(cond).join(all_keys, keys, "left_anti")
         merged, staging = self._stage(kept.unionByName(inserts))
         try:
-            survived_parts = {
-                tuple(r) for r in merged.select(*pcols).distinct().collect()
-            }
-            prev = self.spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(*pcols).parquet(self.path)
-            finally:
-                self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            # A partition whose every row was deleted writes no data under
-            # dynamic overwrite and would silently survive — drop it.
-            for p in parts:
-                if p not in survived_parts:
-                    sub = _partition_subdir(pcols, p)
-                    self.fs.delete(os.path.join(self.path, sub), recursive=True)
-            self._invalidate()
+            self._overwrite_partitions(merged, parts)
         finally:
             self.fs.delete(staging, recursive=True)
 

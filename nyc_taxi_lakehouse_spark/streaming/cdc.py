@@ -11,9 +11,14 @@ Structured Streaming:
   foreachBatch MERGE path (ST8) for full c/u/d parity
 - P7: null-safe positivity filter (:152-156)
 - ST1-ST5: 10-min watermark, 5-min tumbling window keyed with a dimension,
-  append output mode, processing-time / availableNow triggers, per-query
-  checkpoints (:160-192)
+  append output mode, per-query checkpoints (:160-192)
 - ST7: chained table-as-stream stateless score query (:200-236)
+- ST9: start + bounded await (:240-252) — `drain` below, the ONE place in
+  the package that triggers and awaits a stream. Every drain is an
+  availableNow drain (all pending input, then stop); a drain that outlives
+  DRAIN_TIMEOUT_S is stopped and raises TimeoutError instead of returning
+  with the query still running and its sink partial. Continuous
+  (processing-time) serving is a deployment concern outside this package.
 
 The payload here is the testdata `events` shape; the trips shape differs
 only in the StructType.
@@ -24,8 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..lake import LakeTable
+
+# Bound on one availableNow drain (ST9). A module constant, not a knob: the
+# slowest recorded replay drain (q_stream_join_outer, 22.4 s) is far inside it.
+DRAIN_TIMEOUT_S = 600
 
 # Debezium envelope: before/after are JSON *strings* (double encoding),
 # matching debezium-config.json's default JSON converter output.
@@ -192,31 +202,36 @@ def activity_score_stream(windowed: DataFrame) -> DataFrame:
     )
 
 
+def drain(writer: DataStreamWriter, what: str) -> None:
+    """Run a configured stream writer (sink or foreachBatch, plus its
+    checkpointLocation) as one availableNow drain: process all pending
+    input, then stop. Returns only once the drain completed; a drain still
+    running after DRAIN_TIMEOUT_S is stopped and raises TimeoutError naming
+    ``what``, and a failed query raises its StreamingQueryException."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(f"{what} did not drain within {DRAIN_TIMEOUT_S}s")
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     source_dir: str,
     sink_path: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> None:
-    """End-to-end: file-replay source → parse → windowed agg → parquet sink.
-
-    availableNow=True drains all pending input then stops (test/batch-backfill
-    mode); production uses trigger(processingTime='30 seconds') per ST4.
-    """
+    """End-to-end: file-replay source → parse → windowed agg → parquet sink,
+    drained once (`drain`). Re-running against the same checkpoint drains
+    only the files delivered since."""
     parsed = parse_cdc(file_replay_source(spark, source_dir))
-    windowed = windowed_aggregation(parsed)
-    writer = (
-        windowed.writeStream.outputMode("append")
+    drain(
+        windowed_aggregation(parsed)
+        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_dir)
+        .option("checkpointLocation", checkpoint_dir),
+        "CDC pipeline",
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="30 seconds").start()
-    q.awaitTermination(300 if available_now else None)  # ST9
 
 
 def run_cdc_merge(
@@ -227,7 +242,8 @@ def run_cdc_merge(
 ) -> None:
     """S12/ST8 full c/u/d parity: foreachBatch MERGE into a lake table —
     op c/u upsert by key, op d delete (the Iceberg-sink 'rewrite' delete
-    mode re-expressed as Delta-shaped MERGE)."""
+    mode re-expressed as Delta-shaped MERGE). One `drain`, so a merge that
+    outlives DRAIN_TIMEOUT_S raises instead of leaving the table partial."""
     env = file_replay_source(spark, source_dir).select(
         F.from_json(F.col("value").cast("string"), ENVELOPE_SCHEMA).alias("env")
     )
@@ -255,10 +271,9 @@ def run_cdc_merge(
         )
         table.txn_commit("cdc_merge", batch_id)
 
-    q = (
-        ops.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        ops.writeStream.foreachBatch(upsert).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "CDC merge",
     )
-    q.awaitTermination(300)

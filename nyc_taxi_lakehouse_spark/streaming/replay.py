@@ -19,6 +19,17 @@ the pipeline and is covered by tests/test_streaming.py).
 Envelope generation is Spark-side (to_json ×2 for the double encoding the
 reference's Debezium config produces — realtime_cdc_processor.py:103-146),
 written once per sf_dir and reused across runs.
+
+Every replay query is a plan plus a final projection over ONE helper:
+``_replay_sink(spark, key, name, build)`` memoizes the run directory
+``_REPLAY_ROOT/<key>/<name>``, drains ``build(run_dir)`` into an
+append-mode parquet sink through ``cdc.drain`` (the package's one
+start/await/timeout site) and returns a lazy read of the sink. Replay
+sources (envelope dirs, the near-dup document source) go through the
+same ``_memoized`` idiom. Its ``_REPLAY_COMPLETE`` marker is written only
+after the build or drain returned: a drain that timed out or failed
+leaves no marker, so the next call clears the partial sink and
+checkpoint and drains again instead of reading back a partial result.
 """
 
 from __future__ import annotations
@@ -34,9 +45,10 @@ from ..functions.detsql import DUCK
 from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query
 from ..sources.tables import load_tables
-from .cdc import file_replay_source, parse_cdc, windowed_aggregation
+from .cdc import drain, file_replay_source, parse_cdc, windowed_aggregation
 
 _REPLAY_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_cdc_replay")
+_REPLAY_COMPLETE = "_REPLAY_COMPLETE"
 
 # Chunked-delivery opt-in (VERDICT r10 #2): with N > 1, the replay writes
 # its source as N event-time-ordered files and the drain runs ONE FILE PER
@@ -220,17 +232,58 @@ def _parallel_width(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def _prepare_envelopes(spark: SparkSession, events: DataFrame, key: str):
-    """Shared envelope replay dir honoring the chunked-delivery conf.
-    Returns (env_dir, max_files_per_trigger, run-dir suffix)."""
-    chunks = _replay_chunks(spark)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes" + _chunk_suffix(chunks))
-    if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
+def _memoized(path: str, build) -> str:
+    """Build ``path`` once: if its ``_REPLAY_COMPLETE`` marker is absent,
+    clear any partial build, call ``build(path)`` and write the marker only
+    after it returned. Underscore files are invisible to the file stream
+    source, so the marker may sit inside a replay source directory."""
+    marker = os.path.join(path, _REPLAY_COMPLETE)
+    if not os.path.exists(marker):
+        shutil.rmtree(path, ignore_errors=True)
+        build(path)
+        with open(marker, "w"):
+            pass
+    return path
+
+
+def _replay_sink(spark: SparkSession, key: str, name: str, build) -> DataFrame:
+    """Drain ``build(run_dir)`` (a streaming frame) once per replay key into
+    an append-mode parquet sink under ``_REPLAY_ROOT/<key>/<name>`` and
+    return a lazy read of the sink. The replay is deterministic, so later
+    calls only read the sink back; no rows round-trip through the driver."""
+
+    def run(run_dir: str) -> None:
+        drain(
+            build(run_dir)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", os.path.join(run_dir, "sink"))
+            .option("checkpointLocation", os.path.join(run_dir, "ckpt")),
+            name,
+        )
+
+    run_dir = _memoized(os.path.join(_REPLAY_ROOT, key, name), run)
+    return spark.read.parquet(os.path.join(run_dir, "sink"))
+
+
+def _prepare_envelopes(
+    spark: SparkSession, events: DataFrame, key: str, chunks: int | None = None
+):
+    """Shared envelope replay dir; ``chunks`` defaults to the session's
+    chunked-delivery conf (single-batch-only queries pass 1). Returns
+    (env_dir, max_files_per_trigger, run-dir suffix)."""
+    if chunks is None:
+        chunks = _replay_chunks(spark)
+
+    def write(env_dir: str) -> None:
         if chunks > 1:
             write_envelopes_chunked(events, env_dir, chunks)
         else:
             write_envelopes(events, env_dir, parallel=_parallel_width(spark))
-    return env_dir, (1 if chunks > 1 else None), _chunk_suffix(chunks)
+
+    suffix = _chunk_suffix(chunks)
+    env_dir = _memoized(os.path.join(_REPLAY_ROOT, key, "envelopes" + suffix), write)
+    return env_dir, (1 if chunks > 1 else None), suffix
 
 
 @df_query(
@@ -262,10 +315,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes_x2" + suffix)
-    marker = os.path.join(env_dir, "_X2_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(env_dir, ignore_errors=True)
+
+    def write_twice(env_dir: str) -> None:
         if chunks > 1:
             # Both deliveries of a time slice share its chunk file, so a
             # duplicate always arrives within its original's watermark
@@ -279,34 +330,19 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             write_envelopes(t["events"], env_dir, parallel=w)  # delivery 1
             # Delivery 2: identical payloads, separate files — at-least-once redelivery.
             write_envelopes(t["events"], env_dir, mode="append", parallel=w)
-        with open(marker, "w"):
-            pass
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "dedup_pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    run_marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(run_marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        parsed = parse_cdc(file_replay_source(
+    env_dir = _memoized(
+        os.path.join(_REPLAY_ROOT, key, "envelopes_x2" + suffix), write_twice
+    )
+    sink = _replay_sink(
+        spark, key, "dedup_pipeline" + suffix,
+        lambda _: parse_cdc(file_replay_source(
             spark, env_dir, max_files_per_trigger=1 if chunks > 1 else None
         ))
-        deduped = parsed.withWatermark("event_time", "10 minutes").dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stream-dedup pipeline did not drain within 600s")
-        with open(run_marker, "w"):
-            pass
-    return spark.read.parquet(sink).select(
+        .withWatermark("event_time", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"]),
+    )
+    return sink.select(
         "event_id",
         F.unix_micros("event_time").alias("ts_us"),
         "user_id",
@@ -369,40 +405,22 @@ def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
-
-    run_dir = os.path.join(_REPLAY_ROOT, key, "session_pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        parsed = parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
-        sessions = (
-            parsed.withWatermark("event_time", "10 minutes")
-            .groupBy("user_id", F.session_window("event_time", "30 minutes"))
-            .agg(
-                F.unix_micros(F.min("event_time")).alias("session_start_us"),
-                F.unix_micros(F.max("event_time")).alias("session_end_us"),
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(28,2)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-            .drop("session_window")
+    sink = _replay_sink(
+        spark, key, "session_pipeline" + suffix,
+        lambda _: parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+        .withWatermark("event_time", "10 minutes")
+        .groupBy("user_id", F.session_window("event_time", "30 minutes"))
+        .agg(
+            F.unix_micros(F.min("event_time")).alias("session_start_us"),
+            F.unix_micros(F.max("event_time")).alias("session_end_us"),
+            F.count("*").alias("n_events"),
+            F.sum(F.col("value").cast("decimal(28,2)"))
+            .cast("double")
+            .alias("total_value"),
         )
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("session-stream pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    return spark.read.parquet(sink).select(
+        .drop("session_window"),
+    )
+    return sink.select(
         "user_id", "session_start_us", "session_end_us", "n_events", "total_value"
     )
 
@@ -442,39 +460,62 @@ def q_cdc_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
-
-    # Persistent per-sf sink: the envelope replay is deterministic, so the
-    # sink contents are too — run the pipeline once per sf_dir and hand back
-    # a LAZY parquet read over it. No rows round-trip through the driver
-    # (the previous implementation collect()ed the sink so it could delete
-    # the temp dir — unbounded driver memory in principle).
-    run_dir = os.path.join(_REPLAY_ROOT, key, "pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)  # clear any partial run
-        parsed = parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
-        q = (
-            windowed_aggregation(parsed)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("CDC replay pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    return spark.read.parquet(sink).select(
+    sink = _replay_sink(
+        spark, key, "pipeline" + suffix,
+        lambda _: windowed_aggregation(
+            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+        ),
+    )
+    return sink.select(
         F.unix_timestamp("window_start").alias("window_start"),
         F.unix_timestamp("window_end").alias("window_end"),
         "event_type",
         "event_count",
         "total_value",
         "avg_value",
+    )
+
+
+def _click_purchase_join(
+    spark: SparkSession, env_dir: str, mft: int | None, how: str
+) -> DataFrame:
+    """Click→purchase event-time interval join over the envelope replay:
+    every click by the same user in the 30 min before a purchase. Two
+    independent source reads: each side of a stream-stream join tracks its
+    own watermark/state (a self-joined single scan works too, but separate
+    reads mirror the production two-topic shape)."""
+    purchases = (
+        parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+        .filter(F.col("event_type") == "purchase")
+        .withWatermark("event_time", "10 minutes")
+        .alias("p")
+    )
+    clicks = (
+        parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+        .filter(F.col("event_type") == "click")
+        .withWatermark("event_time", "10 minutes")
+        .alias("c")
+    )
+    return purchases.join(
+        clicks,
+        F.expr(
+            "p.user_id = c.user_id"
+            " AND c.event_time >= p.event_time - interval 30 minutes"
+            " AND c.event_time < p.event_time"
+        ),
+        how,
+    ).select(
+        F.col("p.user_id").alias("user_id"),
+        F.col("p.event_id").alias("purchase_id"),
+        F.col("c.event_id").alias("click_id"),
+        F.unix_micros("p.event_time").alias("purchase_ts_us"),
+        F.unix_micros("c.event_time").alias("click_ts_us"),
+        F.expr(
+            "(unix_micros(p.event_time) - unix_micros(c.event_time))"
+            " DIV 1000000"
+        ).alias("gap_s"),
+        F.col("p.value").alias("purchase_value"),
+        F.col("c.value").alias("click_value"),
     )
 
 
@@ -519,62 +560,11 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
-
-    run_dir = os.path.join(_REPLAY_ROOT, key, "join_pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        # Two independent source reads: each side of a stream-stream join
-        # tracks its own watermark/state (a self-joined single scan works
-        # too, but separate reads mirror the production two-topic shape).
-        purchases = (
-            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("event_time", "10 minutes")
-            .alias("p")
-        )
-        clicks = (
-            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
-            .filter(F.col("event_type") == "click")
-            .withWatermark("event_time", "10 minutes")
-            .alias("c")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                "p.user_id = c.user_id"
-                " AND c.event_time >= p.event_time - interval 30 minutes"
-                " AND c.event_time < p.event_time"
-            ),
-            "inner",
-        ).select(
-            F.col("p.user_id").alias("user_id"),
-            F.col("p.event_id").alias("purchase_id"),
-            F.col("c.event_id").alias("click_id"),
-            F.unix_micros("p.event_time").alias("purchase_ts_us"),
-            F.unix_micros("c.event_time").alias("click_ts_us"),
-            F.expr(
-                "(unix_micros(p.event_time) - unix_micros(c.event_time))"
-                " DIV 1000000"
-            ).alias("gap_s"),
-            F.col("p.value").alias("purchase_value"),
-            F.col("c.value").alias("click_value"),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stream-join pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    return spark.read.parquet(sink).select(
+    sink = _replay_sink(
+        spark, key, "join_pipeline" + suffix,
+        lambda _: _click_purchase_join(spark, env_dir, mft, "inner"),
+    )
+    return sink.select(
         "user_id",
         "purchase_id",
         "click_id",
@@ -615,31 +605,13 @@ def q_user_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
-    if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
-        write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
-
-    run_dir = os.path.join(_REPLAY_ROOT, key, "profile_pipeline")
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        parsed = parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=None))
-        prof = running_user_profile(parsed)
-        q = (
-            prof.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("profile pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    emitted = spark.read.parquet(sink)
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
+    emitted = _replay_sink(
+        spark, key, "profile_pipeline",
+        lambda _: running_user_profile(
+            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+        ),
+    )
     # Final profile per user = the emission with the highest n_events
     # (n is monotone across micro-batches; a single-batch drain emits one
     # row per user and this reduces to identity).
@@ -691,14 +663,9 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
-    run_dir = os.path.join(
-        _REPLAY_ROOT, key, "outer_join_pipeline" + _chunk_suffix(chunks)
-    )
-    env_dir = os.path.join(run_dir, "envelopes")
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
+
+    def build(run_dir: str) -> DataFrame:
+        env_dir = os.path.join(run_dir, "envelopes")
         events = t["events"]
         # This pipeline is ALREADY file-per-micro-batch (the flush files
         # below rely on it); the chunks conf additionally slices the real
@@ -732,53 +699,12 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type string, value double",
             ).withColumn("ts", F.col("ts") + F.expr(f"INTERVAL {hours} HOURS"))
             write_envelopes(flush, env_dir, mode="append")
-        purchases = (
-            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=1))
-            .filter(F.col("event_type") == "purchase")
-            .withWatermark("event_time", "10 minutes")
-            .alias("p")
-        )
-        clicks = (
-            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=1))
-            .filter(F.col("event_type") == "click")
-            .withWatermark("event_time", "10 minutes")
-            .alias("c")
-        )
-        joined = purchases.join(
-            clicks,
-            F.expr(
-                "p.user_id = c.user_id"
-                " AND c.event_time >= p.event_time - interval 30 minutes"
-                " AND c.event_time < p.event_time"
-            ),
-            "left_outer",
-        ).select(
-            F.col("p.user_id").alias("user_id"),
-            F.col("p.event_id").alias("purchase_id"),
-            F.col("c.event_id").alias("click_id"),
-            F.unix_micros("p.event_time").alias("purchase_ts_us"),
-            F.unix_micros("c.event_time").alias("click_ts_us"),
-            F.expr(
-                "(unix_micros(p.event_time) - unix_micros(c.event_time))"
-                " DIV 1000000"
-            ).alias("gap_s"),
-            F.col("p.value").alias("purchase_value"),
-            F.col("c.value").alias("click_value"),
-        )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("outer stream-join pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    return spark.read.parquet(sink).filter("user_id >= 0").select(
+        return _click_purchase_join(spark, env_dir, 1, "left_outer")
+
+    sink = _replay_sink(
+        spark, key, "outer_join_pipeline" + _chunk_suffix(chunks), build
+    )
+    return sink.filter("user_id >= 0").select(
         "user_id",
         "purchase_id",
         "click_id",
@@ -827,33 +753,17 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
     env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
-
-    run_dir = os.path.join(_REPLAY_ROOT, key, "hh_pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        # Chunk-safe by construction: MG state persists across batches, so
-        # the FINAL summary (highest-n emission per shard, selected below)
-        # carries the no-false-negative guarantee whatever the batching,
-        # and the exact recount is invariant on candidate supersets.
-        parsed = parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
-        summaries = streaming_heavy_hitter_candidates(parsed, "user_id")
-        q = (
-            summaries.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("heavy-hitter pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-
-    emitted = spark.read.parquet(sink)
+    # Chunk-safe by construction: MG state persists across batches, so
+    # the FINAL summary (highest-n emission per shard, selected below)
+    # carries the no-false-negative guarantee whatever the batching,
+    # and the exact recount is invariant on candidate supersets.
+    emitted = _replay_sink(
+        spark, key, "hh_pipeline" + suffix,
+        lambda _: streaming_heavy_hitter_candidates(
+            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft)),
+            "user_id",
+        ),
+    )
     # Final summary per shard = the emission at that shard's highest n
     # (n is monotone across micro-batches).
     last_n = emitted.groupBy("shard").agg(F.max("shard_n").alias("shard_n"))
@@ -981,16 +891,14 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
-    src_dir = os.path.join(_REPLAY_ROOT, key, "neardup_src" + suffix)
-    src_marker = os.path.join(src_dir, "_SRC_COMPLETE")
     docs = t["documents"].selectExpr(
         "doc_id",
         "text",
         f"timestamp_seconds(unix_timestamp(TIMESTAMP '2024-01-01 00:00:00')"
         f" + doc_id * {_ND_SPACING_S}) AS ats",
     )
-    if not os.path.exists(src_marker):
-        shutil.rmtree(src_dir, ignore_errors=True)
+
+    def write_src(src_dir: str) -> None:
         if chunks > 1:
             # Arrival-time-ordered chunk files: an unordered multi-file
             # drain would deliver some slices below the advanced watermark
@@ -1002,14 +910,12 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             docs.write.mode("overwrite").parquet(os.path.join(src_dir, "data"))
-        with open(src_marker, "w"):
-            pass
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "neardup_pipeline" + suffix)
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    run_marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(run_marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
+    src_dir = _memoized(
+        os.path.join(_REPLAY_ROOT, key, "neardup_src" + suffix), write_src
+    )
+
+    def build(_run_dir: str) -> DataFrame:
         schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType()),
@@ -1024,7 +930,7 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands = stream.selectExpr(
             "doc_id", "ats", f"explode({_nd_band_expr('spark')}) AS b"
         ).select("doc_id", "ats", "b.band_id", "b.band_key")
-        agg = (
+        return (
             bands.withWatermark("ats", f"{_ND_WATERMARK_S} seconds")
             .groupBy(
                 F.window("ats", f"{_ND_WINDOW_S} seconds").alias("w"),
@@ -1037,20 +943,8 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("doc_id").alias("last_doc"),
             )
         )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("stream-neardup pipeline did not drain within 600s")
-        with open(run_marker, "w"):
-            pass
-    out = spark.read.parquet(sink)
+
+    out = _replay_sink(spark, key, "neardup_pipeline" + suffix, build)
     return out.where(F.col("n_claims") >= 2).select(
         F.unix_timestamp(F.col("w.start")).alias("win_start"),
         F.col("band_id").cast("int").alias("band_id"),
@@ -1117,15 +1011,9 @@ JOIN dim d2
 def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
-    if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
-        write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
 
-    run_dir = os.path.join(_REPLAY_ROOT, key, "scd2_enrich_pipeline")
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
+    def build(_run_dir: str) -> DataFrame:
         from pyspark.sql import Window
 
         ev = (
@@ -1155,7 +1043,7 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         facts = (
-            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=None))
+            parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
             .filter(F.col("event_type") == "purchase")
             .withWatermark("event_time", "10 minutes")
             .select(
@@ -1165,7 +1053,7 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value",
             )
         )
-        joined = facts.join(
+        return facts.join(
             dim,
             (facts.user_id == dim.d_user_id)
             & (facts.ts_us >= dim.valid_from)
@@ -1180,20 +1068,9 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             (facts.ts_us - F.col("valid_from")).cast("long").alias("state_age_us"),
             facts.value.alias("purchase_value"),
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("scd2-enrich pipeline did not drain within 600s")
-        with open(marker, "w"):
-            pass
-    return spark.read.parquet(sink).select(
+
+    sink = _replay_sink(spark, key, "scd2_enrich_pipeline", build)
+    return sink.select(
         "user_id",
         "purchase_id",
         "purchase_ts_us",
@@ -1222,50 +1099,26 @@ def run_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py::test_tws_processor_state_algebra, and this
     E2E path runs (and is oracle-compared in the test) wherever protobuf
     exists."""
+    from ..plans.invariance import with_conf
     from .stateful import running_type_profile_tws
 
     t = load_tables(spark, sf_dir, ["events"])
     key = _replay_key(sf_dir)
-    env_dir = os.path.join(_REPLAY_ROOT, key, "envelopes")
-    if not os.path.exists(os.path.join(env_dir, "_SUCCESS")):
-        write_envelopes(t["events"], env_dir, parallel=_parallel_width(spark))
-
-    run_dir = os.path.join(_REPLAY_ROOT, key, "tws_pipeline")
-    sink, ckpt = os.path.join(run_dir, "sink"), os.path.join(run_dir, "ckpt")
-    marker = os.path.join(run_dir, "_REPLAY_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(run_dir, ignore_errors=True)
-        prov_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(prov_key, None)
-        spark.conf.set(
-            prov_key,
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
+    saved = with_conf(spark, {
+        "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
+    })
+    try:
+        emitted = _replay_sink(
+            spark, key, "tws_pipeline",
+            lambda _: running_type_profile_tws(
+                parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
+            ),
         )
-        try:
-            parsed = parse_cdc(
-                file_replay_source(spark, env_dir, max_files_per_trigger=None)
-            )
-            prof = running_type_profile_tws(parsed)
-            q = (
-                prof.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise TimeoutError("tws pipeline did not drain within 600s")
-        finally:
-            if prev is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prev)
-        with open(marker, "w"):
-            pass
-    emitted = spark.read.parquet(sink)
+    finally:
+        with_conf(spark, saved)
     # Final profile per user = the emission with the highest n_events
     # (monotone across micro-batches; single-batch drains emit one row).
     w = (

@@ -99,7 +99,11 @@ def test_merge_upsert_rewrites_only_affected_partitions(spark, trips, tmp_path):
         [(4, "2024-01-02", 400.0, False), (999, "2024-01-02", 999.0, False)],
         "id long, day string, amount double, __del boolean",
     )
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode_key)
     t.merge_upsert(updates, keys=["id"], delete_col="__del")
+    # Dynamic overwrite is a per-write option: the session conf is untouched.
+    assert spark.conf.get(mode_key) == session_mode
     assert _partition_snapshot(str(tmp_path / "t" / "day=2024-01-01")) == before_d1
     assert _partition_snapshot(str(tmp_path / "t" / "day=2024-01-03")) == before_d3
     df = t.read()
