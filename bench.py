@@ -69,9 +69,8 @@ HEADLINE = [
     "q_sessionization",
     "q_contamination",
     "q_asof_join",
-    # Round-3 flagships: CC dedup (q_dedup_clusters' body), streaming session
-    # windows, char-shingle Jaccard, int8 quantization, quality gate.
-    "q_dedup_clusters_star",
+    # Round-3 flagships: streaming session windows, char-shingle Jaccard,
+    # int8 quantization, quality gate.
     "q_session_stream",
     "q_dedup_chargram",
     "q_embedding_quantize",
@@ -260,7 +259,7 @@ HEAVY_TAIL = [
     "q_dbscan",
     "q_dedup_chargram",
     "q_dedup_ppjoin",
-    "q_dedup_clusters_star",
+    "q_dedup_clusters",
     "q_pagerank",
     "q_triangle_count",
     "q_hits",

@@ -78,6 +78,50 @@ def _partition_subdir(pcols: list[str], part: tuple) -> str:
     )
 
 
+def _added_fields(
+    current: T.StructType, incoming: T.StructType, what: str
+) -> list[T.StructField]:
+    """The merge-schema rule both lake tables share: a column present on
+    both sides must keep its value type (parquet has no transparent type
+    widening, so a conflict raises ValidationError naming ``what``);
+    returns the incoming fields the current schema lacks."""
+    have = {f.name: f for f in current.fields}
+    for f in incoming.fields:
+        old = have.get(f.name)
+        if old is not None and _nullability_normalized(
+            old.dataType
+        ) != _nullability_normalized(f.dataType):
+            raise ValidationError(
+                f"{what}: column {f.name!r} type conflict {old.dataType} vs "
+                f"{f.dataType}"
+            )
+    return [f for f in incoming.fields if f.name not in have]
+
+
+def _merge_batch(
+    updates: DataFrame, keys: list[str], order_col: str | None, delete_col: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """The MERGE batch rule both lake tables share: keep the last write per
+    key by ``order_col``, then return (inserts, all_keys): the rows not
+    flagged by ``delete_col`` (which is dropped), and every key the batch
+    touches — updated and deleted keys alike leave the table."""
+    from pyspark.sql import Window
+
+    if order_col:
+        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+        updates = (
+            updates.withColumn("__rn", F.row_number().over(w))
+            .filter("__rn = 1")
+            .drop("__rn")
+        )
+    inserts = updates
+    if delete_col:
+        inserts = updates.filter(
+            ~F.coalesce(F.col(delete_col), F.lit(False))
+        ).drop(delete_col)
+    return inserts, updates.select(*keys)
+
+
 class TxnLedger:
     """The Delta `txn` (appId, version) pattern as a mixin: a foreachBatch
     sink records the highest micro-batch id it has committed per writer app;
@@ -196,18 +240,8 @@ class LakeTable(TxnLedger):
         merged_schema: T.StructType | None = None
         if merge_schema and self.exists():
             current = self.read().schema
-            cur_by_name = {f.name: f for f in current.fields}
-            for f in df.schema.fields:
-                have = cur_by_name.get(f.name)
-                if have is not None and _nullability_normalized(
-                    have.dataType
-                ) != _nullability_normalized(f.dataType):
-                    raise ValidationError(
-                        f"append(merge_schema=True): column {f.name!r} type "
-                        f"conflict {have.dataType} vs {f.dataType}"
-                    )
-            new_fields = [f for f in df.schema.fields if f.name not in cur_by_name]
-            if new_fields or {f.name for f in df.schema.fields} != set(cur_by_name):
+            new_fields = _added_fields(current, df.schema, "append(merge_schema=True)")
+            if new_fields or set(df.columns) != set(current.names):
                 merged_schema = T.StructType(list(current.fields) + new_fields)
         elif not merge_schema and self.exists():
             current_names = set(self.read().columns)
@@ -398,23 +432,7 @@ class LakeTable(TxnLedger):
         partition columns the whole table rewrites — partition your CDC
         landing tables.
         """
-        from pyspark.sql import Window
-
-        if order_col:
-            w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-            updates = (
-                updates.withColumn("__rn", F.row_number().over(w))
-                .filter("__rn = 1")
-                .drop("__rn")
-            )
-        if delete_col:
-            inserts = updates.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-                delete_col
-            )
-            all_keys = updates.select(*keys)
-        else:
-            inserts = updates
-            all_keys = updates.select(*keys)
+        inserts, all_keys = _merge_batch(updates, keys, order_col, delete_col)
         if not self.exists():
             self.append(inserts)
             return

@@ -1046,20 +1046,6 @@ FROM labels
 
 
 @df_query(
-    "q_dedup_clusters_star",
-    duck_sql=_cluster_oracle_sql(DUCK),
-    tables=["documents"],
-    doc="Dedup clustering, registered under the name of its former "
-    "star-contraction variant so bench and retry-invariance runs keep "
-    "their query: the same plan as q_dedup_clusters (Jaccard >= 0.8 pair "
-    "graph -> the adaptive connected_components, which reaches its "
-    "fixpoint in min-label propagation on these diameter-2-3 dup clusters "
-    "and star-contracts (Kiveris et al. SoCC'14) only chain-shaped "
-    "graphs), checked against the same recursive-CTE transitive-closure "
-    "oracle. cluster_id = component min doc_id, singletons label "
-    "themselves, is_canonical marks the kept row.",
-)
-@df_query(
     "q_dedup_clusters",
     duck_sql=_cluster_oracle_sql(DUCK),
     tables=["documents"],

@@ -242,7 +242,6 @@ _DRIVER_PRIORITY: list[str] = [
     "q_value_percentiles_approx",
     "q_schema_evolution",
     "q_session_stream",
-    "q_dedup_clusters_star",
     # round-3 continuation (this session) — queue behind the earlier
     # never-checked queries; the checked-history rotation in all_queries()
     # moves them into the cap as older entries earn driver rows.

@@ -207,7 +207,17 @@ def drain(writer: DataStreamWriter, what: str) -> None:
     checkpointLocation) as one availableNow drain: process all pending
     input, then stop. Returns only once the drain completed; a drain still
     running after DRAIN_TIMEOUT_S is stopped and raises TimeoutError naming
-    ``what``, and a failed query raises its StreamingQueryException."""
+    ``what``, and a failed query raises its StreamingQueryException.
+
+    Limit: the timeout cannot bound a hung ``foreachBatch`` callback.
+    ``stop()`` waits for the in-flight batch to return, because
+    ``spark.sql.streaming.stopTimeout`` defaults to 0 (wait forever), so
+    TimeoutError arrives only when the callback ends. A positive
+    stopTimeout is not used on purpose: on pyspark 4.1.2 ``stop()`` then
+    raises after the timeout while the query stays in
+    ``spark.streams.active`` and the callback keeps writing, so a batch
+    could still write after TimeoutError was raised — for example into a
+    replay run dir that the caller is clearing for a re-run."""
     q = writer.trigger(availableNow=True).start()
     if not q.awaitTermination(DRAIN_TIMEOUT_S):
         q.stop()

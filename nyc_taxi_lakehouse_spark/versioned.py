@@ -10,6 +10,12 @@ commit model — natively:
   write fresh uniquely-named part files; deletes rewrite survivors as new
   files), and a JSON manifest ``_log/v{N}.json`` records the live file set,
   schema, and operation of each version;
+- every operation reads **one snapshot** and commits against exactly that
+  version: it lists the log once, parses one manifest once (``_snapshot``),
+  works from that snapshot alone, and writes the next manifest as the
+  snapshot's fields plus its own changes, put-if-absent at snapshot+1. A
+  writer that committed in between makes the operation fail with
+  ConcurrentCommitError; it never mixes two versions;
 - ``read(version=...)`` pins any historical snapshot (time travel — Delta's
   ``VERSION AS OF``): the scan lists nothing, it reads exactly the
   manifest's files with partition values parsed via basePath;
@@ -21,29 +27,60 @@ commit model — natively:
 
 Scale posture: manifests are metadata-sized (one relative path per live
 file — the thing Delta stores as add-actions); commits append one small
-JSON object per mutation; no driver-side row data ever. The added-files
-probe is one recursive listing of the table root per commit — on an object
-store Delta replaces that with transaction-log bookkeeping, the documented
-1:1 mapping. Single-writer, like every driver-side maintenance path here.
+JSON object per mutation; no driver-side row data ever. Data files land
+through a private per-commit staging directory, so concurrent writers
+never see each other's files before the log commit.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import math
 import os
+import re
+import uuid
+from dataclasses import dataclass, field, replace
+from typing import NoReturn
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fs import LakeFS
-from .lake import TxnLedger
-from .lake import ValidationError, _nullability_normalized
+from .lake import (
+    TxnLedger,
+    ValidationError,
+    _added_fields,
+    _merge_batch,
+    _partition_filter,
+    _partition_subdir,
+)
 
 
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed the same version first (optimistic
     concurrency, Delta-protocol style): re-read the table and retry."""
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """One committed version, parsed once: what an operation reads from the
+    log. ``version`` is None for a table with no commit yet. A commit
+    carries every field but ``version`` and ``op`` forward unless the
+    operation changes it; ``partition_cols`` is the writer's own."""
+
+    version: int | None = None
+    op: str = ""
+    files: tuple[str, ...] = ()
+    schema: T.StructType | None = None
+    partition_cols: tuple[str, ...] = ()
+    base: str | None = None
+    constraints: dict = field(default_factory=dict)
+    column_mapping: dict = field(default_factory=dict)
+    generated_cols: dict = field(default_factory=dict)
+    retired_physical: tuple[str, ...] = ()
+    stats: dict = field(default_factory=dict)
 
 
 class VersionedLakeTable(TxnLedger):
@@ -101,11 +138,39 @@ class VersionedLakeTable(TxnLedger):
             )
         return json.loads(self.fs.read_text(p))
 
+    def _snapshot(self, version: int | None = None) -> _Snapshot:
+        """The table as of ``version`` (default: the latest, found by one
+        log listing), its manifest read and parsed once. The only manifest
+        reader: every operation takes one snapshot and works from it."""
+        if version is None:
+            version = self.latest_version()
+            if version is None:
+                return _Snapshot()
+        m = self._manifest(version)
+        return _Snapshot(
+            version=version,
+            op=m["op"],
+            files=tuple(m["files"]),
+            schema=T.StructType.fromJson(m["schema"]),
+            partition_cols=tuple(m.get("partition_cols") or ()),
+            base=m.get("base"),
+            constraints=m.get("constraints", {}),
+            column_mapping=m.get("column_mapping", {}),
+            generated_cols=m.get("generated_cols", {}),
+            retired_physical=tuple(m.get("retired_physical", ())),
+            stats=m.get("stats", {}),
+        )
+
+    def _nonempty(self, snap: _Snapshot, what: str) -> _Snapshot:
+        if snap.version is None:
+            raise ValidationError(f"{what}: empty versioned table at {self.path}")
+        return snap
+
     def history(self) -> list[dict]:
         """Operation ledger, oldest first (Delta DESCRIBE HISTORY)."""
         return [
-            {k: m[k] for k in ("version", "op", "n_files")}
-            for m in (self._manifest(v) for v in self.versions())
+            {"version": s.version, "op": s.op, "n_files": len(s.files)}
+            for s in map(self._snapshot, self.versions())
         ]
 
     # -- file probes --------------------------------------------------------
@@ -130,90 +195,48 @@ class VersionedLakeTable(TxnLedger):
             walk("")
         return found
 
-    def _commit(
-        self,
-        op: str,
-        live: set[str],
-        schema: T.StructType,
-        base: str | None = None,
-        expected_version: int | None = None,
-        constraints: dict[str, str] | None = None,
-        column_mapping: dict[str, str] | None = None,
-        retired_physical: list[str] | None = None,
-        stats_override: dict | None = None,
-        generated_cols: dict[str, str] | None = None,
-    ) -> int:
-        """``expected_version`` is the snapshot version this commit's live
-        set was DERIVED from (None for callers that did not read state).
-        The put-if-absent write targets exactly expected+1 — so a racer
+    def _commit(self, snap: _Snapshot, op: str, **changes) -> int:
+        """Commit the version after ``snap``: its manifest is ``snap``'s
+        fields with ``changes`` (files, schema, constraints, ...) applied.
+        The put-if-absent write targets exactly snap.version+1, so a racer
         that committed in between makes THIS commit fail with
         ConcurrentCommitError instead of silently dropping the racer's
         files from the live set (the lost-update mode the concurrent
-        stress test caught: recomputing latest_version() here let a
-        read-modify-write land on a fresh version number while carrying a
-        stale live set)."""
-        if expected_version is None:
-            expected_version = self.latest_version() or 0
-        version = expected_version + 1
-        self.fs.mkdirs(self._log_dir)
+        stress test caught). Per-file stats carry over for files the
+        snapshot already described; other files get theirs from the
+        parquet footer when ``stats_cols`` is set."""
+        new = replace(snap, **changes)
+        version = (snap.version or 0) + 1
+        files = sorted(new.files)
         manifest = {
             "version": version,
             "op": op,
-            "n_files": len(live),
-            "files": sorted(live),
-            "schema": schema.jsonValue(),
+            "n_files": len(files),
+            "files": files,
+            "schema": new.schema.jsonValue(),
             "partition_cols": self.partition_cols,
         }
-        if base is not None:
-            manifest["base"] = base
-        # CHECK constraints, the column mapping, and the retired-physical
-        # ledger travel in the manifest like the schema: every commit
-        # carries the previous version's set forward unless the caller
-        # overrides it explicitly.
-        if constraints is None:
-            constraints = self.check_constraints(expected_version or None)
-        if constraints:
-            manifest["constraints"] = constraints
-        if column_mapping is None:
-            column_mapping = self.column_mapping(expected_version or None)
-        if column_mapping:
-            manifest["column_mapping"] = column_mapping
-        if generated_cols is None:
-            generated_cols = self.generated_columns(expected_version or None)
-        if generated_cols:
-            manifest["generated_cols"] = generated_cols
-        retired = retired_physical
-        if retired is None and expected_version:
-            try:
-                retired = self._manifest(expected_version).get("retired_physical", [])
-            except Exception:
-                retired = []
-        if retired:
-            manifest["retired_physical"] = retired
-        if stats_override is not None:
-            if stats_override:
-                manifest["stats"] = stats_override
-        elif self.stats_cols:
-            prev_stats: dict = {}
-            if expected_version >= 1:
-                try:
-                    prev_stats = self._manifest(expected_version).get("stats", {})
-                except Exception:
-                    prev_stats = {}
+        carried = {
+            "base": new.base,
+            "constraints": new.constraints,
+            "column_mapping": new.column_mapping,
+            "generated_cols": new.generated_cols,
+            "retired_physical": list(new.retired_physical),
+        }
+        manifest.update((k, v) for k, v in carried.items() if v)
+        stats = new.stats
+        if "stats" not in changes:
             stats = {}
-            for f in manifest["files"]:
-                if f in prev_stats:
-                    stats[f] = prev_stats[f]  # carried-over file, stats valid
-                else:
-                    s = self._footer_stats(f)
-                    if s:
-                        stats[f] = s
+            for f in files:
+                if f in snap.stats:
+                    stats[f] = snap.stats[f]
+                elif self.stats_cols and (
+                    s := self._footer_stats(f, new.column_mapping)
+                ):
+                    stats[f] = s
+        if stats or self.stats_cols:
             manifest["stats"] = stats
-        # Optimistic concurrency control (Delta protocol): the manifest for
-        # version N is created put-if-absent. A concurrent writer that
-        # committed N first wins; this writer gets ConcurrentCommitError
-        # instead of silently overwriting the log — callers re-read the
-        # table and retry their transaction against the new snapshot.
+        self.fs.mkdirs(self._log_dir)
         try:
             self.fs.write_text_exclusive(
                 self._manifest_path(version), json.dumps(manifest)
@@ -225,16 +248,12 @@ class VersionedLakeTable(TxnLedger):
             ) from None
         return version
 
+    # -- CHECK constraints and generated columns ----------------------------
+
     def check_constraints(self, version: int | None = None) -> dict[str, str]:
         """The CHECK constraints in force as of ``version`` (default
         latest): name -> SQL predicate. Empty for an empty table."""
-        v = self.latest_version() if version is None else version
-        if not v:
-            return {}
-        try:
-            return dict(self._manifest(v).get("constraints", {}))
-        except Exception:
-            return {}
+        return dict(self._snapshot(version).constraints)
 
     def add_check_constraint(self, name: str, predicate: str) -> int:
         """Delta's ALTER TABLE ADD CONSTRAINT ... CHECK: validate the
@@ -245,14 +264,11 @@ class VersionedLakeTable(TxnLedger):
         write. SQL CHECK semantics: a row violates only when the predicate
         evaluates to FALSE — NULL passes (add an IS NOT NULL conjunct for
         not-null enforcement)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError("add_check_constraint: empty table")
-        cons = self.check_constraints(latest)
-        if name in cons:
+        snap = self._nonempty(self._snapshot(), "add_check_constraint")
+        if name in snap.constraints:
             raise ValidationError(f"constraint {name!r} already exists")
         bad = (
-            self.read(latest)
+            self._scan(snap)
             .where(F.coalesce(~F.expr(predicate), F.lit(False)))
             .limit(1)
             .count()
@@ -262,34 +278,19 @@ class VersionedLakeTable(TxnLedger):
                 f"add_check_constraint({name!r}): existing rows violate "
                 f"({predicate})"
             )
-        m = self._manifest(latest)
-        cons[name] = predicate
         return self._commit(
-            "add_constraint",
-            set(m["files"]),
-            T.StructType.fromJson(m["schema"]),
-            expected_version=latest,
-            constraints=cons,
+            snap, "add_constraint", constraints={**snap.constraints, name: predicate}
         )
 
     def drop_check_constraint(self, name: str) -> int:
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError("drop_check_constraint: empty table")
-        cons = self.check_constraints(latest)
-        if name not in cons:
+        snap = self._nonempty(self._snapshot(), "drop_check_constraint")
+        if name not in snap.constraints:
             raise ValidationError(f"constraint {name!r} does not exist")
-        del cons[name]
-        m = self._manifest(latest)
-        return self._commit(
-            "drop_constraint",
-            set(m["files"]),
-            T.StructType.fromJson(m["schema"]),
-            expected_version=latest,
-            constraints=cons,
-        )
+        cons = {n: p for n, p in snap.constraints.items() if n != name}
+        return self._commit(snap, "drop_constraint", constraints=cons)
 
-    def _constraint_metrics(self) -> dict:
+    @staticmethod
+    def _constraint_metrics(snap: _Snapshot) -> dict:
         """Per-constraint violation counters as aggregate Columns — ridden
         on the staging write's Observation, so enforcement costs zero
         extra passes."""
@@ -297,19 +298,13 @@ class VersionedLakeTable(TxnLedger):
             f"__check__{n}": F.sum(
                 F.coalesce(~F.expr(p), F.lit(False)).cast("long")
             )
-            for n, p in self.check_constraints().items()
+            for n, p in snap.constraints.items()
         }
 
     def generated_columns(self, version: int | None = None) -> dict[str, str]:
         """Generated columns in force as of ``version``: name -> SQL
         generation expression (Delta GENERATED ALWAYS AS)."""
-        v = self.latest_version() if version is None else version
-        if not v:
-            return {}
-        try:
-            return dict(self._manifest(v).get("generated_cols", {}))
-        except Exception:
-            return {}
+        return dict(self._snapshot(version).generated_cols)
 
     def add_generated_column(self, name: str, expr: str, dtype: str) -> int:
         """Delta's GENERATED ALWAYS AS: a metadata-only commit adding
@@ -319,47 +314,30 @@ class VersionedLakeTable(TxnLedger):
         either derives the column automatically (batch doesn't carry it)
         or validates the provided values match the expression null-safely
         and rejects the batch otherwise."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError("add_generated_column: empty table")
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        if name in [f.name for f in schema.fields]:
+        snap = self._nonempty(self._snapshot(), "add_generated_column")
+        if name in snap.schema.names:
             raise ValidationError(f"add_generated_column: {name!r} exists")
-        gen = self.generated_columns(latest)
-        gen[name] = expr
-        new_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(name, T._parse_datatype_string(dtype), True)]
-        )
+        new_field = T.StructField(name, T._parse_datatype_string(dtype), True)
         return self._commit(
+            snap,
             "add_generated_column",
-            set(m["files"]),
-            new_schema,
-            expected_version=latest,
-            generated_cols=gen,
+            schema=T.StructType(list(snap.schema.fields) + [new_field]),
+            generated_cols={**snap.generated_cols, name: expr},
         )
 
-    def _apply_generated(self, df: DataFrame) -> tuple[DataFrame, dict]:
+    @staticmethod
+    def _apply_generated(snap: _Snapshot, df: DataFrame) -> tuple[DataFrame, dict]:
         """Derive absent generated columns (cast to their declared table
         type); emit null-safe mismatch counters (ridden on the write
         Observation) for provided ones."""
-        gen = self.generated_columns()
         checks: dict = {}
-        if not gen:
-            return df, checks
-        latest = self.latest_version()
-        types = {
-            f.name: f.dataType
-            for f in T.StructType.fromJson(self._manifest(latest)["schema"]).fields
-        }
-        for name, expr in gen.items():
+        for name, expr in snap.generated_cols.items():
             if name in df.columns:
                 checks[f"__gen__{name}"] = F.sum(
                     F.expr(f"NOT (({name}) <=> ({expr}))").cast("long")
                 )
             else:
-                df = df.withColumn(name, F.expr(expr).cast(types[name]))
+                df = df.withColumn(name, F.expr(expr).cast(snap.schema[name].dataType))
         return df, checks
 
     # -- column mapping (Delta column-mapping semantics) ---------------------
@@ -367,13 +345,7 @@ class VersionedLakeTable(TxnLedger):
     def column_mapping(self, version: int | None = None) -> dict[str, str]:
         """logical column name -> physical parquet column name as of
         ``version`` (default latest). Identity when never renamed."""
-        v = self.latest_version() if version is None else version
-        if not v:
-            return {}
-        try:
-            return dict(self._manifest(v).get("column_mapping", {}))
-        except Exception:
-            return {}
+        return dict(self._snapshot(version).column_mapping)
 
     def _phys(self, name: str, mapping: dict[str, str]) -> str:
         return mapping.get(name, name)
@@ -388,6 +360,24 @@ class VersionedLakeTable(TxnLedger):
             ]
         )
 
+    def _refuse_referenced(self, snap: _Snapshot, col: str, what: str) -> None:
+        """Refuse ``what`` on a column that a CHECK constraint or another
+        generated column's rule references: the stored SQL text would
+        silently break."""
+        ref = re.compile(rf"\b{re.escape(col)}\b")
+        for cname, pred in snap.constraints.items():
+            if ref.search(pred):
+                raise ValidationError(
+                    f"{what}: column {col!r} is referenced by CHECK "
+                    f"constraint {cname!r} — drop it first"
+                )
+        for gname, gexpr in snap.generated_cols.items():
+            if gname != col and ref.search(gexpr):
+                raise ValidationError(
+                    f"{what}: column {col!r} is referenced by generated "
+                    f"column {gname!r} — drop it first"
+                )
+
     def rename_column(self, old: str, new: str) -> int:
         """Delta's ALTER TABLE RENAME COLUMN under column mapping: a
         METADATA-ONLY commit — no data file is rewritten; the logical
@@ -395,53 +385,38 @@ class VersionedLakeTable(TxnLedger):
         original physical parquet column, so every snapshot (old and new)
         still reads every file. Partition columns are refused (their
         physical identity is baked into the hive directory layout), as is
-        renaming a column referenced by a CHECK constraint (the stored
-        predicate text would silently break)."""
-        import re
-
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError("rename_column: empty table")
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        if old not in names:
+        renaming a column referenced by a CHECK constraint or a generated
+        column (the stored expression text would silently break). Per-file
+        stats keep their values under the new logical name."""
+        snap = self._nonempty(self._snapshot(), "rename_column")
+        if old not in snap.schema.names:
             raise ValidationError(f"rename_column: no column {old!r}")
-        if new in names:
+        if new in snap.schema.names:
             raise ValidationError(f"rename_column: {new!r} already exists")
         if old in self.partition_cols:
             raise ValidationError(
                 f"rename_column: {old!r} is a partition column (its physical "
                 "name is the hive directory layout)"
             )
-        for cname, pred in self.check_constraints(latest).items():
-            if re.search(rf"\b{re.escape(old)}\b", pred):
-                raise ValidationError(
-                    f"rename_column: column {old!r} is referenced by CHECK "
-                    f"constraint {cname!r} — drop it first"
-                )
-        for gname, gexpr in self.generated_columns(latest).items():
-            if gname == old or re.search(rf"\b{re.escape(old)}\b", gexpr):
-                raise ValidationError(
-                    f"rename_column: column {old!r} is a generated column or "
-                    f"referenced by generated column {gname!r}"
-                )
-        mapping = self.column_mapping(latest)
+        self._refuse_referenced(snap, old, "rename_column")
+        if old in snap.generated_cols:
+            raise ValidationError(f"rename_column: {old!r} is a generated column")
+        mapping = dict(snap.column_mapping)
         mapping[new] = mapping.pop(old, old)
-        new_schema = T.StructType(
+        schema = T.StructType(
             [
                 T.StructField(new if f.name == old else f.name, f.dataType, f.nullable)
-                for f in schema.fields
+                for f in snap.schema.fields
             ]
         )
-        stats_fix = None
-        if old in self.stats_cols:
-            self.stats_cols = [new if c == old else c for c in self.stats_cols]
-            stats_fix = (old, new)
-        version = self._commit_mapped(
-            "rename_column", m, new_schema, mapping, latest, stats_fix
+        self.stats_cols = [new if c == old else c for c in self.stats_cols]
+        stats = {
+            f: {(new if c == old else c): v for c, v in s.items()}
+            for f, s in snap.stats.items()
+        }
+        return self._commit(
+            snap, "rename_column", schema=schema, column_mapping=mapping, stats=stats
         )
-        return version
 
     def drop_column(self, name: str) -> int:
         """Delta's ALTER TABLE DROP COLUMN under column mapping: metadata-
@@ -449,116 +424,53 @@ class VersionedLakeTable(TxnLedger):
         snapshots) but the logical schema and mapping forget it; its
         physical name is RETIRED so a later re-added column of the same
         logical name gets a fresh physical identity instead of
-        resurrecting the dropped values from old files."""
-        import re
-
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError("drop_column: empty table")
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        if name not in [f.name for f in schema.fields]:
+        resurrecting the dropped values from old files. Dropping a
+        generated column retires its rule."""
+        snap = self._nonempty(self._snapshot(), "drop_column")
+        if name not in snap.schema.names:
             raise ValidationError(f"drop_column: no column {name!r}")
         if name in self.partition_cols:
             raise ValidationError(f"drop_column: {name!r} is a partition column")
-        for cname, pred in self.check_constraints(latest).items():
-            if re.search(rf"\b{re.escape(name)}\b", pred):
-                raise ValidationError(
-                    f"drop_column: column {name!r} is referenced by CHECK "
-                    f"constraint {cname!r} — drop it first"
-                )
-        gen = self.generated_columns(latest)
-        for gname, gexpr in gen.items():
-            if gname != name and re.search(rf"\b{re.escape(name)}\b", gexpr):
-                raise ValidationError(
-                    f"drop_column: column {name!r} is referenced by generated "
-                    f"column {gname!r} — drop it first"
-                )
-        gen.pop(name, None)  # dropping a generated column retires its rule
-        mapping = self.column_mapping(latest)
-        retired = list(m.get("retired_physical", []))
-        retired.append(self._phys(name, mapping))
-        mapping.pop(name, None)
-        new_schema = T.StructType([f for f in schema.fields if f.name != name])
-        if name in self.stats_cols:
-            self.stats_cols = [c for c in self.stats_cols if c != name]
-        return self._commit_mapped(
-            "drop_column", m, new_schema, mapping, latest, None, retired, gen
-        )
-
-    def _commit_mapped(
-        self,
-        op: str,
-        m: dict,
-        new_schema: T.StructType,
-        mapping: dict[str, str],
-        latest: int,
-        stats_fix: tuple[str, str] | None = None,
-        retired: list[str] | None = None,
-        generated_cols: dict[str, str] | None = None,
-    ) -> int:
-        """Metadata-only commit helper for rename/drop: same live set, new
-        logical schema + mapping (+ retired-physical ledger); per-file
-        stats are carried over with their logical keys renamed in place
-        (the physical footers are untouched by a metadata-only commit)."""
-        stats = dict(m.get("stats", {}))
-        if stats_fix:
-            old, new = stats_fix
-            stats = {
-                f: {(new if c == old else c): v for c, v in s.items()}
-                for f, s in stats.items()
-            }
+        self._refuse_referenced(snap, name, "drop_column")
+        mapping = dict(snap.column_mapping)
+        retired = (*snap.retired_physical, mapping.pop(name, name))
+        self.stats_cols = [c for c in self.stats_cols if c != name]
         return self._commit(
-            op,
-            set(m["files"]),
-            new_schema,
-            expected_version=latest,
-            constraints=self.check_constraints(latest),
+            snap,
+            "drop_column",
+            schema=T.StructType([f for f in snap.schema.fields if f.name != name]),
             column_mapping=mapping,
-            retired_physical=(
-                retired if retired is not None else list(m.get("retired_physical", []))
-            ),
-            stats_override=stats,
-            generated_cols=generated_cols,
+            retired_physical=retired,
+            generated_cols={g: e for g, e in snap.generated_cols.items() if g != name},
         )
 
-    def _read_physical(self, abs_files: list[str], schema: T.StructType) -> DataFrame:
-        """Read specific data files (physical column names) back as the
-        LOGICAL schema — the rewrite paths' (compact/cluster) twin of
-        read()'s aliasing."""
-        mapping = self.column_mapping()
-        df = (
-            self.spark.read.schema(self._physical_schema(schema, mapping))
-            .option("basePath", self.path)
-            .parquet(*abs_files)
-        )
-        if mapping:
-            df = df.select(
-                *[
-                    F.col(self._phys(f.name, mapping)).alias(f.name)
-                    for f in schema.fields
-                ]
-            )
-        return df
-
-    def _fresh_physical(self, logical: str, latest: int | None) -> str:
+    def _fresh_physical(self, snap: _Snapshot, logical: str) -> str:
         """Physical name for a NEW logical column: the logical name itself
         unless that physical identity is in use or retired (a re-added
         column must not resurrect a dropped column's values)."""
-        if not latest:
+        if snap.version is None:
             return logical
-        m = self._manifest(latest)
-        mapping = self.column_mapping(latest)
-        used = set(mapping.values()) | set(m.get("retired_physical", []))
-        schema = T.StructType.fromJson(m["schema"])
-        used |= {self._phys(f.name, mapping) for f in schema.fields}
+        mapping = snap.column_mapping
+        used = set(mapping.values()) | set(snap.retired_physical)
+        used |= {self._phys(f.name, mapping) for f in snap.schema.fields}
         if logical not in used:
             return logical
-        import uuid as _uuid
+        return f"{logical}_{uuid.uuid4().hex[:8]}"
 
-        return f"{logical}_{_uuid.uuid4().hex[:8]}"
+    def _mapping_with_new_cols(self, snap: _Snapshot, df: DataFrame) -> dict[str, str]:
+        """The effective column mapping for an append: the committed
+        mapping plus fresh physical identities for columns this batch
+        introduces (schema evolution under column mapping)."""
+        mapping = dict(snap.column_mapping)
+        prev = set(snap.schema.names) if snap.schema else set()
+        for c in df.columns:
+            if c not in prev and c not in mapping:
+                phys = self._fresh_physical(snap, c)
+                if phys != c:
+                    mapping[c] = phys
+        return mapping
 
-    def _footer_stats(self, rel: str) -> dict[str, list]:
+    def _footer_stats(self, rel: str, mapping: dict[str, str]) -> dict[str, list]:
         """Per-column [min, max] for one data file, read from the parquet
         FOOTER (row-group statistics aggregated across row groups) — no
         data pages are touched. Only numeric physical types are trusted:
@@ -571,7 +483,6 @@ class VersionedLakeTable(TxnLedger):
             md = pq.ParquetFile(path).metadata
         except Exception:
             return {}
-        mapping = self.column_mapping()
         logical_of = {self._phys(c, mapping): c for c in self.stats_cols}
         wanted = set(logical_of)
         out: dict[str, list] = {}
@@ -612,23 +523,21 @@ class VersionedLakeTable(TxnLedger):
         drop a possible match). With a z-ordered layout (cluster()) every
         filtered dimension prunes; with a single-column sort only that
         column does — q_zorder_layout is the audit of exactly this."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValidationError(f"empty versioned table at {self.path}")
-        m = self._manifest(v)
-        stats = m.get("stats", {})
-        kept = []
-        for f in m["files"]:
-            s = stats.get(f)
-            keep = True
-            if s:
-                for col, lo, hi in filters:
-                    if col in s and (s[col][0] > hi or s[col][1] < lo):
-                        keep = False
-                        break
-            if keep:
-                kept.append(f)
-        return kept, len(m["files"])
+        return self._prune(self._snapshot(version), filters)
+
+    def _prune(
+        self, snap: _Snapshot, filters: list[tuple[str, float, float]]
+    ) -> tuple[list[str], int]:
+        self._nonempty(snap, "prune_files")
+
+        def skippable(f: str) -> bool:
+            s = snap.stats.get(f) or {}
+            return any(
+                col in s and (s[col][0] > hi or s[col][1] < lo)
+                for col, lo, hi in filters
+            )
+
+        return [f for f in snap.files if not skippable(f)], len(snap.files)
 
     def read(
         self,
@@ -644,48 +553,58 @@ class VersionedLakeTable(TxnLedger):
         data skipping) and then applies the same predicates as WHERE
         clauses, so the result equals a full-scan filter — just cheaper.
         """
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise ValidationError(f"empty versioned table at {self.path}")
-        m = self._manifest(v)
-        schema = T.StructType.fromJson(m["schema"])
-        rel_files = m["files"]
-        if filters:
-            rel_files, _total = self.prune_files(filters, version=v)
-        # Shallow-clone manifests (clone_to) list ABSOLUTE paths into the
-        # source table; ordinary manifests list paths relative to this
-        # table's root. A post-clone append may mix both.
-        files = [
-            f if os.path.isabs(f) else os.path.join(self.path, f)
-            for f in rel_files
-        ]
-        if not files:
-            return self.spark.createDataFrame([], schema)
-        # Column mapping: files are read under their PHYSICAL names (the
-        # names renames never touch) and aliased back to the version's
-        # logical schema — the metadata-only rename/drop contract.
-        mapping = self.column_mapping(v)
-        reader = self.spark.read.schema(self._physical_schema(schema, mapping))
-        if self.partition_cols:
-            bases = {self.path if not os.path.isabs(f) else m.get("base", "")
-                     for f in rel_files}
-            if len(bases) > 1 or "" in bases:
-                raise ValidationError(
-                    "partitioned shallow clone with mixed file roots — "
-                    "compact() the clone to re-home its files first"
-                )
-            reader = reader.option("basePath", bases.pop())
-        df = reader.parquet(*files)
+        return self._scan(self._snapshot(version), filters)
+
+    def _scan(
+        self,
+        snap: _Snapshot,
+        filters: list[tuple[str, float, float]] | None = None,
+    ) -> DataFrame:
+        self._nonempty(snap, "read")
+        df = self._read_files(snap, self._prune(snap, filters)[0] if filters else snap.files)
+        for col, lo, hi in filters or ():
+            df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        return df
+
+    def _read_files(self, snap: _Snapshot, rel_files) -> DataFrame:
+        """Read ``rel_files`` of ``snap`` back as its LOGICAL schema.
+
+        Shallow-clone manifests (clone_to) list ABSOLUTE paths into the
+        source table, whose partition layout roots at the snapshot's base;
+        ordinary manifests list paths relative to this table's root, and a
+        post-clone append mixes both: each root's files are read with
+        their own basePath and the reads unioned. Files are read under
+        their PHYSICAL column names (the names renames never touch) and
+        aliased back to the logical schema — the metadata-only rename/drop
+        contract."""
+        roots: dict[str | None, list[str]] = {}
+        for f in rel_files:
+            if os.path.isabs(f):
+                roots.setdefault(snap.base, []).append(f)
+            else:
+                roots.setdefault(self.path, []).append(os.path.join(self.path, f))
+        if not roots:
+            return self.spark.createDataFrame([], snap.schema)
+        mapping = snap.column_mapping
+        frames = []
+        for root, files in roots.items():
+            reader = self.spark.read.schema(self._physical_schema(snap.schema, mapping))
+            if self.partition_cols:
+                if root is None:
+                    raise ValidationError(
+                        f"version {snap.version} lists shallow-clone files "
+                        "but records no base root to parse partitions from"
+                    )
+                reader = reader.option("basePath", root)
+            frames.append(reader.parquet(*files))
+        df = functools.reduce(DataFrame.unionByName, frames)
         if mapping:
             df = df.select(
                 *[
                     F.col(self._phys(f.name, mapping)).alias(f.name)
-                    for f in schema.fields
+                    for f in snap.schema.fields
                 ]
             )
-        if filters:
-            for col, lo, hi in filters:
-                df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
         return df
 
     # -- commits ------------------------------------------------------------
@@ -693,9 +612,9 @@ class VersionedLakeTable(TxnLedger):
     def _staged_write(
         self,
         df: DataFrame,
+        mapping: dict[str, str],
         subdir: str = "",
         partitioned: bool | None = None,
-        mapping: dict[str, str] | None = None,
     ) -> set[str]:
         """Write df's part files through a PRIVATE staging directory, then
         move them into the table layout; returns the relative paths added.
@@ -708,19 +627,13 @@ class VersionedLakeTable(TxnLedger):
         set diff attributes a racing writer's files to this commit. A
         per-commit staging dir (Delta writes files the same way: uniquely
         named, invisible until the log commit) gives each writer private
-        staging and an EXACT added-file list."""
-        import uuid as _uuid
+        staging and an EXACT added-file list.
 
-        # Data files always carry PHYSICAL column names; callers work in
-        # logical names (df comes from read() or the user). `mapping` lets
-        # append() include physical identities for columns added in this
-        # same commit.
-        eff = self.column_mapping() if mapping is None else mapping
-        if eff:
-            df = df.select(
-                *[F.col(c).alias(eff.get(c, c)) for c in df.columns]
-            )
-        stage = os.path.join(self.path, "_staging", _uuid.uuid4().hex)
+        Data files always carry PHYSICAL column names; callers work in
+        logical names and pass the mapping the commit will record."""
+        if mapping:
+            df = df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
+        stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
         writer = df.write.mode("overwrite")
         use_partitioning = (
             bool(self.partition_cols) if partitioned is None else partitioned
@@ -752,37 +665,63 @@ class VersionedLakeTable(TxnLedger):
         self.spark.catalog.refreshByPath(self.path)
         return {os.path.join(subdir, r) if subdir else r for r in added}
 
-    def _append_prep(
-        self, df: DataFrame, merge_schema: bool
-    ) -> tuple[T.StructType, set[str], int | None]:
-        """Schema-merge validation shared by append/wap_append: returns the
-        (possibly evolved) table schema, the previous live set, and the
-        snapshot version the commit derives from."""
-        latest = self.latest_version()
-        if latest is not None:
-            current_schema = T.StructType.fromJson(self._manifest(latest)["schema"])
-            cur_by_name = {f.name: f for f in current_schema.fields}
-            for f in df.schema.fields:
-                have = cur_by_name.get(f.name)
-                if have is not None and _nullability_normalized(
-                    have.dataType
-                ) != _nullability_normalized(f.dataType):
-                    raise ValidationError(
-                        f"append(merge_schema={merge_schema}): column {f.name!r} "
-                        f"type conflict {have.dataType} vs {f.dataType}"
-                    )
-            new_fields = [f for f in df.schema.fields if f.name not in cur_by_name]
+    def _checked_write(
+        self, df: DataFrame, mapping: dict[str, str], metrics: dict
+    ) -> tuple[set[str], dict, dict]:
+        """Stage ``df`` with the aggregate ``metrics`` riding the write job
+        (Observation — no extra pass). Returns (added files, the observed
+        metrics other than violation counters, {rule: violating rows} for
+        the ``__check__`` / ``__gen__`` counters that fired)."""
+        if metrics:
+            obs = Observation()
+            df = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
+        added = self._staged_write(df, mapping)
+        observed = dict(obs.get) if metrics else {}
+        rules = ("__check__", "__gen__")
+        bad = {
+            k.removeprefix("__check__").removeprefix("__gen__"): v
+            for k, v in observed.items()
+            if k.startswith(rules) and v and v > 0
+        }
+        kept = {k: v for k, v in observed.items() if not k.startswith(rules)}
+        return added, kept, bad
+
+    def _discard(self, added: set[str], message: str) -> NoReturn:
+        """Delete an uncommitted write's staged files and refuse it."""
+        for rel in added:
+            self.fs.delete(os.path.join(self.path, rel))
+        raise ValidationError(message)
+
+    def _stage_append(
+        self, snap: _Snapshot, df: DataFrame, merge_schema: bool, metrics: dict
+    ) -> tuple[set[str], dict, dict, dict]:
+        """Stage one append batch against ``snap`` (shared by append and
+        wap_append): derive absent generated columns, check the batch
+        schema, and write with ``metrics`` plus the CHECK and
+        generated-column counters observed. Returns the _checked_write
+        triple and the commit's changes."""
+        df, gen_checks = self._apply_generated(snap, df)
+        if snap.version is None:
+            schema = df.schema
+        else:
+            new_fields = _added_fields(
+                snap.schema, df.schema, f"append(merge_schema={merge_schema})"
+            )
             if new_fields and not merge_schema:
                 raise ValidationError(
                     f"append: new columns {[f.name for f in new_fields]} — pass "
                     "merge_schema=True to evolve the table schema"
                 )
-            schema = T.StructType(list(current_schema.fields) + new_fields)
-            prev_live = set(self._manifest(latest)["files"])
-        else:
-            schema = df.schema
-            prev_live = set()
-        return schema, prev_live, latest
+            schema = T.StructType(list(snap.schema.fields) + new_fields)
+        mapping = self._mapping_with_new_cols(snap, df)
+        checks = dict(metrics) | self._constraint_metrics(snap) | gen_checks
+        added, observed, bad = self._checked_write(df, mapping, checks)
+        changes = {
+            "files": set(snap.files) | added,
+            "schema": schema,
+            "column_mapping": mapping,
+        }
+        return added, observed, bad, changes
 
     def append(self, df: DataFrame, merge_schema: bool = False) -> int:
         """Commit an append. Data lands as fresh uniquely-named part files in
@@ -791,60 +730,17 @@ class VersionedLakeTable(TxnLedger):
         are enforced during the staging write (Observation — no extra
         pass); a violating batch is discarded before commit, Delta
         semantics."""
-        df, gen_checks = self._apply_generated(df)
-        schema, prev_live, latest = self._append_prep(df, merge_schema)
-        mapping = self._mapping_with_new_cols(df, latest)
-        checks = self._constraint_metrics() | gen_checks
-        if checks:
-            from pyspark.sql import Observation
+        return self._append(self._snapshot(), df, merge_schema)
 
-            obs = Observation()
-            df = df.observe(obs, *[c.alias(k) for k, c in checks.items()])
-        added = self._staged_write(df, mapping=mapping)
-        if checks:
-            observed = dict(obs.get)
-            bad = {
-                k.removeprefix("__check__").removeprefix("__gen__"): v
-                for k, v in observed.items()
-                if v and v > 0
-            }
-            if bad:
-                for rel in added:
-                    self.fs.delete(os.path.join(self.path, rel))
-                raise ValidationError(
-                    "append rejected by CHECK constraints / generated-"
-                    f"column validation (staged files discarded): {bad}"
-                )
-        return self._commit(
-            "append",
-            prev_live | added,
-            schema,
-            expected_version=latest or 0,
-            column_mapping=mapping,
-        )
-
-    def _mapping_with_new_cols(
-        self, df: DataFrame, latest: int | None
-    ) -> dict[str, str]:
-        """The effective column mapping for an append: the committed
-        mapping plus fresh physical identities for columns this batch
-        introduces (schema evolution under column mapping)."""
-        mapping = self.column_mapping(latest)
-        if latest:
-            prev = {
-                f.name
-                for f in T.StructType.fromJson(
-                    self._manifest(latest)["schema"]
-                ).fields
-            }
-        else:
-            prev = set()
-        for c in df.columns:
-            if c not in prev and c not in mapping:
-                phys = self._fresh_physical(c, latest)
-                if phys != c:
-                    mapping[c] = phys
-        return mapping
+    def _append(self, snap: _Snapshot, df: DataFrame, merge_schema: bool) -> int:
+        added, _, bad, changes = self._stage_append(snap, df, merge_schema, {})
+        if bad:
+            self._discard(
+                added,
+                "append rejected by CHECK constraints / generated-"
+                f"column validation (staged files discarded): {bad}",
+            )
+        return self._commit(snap, "append", **changes)
 
     def wap_append(
         self,
@@ -866,80 +762,62 @@ class VersionedLakeTable(TxnLedger):
         are deleted, no commit is written (readers never saw them — the
         audit happens BEFORE publish, unlike a post-append delete), and
         ValidationError lists every violation."""
-        from pyspark.sql import Observation
-
-        df, gen_checks = self._apply_generated(df)
-        schema, prev_live, latest = self._append_prep(df, merge_schema)
-        mapping = self._mapping_with_new_cols(df, latest)
-        all_metrics = dict(metrics) | self._constraint_metrics() | gen_checks
-        obs = Observation()
-        named = df.observe(obs, *[c.alias(k) for k, c in all_metrics.items()])
-        added = self._staged_write(named, mapping=mapping)
-        observed = dict(obs.get)
-        check_fails = [
-            f"CHECK {k.removeprefix('__check__').removeprefix('__gen__')}: "
-            f"{v} violating rows"
-            for k, v in observed.items()
-            if k.startswith(("__check__", "__gen__")) and v and v > 0
-        ]
-        observed = {
-            k: v
-            for k, v in observed.items()
-            if not k.startswith(("__check__", "__gen__"))
-        }
-        violations = check_fails + audit(observed)
-        if violations:
-            for rel in added:
-                self.fs.delete(os.path.join(self.path, rel))
-            raise ValidationError(
-                "wap_append audit failed (staged files discarded, nothing "
-                "published): " + "; ".join(violations)
-            )
-        version = self._commit(
-            "append",
-            prev_live | added,
-            schema,
-            expected_version=latest or 0,
-            column_mapping=mapping,
+        snap = self._snapshot()
+        added, observed, bad, changes = self._stage_append(
+            snap, df, merge_schema, metrics
         )
-        return version, observed
+        violations = [f"CHECK {k}: {v} violating rows" for k, v in bad.items()]
+        violations += audit(observed)
+        if violations:
+            self._discard(
+                added,
+                "wap_append audit failed (staged files discarded, nothing "
+                "published): " + "; ".join(violations),
+            )
+        return self._commit(snap, "append", **changes), observed
+
+    def _rewrite(self, snap: _Snapshot, op: str, affected, rewrite, checks=None) -> int:
+        """Commit ``op`` as a partition-bounded rewrite of ``snap``: the
+        partitions holding a row of ``affected(current)`` are replaced by
+        ``rewrite(their rows)``, written as NEW files (nothing is
+        physically removed, so every earlier snapshot and any in-flight
+        reader keeps working); every other partition's files carry over.
+        An unpartitioned table rewrites whole. ``checks`` (CHECK
+        counters) ride the write; a violation discards it."""
+        current = self._scan(snap)
+        live = set(snap.files)
+        pcols = self.partition_cols
+        if pcols:
+            parts = [
+                tuple(r) for r in affected(current).select(*pcols).distinct().collect()
+            ]
+            if not parts:
+                return self._commit(snap, f"{op}(noop)")
+            prefixes = tuple(_partition_subdir(pcols, p) + "/" for p in parts)
+            dead = {f for f in live if f.startswith(prefixes)}
+            scope = current.filter(_partition_filter(pcols, parts))
+        else:
+            dead, scope = live, current
+        added, _, bad = self._checked_write(
+            rewrite(scope), snap.column_mapping, checks or {}
+        )
+        if bad:
+            self._discard(added, f"{op} rejected by CHECK constraints: {bad}")
+        return self._commit(snap, op, files=(live - dead) | added)
 
     def delete_where(self, predicate: str) -> int:
         """Commit a DELETE. Survivors of affected partitions are rewritten as
-        NEW files (append-mode write — nothing is physically removed, so
-        every earlier snapshot and any in-flight reader keeps working); the
-        manifest drops the affected partitions' old files. Partition-bounded
-        exactly like LakeTable.delete_where. Returns the new version."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError(f"empty versioned table at {self.path}")
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        live = set(m["files"])
-        current = self.read(latest)
-        keep_pred = ~F.coalesce(F.expr(predicate), F.lit(False))
-        if self.partition_cols:
-            affected = current.filter(predicate)
-            parts = [
-                tuple(r)
-                for r in affected.select(*self.partition_cols).distinct().collect()
-            ]
-            if not parts:
-                return self._commit("delete_where(noop)", live, schema, expected_version=latest)
-            prefixes = tuple(
-                _partition_prefix(self.partition_cols, p) for p in parts
-            )
-            dead = {f for f in live if f.startswith(prefixes)}
-            from .lake import _partition_filter
-
-            cond = _partition_filter(self.partition_cols, parts)
-            survivors = current.filter(cond).filter(keep_pred)
-        else:
-            dead = set(live)
-            survivors = current.filter(keep_pred)
-        added = self._staged_write(survivors)
-        return self._commit(
-            "delete_where", (live - dead) | added, schema, expected_version=latest
+        NEW files; the manifest drops the affected partitions' old files.
+        Partition-bounded exactly like LakeTable.delete_where; SQL DELETE
+        semantics (a NULL predicate keeps the row). Returns the new
+        version."""
+        snap = self._nonempty(self._snapshot(), "delete_where")
+        keep = ~F.coalesce(F.expr(predicate), F.lit(False))
+        return self._rewrite(
+            snap,
+            "delete_where",
+            lambda current: current.filter(predicate),
+            lambda scope: scope.filter(keep),
         )
 
     def update_where(self, predicate: str, set_exprs: dict[str, str]) -> int:
@@ -956,83 +834,36 @@ class VersionedLakeTable(TxnLedger):
         concern — assigning a generated column directly is refused.
         Partition columns cannot be assigned (that is a MERGE/move, not an
         in-place update). Returns the new version."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError(f"empty versioned table at {self.path}")
+        snap = self._nonempty(self._snapshot(), "update_where")
         for c in set_exprs:
             if c in self.partition_cols:
                 raise ValidationError(
                     f"update_where: cannot assign partition column {c!r}"
                 )
-            if c in self.generated_columns(latest):
+            if c in snap.generated_cols:
                 raise ValidationError(
                     f"update_where: {c!r} is GENERATED ALWAYS AS — it cannot "
                     "be assigned directly"
                 )
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        names = [f.name for f in schema.fields]
-        for c in set_exprs:
-            if c not in names:
+            if c not in snap.schema.names:
                 raise ValidationError(f"update_where: no column {c!r}")
-        live = set(m["files"])
-        current = self.read(latest)
         match = F.coalesce(F.expr(predicate), F.lit(False))
-        if self.partition_cols:
-            parts = [
-                tuple(r)
-                for r in current.filter(match)
-                .select(*self.partition_cols)
-                .distinct()
-                .collect()
-            ]
-            if not parts:
-                return self._commit(
-                    "update_where(noop)", live, schema, expected_version=latest
-                )
-            prefixes = tuple(_partition_prefix(self.partition_cols, p) for p in parts)
-            dead = {f for f in live if f.startswith(prefixes)}
-            from .lake import _partition_filter
-
-            scope = current.filter(_partition_filter(self.partition_cols, parts))
-        else:
-            dead = set(live)
-            scope = current
         # Simultaneous assignment: every SET expression evaluates against
         # the pre-update row (one select, not chained withColumns).
-        updated = scope.select(
-            *[
-                F.when(match, F.expr(set_exprs[c]).cast(schema[c].dataType))
-                .otherwise(F.col(c))
-                .alias(c)
-                if c in set_exprs
-                else F.col(c)
-                for c in names
-            ]
-        )
-        checks = self._constraint_metrics()
-        if checks:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            updated = updated.observe(
-                obs, *[c.alias(k) for k, c in checks.items()]
-            )
-        added = self._staged_write(updated)
-        if checks:
-            bad = {
-                k.removeprefix("__check__"): v
-                for k, v in dict(obs.get).items()
-                if v and v > 0
-            }
-            if bad:
-                for rel in added:
-                    self.fs.delete(os.path.join(self.path, rel))
-                raise ValidationError(
-                    f"update_where rejected by CHECK constraints: {bad}"
-                )
-        return self._commit(
-            "update_where", (live - dead) | added, schema, expected_version=latest
+        assigned = [
+            F.when(match, F.expr(set_exprs[f.name]).cast(f.dataType))
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if f.name in set_exprs
+            else F.col(f.name)
+            for f in snap.schema.fields
+        ]
+        return self._rewrite(
+            snap,
+            "update_where",
+            lambda current: current.filter(match),
+            lambda scope: scope.select(*assigned),
+            self._constraint_metrics(snap),
         )
 
     def merge_upsert(
@@ -1048,62 +879,44 @@ class VersionedLakeTable(TxnLedger):
         NEW files; the manifest swaps those partitions' file sets. Earlier
         snapshots stay readable — each CDC batch becomes one time-travelable
         version. Returns the new version."""
-        from pyspark.sql import Window
-
-        if order_col:
-            w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
-            updates = (
-                updates.withColumn("__rn", F.row_number().over(w))
-                .filter("__rn = 1")
-                .drop("__rn")
-            )
-        if delete_col:
-            inserts = updates.filter(
-                ~F.coalesce(F.col(delete_col), F.lit(False))
-            ).drop(delete_col)
-        else:
-            inserts = updates
-        all_keys = updates.select(*keys)
-        latest = self.latest_version()
-        if latest is None:
-            return self.append(inserts)
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        live = set(m["files"])
-        current = self.read(latest)
+        inserts, all_keys = _merge_batch(updates, keys, order_col, delete_col)
+        snap = self._snapshot()
+        if snap.version is None:
+            return self._append(snap, inserts, False)
         # Align the insert side to the table schema (drops batch-only
         # bookkeeping columns like the order_col).
-        inserts = inserts.select(*[f.name for f in schema.fields])
-        if self.partition_cols:
-            pcols = self.partition_cols
-            touched = (
-                current.join(all_keys, keys, "left_semi")
-                .select(*pcols)
-                .unionByName(inserts.select(*pcols))
-                .distinct()
-            )
-            parts = [tuple(r) for r in touched.collect()]
-            if not parts:
-                return self._commit("merge_upsert(noop)", live, schema, expected_version=latest)
-            from .lake import _partition_filter
-
-            prefixes = tuple(_partition_prefix(pcols, p) for p in parts)
-            dead = {f for f in live if f.startswith(prefixes)}
-            cond = _partition_filter(pcols, parts)
-            merged = (
-                current.filter(cond)
-                .join(all_keys, keys, "left_anti")
-                .unionByName(inserts)
-            )
-        else:
-            dead = set(live)
-            merged = current.join(all_keys, keys, "left_anti").unionByName(inserts)
-        added = self._staged_write(merged)
-        return self._commit(
-            "merge_upsert", (live - dead) | added, schema, expected_version=latest
+        inserts = inserts.select(*snap.schema.names)
+        pcols = self.partition_cols
+        return self._rewrite(
+            snap,
+            "merge_upsert",
+            lambda current: current.join(all_keys, keys, "left_semi")
+            .select(*pcols)
+            .unionByName(inserts.select(*pcols)),
+            lambda scope: scope.join(all_keys, keys, "left_anti").unionByName(inserts),
         )
 
     # -- maintenance --------------------------------------------------------
+
+    def _by_dir(self, snap: _Snapshot) -> dict[str, tuple[list[str], int]]:
+        """Live files grouped by partition directory relative to their root
+        (this table's, or the source's for shallow-clone files, so a
+        rewrite into that directory re-homes them under this table), with
+        the group's total bytes (one listing per directory on disk)."""
+        groups: dict[str, list[str]] = {}
+        for f in snap.files:
+            base = snap.base or os.path.dirname(f)
+            home = os.path.relpath(f, base) if os.path.isabs(f) else f
+            groups.setdefault(os.path.dirname(home), []).append(f)
+        out = {}
+        for d, group in groups.items():
+            paths = [os.path.join(self.path, f) for f in group]
+            size = {}
+            for absdir in {os.path.dirname(p) for p in paths}:
+                for name, is_dir, n in self.fs.list(absdir):
+                    size[os.path.join(absdir, name)] = n
+            out[d] = (group, sum(size.get(p, 0) for p in paths))
+        return out
 
     def compact(self, target_file_bytes: int = 128 << 20) -> int:
         """Commit an OPTIMIZE: rewrite the current live set as bin-packed
@@ -1111,48 +924,34 @@ class VersionedLakeTable(TxnLedger):
         Unlike LakeTable.compact this is non-destructive — the fragmented
         files stay on disk serving older snapshots until vacuum(); readers
         of any version are never disturbed (Delta OPTIMIZE semantics: a
-        data-identical commit). Returns the new version, or -1 if the table
-        is already compact (no commit written)."""
-        import math
-
-        latest = self.latest_version()
-        if latest is None:
+        data-identical commit). On a shallow clone it also deep-copies every
+        partition that still references the source's files, so the clone
+        survives a VACUUM of its source. Returns the new version, or -1 if
+        the table is already compact (no commit written)."""
+        snap = self._snapshot()
+        if snap.version is None:
             return -1
-        m = self._manifest(latest)
-        live = set(m["files"])
-        # Group live files by partition directory; a partition is worth
-        # rewriting only if it has more files than its data needs.
-        by_dir: dict[str, list[str]] = {}
-        for f in live:
-            by_dir.setdefault(os.path.dirname(f), []).append(f)
-        sizes = {}
-        for d, files in by_dir.items():
-            absdir = os.path.join(self.path, d) if d else self.path
-            listing = {name: size for name, is_dir, size in self.fs.list(absdir) if not is_dir}
-            sizes[d] = {f: listing.get(os.path.basename(f), 0) for f in files}
-        schema = T.StructType.fromJson(m["schema"])
+        live = set(snap.files)
         new_live = set(live)
-        rewrote = False
-        for d, files in by_dir.items():
-            total = sum(sizes[d].values())
+        # A partition is worth rewriting if it has more files than its data
+        # needs, or if it still references a shallow-clone source's files
+        # (the rewrite deep-copies them under this table's root).
+        for d, (files, total) in self._by_dir(snap).items():
             want = max(1, math.ceil(total / target_file_bytes))
-            if len(files) <= want:
+            if len(files) <= want and not any(map(os.path.isabs, files)):
                 continue
-            rewrote = True
-            abs_files = [os.path.join(self.path, f) for f in files]
-            df = self._read_physical(abs_files, schema)
             # Stage into the partition directory (values are fixed within
             # it), keeping the hive layout without re-shuffling.
             added = self._staged_write(
-                df.coalesce(want).drop(*self.partition_cols),
+                self._read_files(snap, files).coalesce(want).drop(*self.partition_cols),
+                snap.column_mapping,
                 subdir=d,
                 partitioned=False,
             )
             new_live = (new_live - set(files)) | added
-        if not rewrote:
+        if new_live == live:
             return -1
-        self.spark.catalog.refreshByPath(self.path)
-        return self._commit("compact", new_live, schema, expected_version=latest)
+        return self._commit(snap, "compact", files=new_live)
 
     def cluster(
         self,
@@ -1173,29 +972,15 @@ class VersionedLakeTable(TxnLedger):
         global sort) + sortWithinPartitions; the z expression is JVM-side
         bit arithmetic inside codegen. Returns the new version, or -1 if
         the table is empty."""
-        import math
-
         from .operators.zorder import minmax_scale, zorder_column
 
-        latest = self.latest_version()
-        if latest is None:
+        snap = self._snapshot()
+        if snap.version is None:
             return -1
-        m = self._manifest(latest)
-        schema = T.StructType.fromJson(m["schema"])
-        live = set(m["files"])
-        by_dir: dict[str, list[str]] = {}
-        for f in live:
-            by_dir.setdefault(os.path.dirname(f), []).append(f)
+        live = set(snap.files)
         new_live = set(live)
-        rewrote = False
-        for d, files in by_dir.items():
-            abs_files = [os.path.join(self.path, f) for f in files]
-            df = self._read_physical(abs_files, schema).drop(*self.partition_cols)
-            absdir = os.path.join(self.path, d) if d else self.path
-            listing = {
-                name: size for name, is_dir, size in self.fs.list(absdir) if not is_dir
-            }
-            total = sum(listing.get(os.path.basename(f), 0) for f in files)
+        for d, (files, total) in self._by_dir(snap).items():
+            df = self._read_files(snap, files).drop(*self.partition_cols)
             want = max(min_files, math.ceil(total / target_file_bytes))
             aggs = []
             for c in zorder_by:
@@ -1216,25 +1001,28 @@ class VersionedLakeTable(TxnLedger):
                 .sortWithinPartitions("__z")
                 .drop("__z")
             )
-            added = self._staged_write(clustered, subdir=d, partitioned=False)
+            added = self._staged_write(
+                clustered, snap.column_mapping, subdir=d, partitioned=False
+            )
             new_live = (new_live - set(files)) | added
-            rewrote = True
-        if not rewrote:
+        if new_live == live:
             return -1
-        self.spark.catalog.refreshByPath(self.path)
-        return self._commit("zorder", new_live, schema, expected_version=latest)
+        return self._commit(snap, "zorder", files=new_live)
 
     def restore(self, version: int) -> int:
         """Delta RESTORE TABLE ... TO VERSION AS OF n: commit a NEW version
-        whose manifest is the target version's file list — a zero-copy
-        rollback that PRESERVES history (the bad versions stay readable
-        until vacuum, exactly Delta's semantics; a destructive log rewind
-        would break time travel and concurrent readers). Refuses if any
-        restored file has been vacuumed away in the meantime."""
-        head = self.latest_version()
-        m = self._manifest(version)
+        whose manifest is the target version's file list and schema, with
+        the schema's column mapping, generated columns and CHECK
+        constraints — a zero-copy rollback that PRESERVES history (the bad
+        versions stay readable until vacuum, exactly Delta's semantics; a
+        destructive log rewind would break time travel and concurrent
+        readers). The retired-physical ledger only grows, so it carries
+        forward from the head. Refuses if any restored file has been
+        vacuumed away in the meantime."""
+        head = self._snapshot()
+        target = self._snapshot(version)
         missing = [
-            f for f in m["files"]
+            f for f in target.files
             if not self.fs.exists(os.path.join(self.path, f))
         ]
         if missing:
@@ -1244,41 +1032,45 @@ class VersionedLakeTable(TxnLedger):
                 "possible within the vacuum retention window"
             )
         return self._commit(
+            head,
             "restore",
-            set(m["files"]),
-            T.StructType.fromJson(m["schema"]),
-            expected_version=head,
+            files=target.files,
+            schema=target.schema,
+            column_mapping=target.column_mapping,
+            generated_cols=target.generated_cols,
+            constraints=target.constraints,
         )
 
     def clone_to(self, dest_path: str) -> "VersionedLakeTable":
         """Zero-copy SHALLOW CLONE of the latest snapshot (Delta CLONE):
         the clone gets its own commit log whose first manifest references
-        the source's live data files by absolute path — no data moves.
-        Writes to the clone land under the clone's root and never touch the
-        source; the source evolving (appends/deletes) never changes the
-        clone (its manifest pins the file set). The one shared-fate hazard
-        is the same as Delta's: VACUUMing the SOURCE can physically remove
-        files a shallow clone still references — deep-copy (compact) the
-        clone before vacuuming a cloned source."""
-        latest = self.latest_version()
-        if latest is None:
-            raise ValidationError(f"cannot clone empty table at {self.path}")
-        m = self._manifest(latest)
-        src_base = m.get("base", self.path)
-        files_abs = {
-            f if os.path.isabs(f) else os.path.join(self.path, f)
-            for f in m["files"]
-        }
-        clone = VersionedLakeTable(
-            self.spark, dest_path, list(m.get("partition_cols") or [])
-        )
-        if clone.versions():
+        the source's live data files by absolute path — no data moves —
+        and carries the source's schema, column mapping, CHECK
+        constraints and generated columns. Writes to the clone land under
+        the clone's root and never touch the source; the source evolving
+        (appends/deletes) never changes the clone (its manifest pins the
+        file set). The one shared-fate hazard is the same as Delta's:
+        VACUUMing the SOURCE can physically remove files a shallow clone
+        still references — deep-copy (compact) the clone before vacuuming
+        a cloned source."""
+        snap = self._nonempty(self._snapshot(), "clone_to")
+        clone = VersionedLakeTable(self.spark, dest_path, list(snap.partition_cols))
+        empty = clone._snapshot()
+        if empty.version is not None:
             raise ValidationError(f"clone destination {dest_path} not empty")
         clone._commit(
-            f"clone(shallow from {self.path}@v{latest})",
-            files_abs,
-            T.StructType.fromJson(m["schema"]),
-            base=src_base,
+            empty,
+            f"clone(shallow from {self.path}@v{snap.version})",
+            files=[
+                f if os.path.isabs(f) else os.path.join(self.path, f)
+                for f in snap.files
+            ],
+            schema=snap.schema,
+            base=snap.base or self.path,
+            constraints=snap.constraints,
+            column_mapping=snap.column_mapping,
+            generated_cols=snap.generated_cols,
+            retired_physical=snap.retired_physical,
         )
         return clone
 
@@ -1291,7 +1083,7 @@ class VersionedLakeTable(TxnLedger):
             return set()
         referenced: set[str] = set()
         for v in vs[-max(1, retain_last):]:
-            referenced |= set(self._manifest(v)["files"])
+            referenced |= set(self._snapshot(v).files)
         return self._data_files() - referenced
 
     def vacuum(self, retain_last: int = 1) -> int:
@@ -1316,11 +1108,3 @@ class VersionedLakeTable(TxnLedger):
             self.fs.delete(staging, recursive=True)
         self.spark.catalog.refreshByPath(self.path)
         return removed
-
-
-def _partition_prefix(pcols: list[str], part: tuple) -> str:
-    """Relative path prefix of one partition's directory (hive layout).
-    Mirrors lake._partition_subdir's encoding, including the NULL dir."""
-    from .lake import _partition_subdir
-
-    return _partition_subdir(pcols, part) + "/"

@@ -201,12 +201,12 @@ def test_materialize_once_checkpoints_release_after_consumption(spark):
     sf_dir = "/root/testdata/sf0.001"
     release_run_checkpoints()  # clean slate from earlier tests
     base = persistent_rdd_count(spark)
-    # chargram/minhash/segments = materialize-once tables; clusters_star /
+    # chargram/minhash/segments = materialize-once tables; clusters /
     # hits = iterative loops whose FINAL round the returned plan references
     # (r10 review: those also go through the registry now).
     for _ in range(3):
         for name in ("q_dedup_chargram", "q_dedup_minhash", "q_dedup_segments",
-                     "q_dedup_clusters_star", "q_hits"):
+                     "q_dedup_clusters", "q_hits"):
             df = specs[name].fn(spark, sf_dir)
             assert df.count() > 0
             assert len(_RUN_CHECKPOINTS) >= 1, (

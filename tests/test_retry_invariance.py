@@ -23,7 +23,7 @@ import sys
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-CORE = "q_dedup_clusters_star,q_dedup_minhash,q_zone_performance"
+CORE = "q_dedup_clusters,q_dedup_minhash,q_zone_performance"
 
 
 def test_retry_invariance_core():

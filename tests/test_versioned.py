@@ -214,6 +214,54 @@ def test_shallow_clone_zero_copy_and_isolated(spark, tmp_path):
     assert clone.history()[0]["op"].startswith("clone(shallow")
 
 
+@pytest.mark.parametrize("pcols", [[], ["p"]])
+def test_compact_deep_copies_a_shallow_clone(spark, tmp_path, pcols):
+    """compact() on a shallow clone rewrites the source's files under the
+    clone's root (also when a post-clone append shares a partition with
+    them), so vacuuming the source afterwards leaves the clone intact."""
+    import glob
+    import os
+
+    src = VersionedLakeTable(spark, str(tmp_path / "src"), pcols)
+    for i in range(2):
+        src.append(spark.range(i * 10, i * 10 + 10).selectExpr("id", "id % 2 AS p"))
+    clone = src.clone_to(str(tmp_path / "clone"))
+    clone.append(spark.range(20, 25).selectExpr("id", "id % 2 AS p"))
+    src_files = lambda: glob.glob(str(tmp_path / "src" / "**"), recursive=True)  # noqa: E731
+    before = src_files()
+    assert clone.compact() == 3
+    assert not any(map(os.path.isabs, clone._manifest(3)["files"]))
+    assert src_files() == before  # nothing written into the source
+    src.delete_where("id >= 0")
+    src.vacuum(retain_last=1)
+    assert sorted(r.id for r in clone.read().collect()) == list(range(25))
+
+
+def test_clone_and_restore_carry_schema_metadata(spark, tmp_path):
+    """A shallow clone keeps the source snapshot's column mapping and
+    CHECK constraints (a renamed column reads its values, not NULL), and a
+    RESTORE brings back the target's generated columns with its schema,
+    so later appends work against a consistent snapshot."""
+    src = VersionedLakeTable(spark, str(tmp_path / "src"))
+    src.append(spark.createDataFrame([(1, 10.0)], "id bigint, amount double"))
+    src.rename_column("amount", "total")
+    src.add_check_constraint("pos", "total > 0")
+    clone = src.clone_to(str(tmp_path / "clone"))
+    assert [tuple(r) for r in clone.read().collect()] == [(1, 10.0)]
+    assert clone.check_constraints() == {"pos": "total > 0"}
+    with pytest.raises(ValidationError, match="pos"):
+        clone.append(spark.createDataFrame([(2, -1.0)], "id bigint, total double"))
+
+    g = VersionedLakeTable(spark, str(tmp_path / "gen"))
+    g.append(spark.createDataFrame([(1, 10.0)], "id bigint, amount double"))
+    g.add_generated_column("cents", "CAST(amount * 100 AS BIGINT)", "bigint")
+    assert g.restore(1) == 3 and g.generated_columns() == {}
+    g.append(spark.createDataFrame([(2, 20.0)], "id bigint, amount double"))
+    assert sorted(tuple(r) for r in g.read().collect()) == [(1, 10.0), (2, 20.0)]
+    g.restore(2)
+    assert g.generated_columns() == {"cents": "CAST(amount * 100 AS BIGINT)"}
+
+
 def test_orphans_report_matches_vacuum(spark, tmp_path):
     import os
 
@@ -248,20 +296,99 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
     w2 = VersionedLakeTable(spark, path)
     df = spark.range(0, 10).selectExpr("id AS k")
     w1.append(df)
-    schema = w1.read().schema
     live = set(w1._manifest(1)["files"])
     # w2 wins the race for version 2.
-    assert w2._commit("append", live, schema) == 2
+    assert w2._commit(w2._snapshot(), "append", files=live) == 2
     # Pin w1 to its STALE view (it read latest=1 before w2 committed) so
-    # its _commit targets version 2 — the put-if-absent must refuse.
+    # its snapshot is version 1 and its _commit targets version 2 — the
+    # put-if-absent must refuse.
     w1.versions = lambda: [1]
     w1.latest_version = lambda: 1
     with pytest.raises(ConcurrentCommitError):
-        w1._commit("append", live, schema)
+        w1._commit(w1._snapshot(), "append", files=live)
     # The winner's manifest is intact; a fresh writer proceeds normally.
     fresh = VersionedLakeTable(spark, path)
     assert fresh._manifest(2)["op"] == "append"
     assert fresh.append(df) == 3
+
+
+def _count_manifest_reads(monkeypatch):
+    """Count LakeFS.read_text calls per commit-log manifest path."""
+    from collections import Counter
+
+    from nyc_taxi_lakehouse_spark.fs import LakeFS
+
+    counts: Counter = Counter()
+    read_text = LakeFS.read_text
+
+    def counting(self, path):
+        if "/_log/" in path:
+            counts[path] += 1
+        return read_text(self, path)
+
+    monkeypatch.setattr(LakeFS, "read_text", counting)
+    return counts
+
+
+def test_each_operation_reads_each_manifest_once(spark, tmp_path, monkeypatch):
+    """One snapshot per operation: an operation reads every manifest it
+    needs exactly once, so it can never see two versions of one file."""
+    counts = _count_manifest_reads(monkeypatch)
+    t = VersionedLakeTable(
+        spark, str(tmp_path / "rc"), ["status"], stats_cols=["amount"]
+    )
+    t.append(_mk(spark, [(1, "O", 10.0), (2, "F", 20.0)]))
+    ops = {
+        "append": lambda: t.append(_mk(spark, [(3, "O", 30.0), (4, "F", 40.0)])),
+        "merge_upsert": lambda: t.merge_upsert(_mk(spark, [(1, "O", 11.0)]), ["id"]),
+        "delete_where": lambda: t.delete_where("id = 4"),
+        "compact": t.compact,
+        "read": lambda: t.read().count(),
+        "read(version=1)": lambda: t.read(version=1).count(),
+    }
+    for name, op in ops.items():
+        counts.clear()
+        op()
+        assert counts and max(counts.values()) == 1, (name, dict(counts))
+    assert sorted((r.id, r.amount) for r in t.read().collect()) == [
+        (1, 11.0), (2, 20.0), (3, 30.0),
+    ]
+
+
+def test_append_never_mixes_two_snapshots(spark, tmp_path, monkeypatch):
+    """A second writer commits add_generated_column right after an append
+    read its snapshot's manifest. The append staged its rows without the
+    new column, so it must fail with ConcurrentCommitError instead of
+    committing rows that hold NULL in a GENERATED ALWAYS AS column; the
+    retry reads the new snapshot and derives the column."""
+    from nyc_taxi_lakehouse_spark.fs import LakeFS
+    from nyc_taxi_lakehouse_spark.versioned import ConcurrentCommitError
+
+    path = str(tmp_path / "mix")
+    t = VersionedLakeTable(spark, path)
+    t.append(spark.createDataFrame([(1, 10)], "k bigint, v bigint"))
+    other = VersionedLakeTable(spark, path)
+    read_text = LakeFS.read_text
+    raced = []
+
+    def racing_read(self, p):
+        text = read_text(self, p)
+        if "/_log/" in p and not raced:
+            raced.append(p)
+            other.add_generated_column("v2", "v * 2", "bigint")
+        return text
+
+    monkeypatch.setattr(LakeFS, "read_text", racing_read)
+    batch = spark.createDataFrame([(2, 20), (3, 30)], "k bigint, v bigint")
+    with pytest.raises(ConcurrentCommitError):
+        t.append(batch)
+    monkeypatch.undo()
+    assert raced and t.history()[-1]["op"] == "add_generated_column"
+    assert t.append(batch) == 3
+    # Row 1 predates the column; every row written after it has its value.
+    assert sorted((r.k, r.v2) for r in t.read().collect()) == [
+        (1, None), (2, 40), (3, 60),
+    ]
 
 
 def test_restore_is_zero_copy_and_history_preserving(spark, tmp_path):

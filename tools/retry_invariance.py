@@ -69,13 +69,13 @@ from nyc_taxi_lakehouse_spark.registry import all_queries
 from nyc_taxi_lakehouse_spark.session import get_spark
 from nyc_taxi_lakehouse_spark.sources import tables as tables_mod
 
-# Heavy, gate-bearing defaults: iterative loops (CC star, pagerank, BFS),
+# Heavy, gate-bearing defaults: iterative loops (CC, pagerank, BFS),
 # the big pair-join dedups, the production chain, and the join-dense
 # analytics core — the plans where a retry seam would matter most.
 DEFAULT_QUERIES = [
     "q_dedup_minhash",
     "q_dedup_chargram",
-    "q_dedup_clusters_star",
+    "q_dedup_clusters",
     "q_dedup_prod_pipeline",
     "q_pagerank",
     "q_bfs_hops",

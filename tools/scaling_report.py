@@ -10,7 +10,7 @@ from nyc_taxi_lakehouse_spark.session import get_spark
 
 HEAVY = [
     "q_dedup_ppjoin", "q_dedup_minhash", "q_dedup_simhash_pairs",
-    "q_triangle_count", "q_dedup_prod_pipeline", "q_dedup_clusters_star",
+    "q_triangle_count", "q_dedup_prod_pipeline", "q_dedup_clusters",
     "q_dedup_chargram", "q_dedup_containment", "q_market_basket",
     "q_pagerank", "q_ingest_clean", "q_zone_performance",
     "q_bfs_hops", "q_label_propagation", "q_kcenter_coreset",
