@@ -254,7 +254,9 @@ CORE13 = HEADLINE[:13]
 # to the driver's per-query PERF comparison. These ride along in the
 # compact stdout "queries" map so PERF_r12+ can confirm or refute the
 # claimed optimizations on the driver's own host. CORE13 entries are
-# untouched; nothing is removed or renamed.
+# untouched. The dedup-clusters entry names q_dedup_clusters: the
+# q_dedup_clusters_star registration it used to name ran the same
+# function and was deleted.
 HEAVY_TAIL = [
     "q_dbscan",
     "q_dedup_chargram",

@@ -68,7 +68,9 @@ class _Snapshot:
     """One committed version, parsed once: what an operation reads from the
     log. ``version`` is None for a table with no commit yet. A commit
     carries every field but ``version`` and ``op`` forward unless the
-    operation changes it; ``partition_cols`` is the writer's own."""
+    operation changes it; ``partition_cols`` is the writer's own.
+    ``base`` (a shallow clone's source root) stays in the manifest format;
+    reads derive each file's root from its path (``_root_of``)."""
 
     version: int | None = None
     op: str = ""
@@ -566,23 +568,31 @@ class VersionedLakeTable(TxnLedger):
             df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
         return df
 
+    def _root_of(self, f: str) -> tuple[str, str]:
+        """(root, root-relative path) of a live file. Relative paths root at
+        this table. Shallow-clone manifests (clone_to) list ABSOLUTE paths
+        into the table they were cloned from — for a clone of a clone,
+        into more than one table — so an absolute file's root is read off
+        its own hive layout: the file sits one directory per partition
+        column below its root."""
+        if not os.path.isabs(f):
+            return self.path, f
+        parts = f.split(os.sep)
+        k = len(self.partition_cols) + 1
+        return os.sep.join(parts[:-k]), os.sep.join(parts[-k:])
+
     def _read_files(self, snap: _Snapshot, rel_files) -> DataFrame:
         """Read ``rel_files`` of ``snap`` back as its LOGICAL schema.
 
-        Shallow-clone manifests (clone_to) list ABSOLUTE paths into the
-        source table, whose partition layout roots at the snapshot's base;
-        ordinary manifests list paths relative to this table's root, and a
-        post-clone append mixes both: each root's files are read with
-        their own basePath and the reads unioned. Files are read under
-        their PHYSICAL column names (the names renames never touch) and
-        aliased back to the logical schema — the metadata-only rename/drop
-        contract."""
-        roots: dict[str | None, list[str]] = {}
+        A post-clone write mixes this table's files with the clone
+        source's: each root's files are read with their own basePath and
+        the reads unioned. Files are read under their PHYSICAL column
+        names (the names renames never touch) and aliased back to the
+        logical schema — the metadata-only rename/drop contract."""
+        roots: dict[str, list[str]] = {}
         for f in rel_files:
-            if os.path.isabs(f):
-                roots.setdefault(snap.base, []).append(f)
-            else:
-                roots.setdefault(self.path, []).append(os.path.join(self.path, f))
+            root, home = self._root_of(f)
+            roots.setdefault(root, []).append(os.path.join(root, home))
         if not roots:
             return self.spark.createDataFrame([], snap.schema)
         mapping = snap.column_mapping
@@ -590,11 +600,6 @@ class VersionedLakeTable(TxnLedger):
         for root, files in roots.items():
             reader = self.spark.read.schema(self._physical_schema(snap.schema, mapping))
             if self.partition_cols:
-                if root is None:
-                    raise ValidationError(
-                        f"version {snap.version} lists shallow-clone files "
-                        "but records no base root to parse partitions from"
-                    )
                 reader = reader.option("basePath", root)
             frames.append(reader.parquet(*files))
         df = functools.reduce(DataFrame.unionByName, frames)
@@ -631,6 +636,8 @@ class VersionedLakeTable(TxnLedger):
 
         Data files always carry PHYSICAL column names; callers work in
         logical names and pass the mapping the commit will record."""
+        if os.path.isabs(subdir) or os.path.normpath(subdir).split(os.sep)[0] == "..":
+            raise ValidationError(f"staged write outside the table: {subdir!r}")
         if mapping:
             df = df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
@@ -794,7 +801,7 @@ class VersionedLakeTable(TxnLedger):
             if not parts:
                 return self._commit(snap, f"{op}(noop)")
             prefixes = tuple(_partition_subdir(pcols, p) + "/" for p in parts)
-            dead = {f for f in live if f.startswith(prefixes)}
+            dead = {f for f in live if self._root_of(f)[1].startswith(prefixes)}
             scope = current.filter(_partition_filter(pcols, parts))
         else:
             dead, scope = live, current
@@ -900,14 +907,12 @@ class VersionedLakeTable(TxnLedger):
 
     def _by_dir(self, snap: _Snapshot) -> dict[str, tuple[list[str], int]]:
         """Live files grouped by partition directory relative to their root
-        (this table's, or the source's for shallow-clone files, so a
+        (this table's, or a clone source's for shallow-clone files, so a
         rewrite into that directory re-homes them under this table), with
         the group's total bytes (one listing per directory on disk)."""
         groups: dict[str, list[str]] = {}
         for f in snap.files:
-            base = snap.base or os.path.dirname(f)
-            home = os.path.relpath(f, base) if os.path.isabs(f) else f
-            groups.setdefault(os.path.dirname(home), []).append(f)
+            groups.setdefault(os.path.dirname(self._root_of(f)[1]), []).append(f)
         out = {}
         for d, group in groups.items():
             paths = [os.path.join(self.path, f) for f in group]

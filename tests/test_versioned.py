@@ -237,6 +237,60 @@ def test_compact_deep_copies_a_shallow_clone(spark, tmp_path, pcols):
     assert sorted(r.id for r in clone.read().collect()) == list(range(25))
 
 
+def test_dml_on_a_partitioned_shallow_clone(spark, tmp_path):
+    """DELETE / UPDATE / MERGE on a partitioned shallow clone replace the
+    affected partitions' source files as well as the clone's own, so no
+    row is duplicated and no deleted or overwritten row comes back."""
+    src = VersionedLakeTable(spark, str(tmp_path / "src"), ["p"])
+    src.append(spark.range(0, 20).selectExpr("id", "id % 2 AS p", "id * 10 AS v"))
+    clone = src.clone_to(str(tmp_path / "clone"))
+    clone.append(spark.range(20, 25).selectExpr("id", "id % 2 AS p", "id * 10 AS v"))
+    want = {i: (i % 2, i * 10) for i in range(25)}
+    rows = lambda t: {r.id: (r.p, r.v) for r in t.read().collect()}  # noqa: E731
+
+    clone.delete_where("id IN (1, 20)")
+    del want[1], want[20]
+    assert clone.read().count() == len(want) and rows(clone) == want
+    clone.update_where("id = 3", {"v": "-1"})
+    want[3] = (1, -1)
+    assert clone.read().count() == len(want) and rows(clone) == want
+    clone.merge_upsert(
+        spark.createDataFrame([(4, 0, 400), (99, 1, 990)], "id bigint, p bigint, v bigint"),
+        keys=["id"],
+    )
+    want |= {4: (0, 400), 99: (1, 990)}
+    assert clone.read().count() == len(want) and rows(clone) == want
+    assert rows(src) == {i: (i % 2, i * 10) for i in range(20)}
+
+
+@pytest.mark.parametrize("pcols", [[], ["p"]])
+def test_clone_of_a_clone(spark, tmp_path, pcols):
+    """A clone of a clone lists files under two roots (the first source's
+    and the first clone's): it reads both, and compact() deep-copies them
+    under its own root only, so vacuuming either ancestor leaves it
+    intact."""
+    import glob
+    import os
+
+    src = VersionedLakeTable(spark, str(tmp_path / "src"), pcols)
+    src.append(spark.range(0, 10).selectExpr("id", "id % 2 AS p"))
+    c1 = src.clone_to(str(tmp_path / "c1"))
+    c1.append(spark.range(10, 15).selectExpr("id", "id % 2 AS p"))
+    c2 = c1.clone_to(str(tmp_path / "c2"))
+    assert sorted(r.id for r in c2.read().collect()) == list(range(15))
+    files = lambda d: glob.glob(str(tmp_path / d / "**"), recursive=True)  # noqa: E731
+    before = files("src"), files("c1")
+    assert c2.compact() == 2
+    assert (files("src"), files("c1")) == before
+    assert not any(os.path.isabs(f) or ".." in f for f in c2._snapshot().files)
+    for t in (c1, src):  # c1 still reads src's files until it is emptied
+        t.delete_where("id >= 0")
+        t.vacuum(retain_last=1)
+    assert sorted(r.id for r in c2.read().collect()) == list(range(15))
+    with pytest.raises(ValidationError, match="outside the table"):
+        c2._staged_write(spark.range(1), {}, subdir="../c1")
+
+
 def test_clone_and_restore_carry_schema_metadata(spark, tmp_path):
     """A shallow clone keeps the source snapshot's column mapping and
     CHECK constraints (a renamed column reads its values, not NULL), and a
