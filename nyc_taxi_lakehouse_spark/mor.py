@@ -1,36 +1,18 @@
 """Merge-on-read row-level deletes via deletion vectors.
 
-lake.py and versioned.py implement copy-on-write deletes (touched files are
-rewritten). Modern table formats add the merge-on-read alternative — Delta
-deletion vectors / Iceberg v2 positional delete files: a DELETE writes only a
-tiny sidecar of (data_file, row_position) tombstones and readers subtract
-them on the fly; no data file is rewritten until a later purge/compaction.
-The trade: O(deleted rows) write cost instead of O(touched files), at the
-price of an anti-join per read — exactly right for frequent small deletes
-(GDPR erasure, late-arriving retractions) over 100 TB of immutable files.
+Copy-on-write deletes rewrite every touched file. Delta deletion vectors /
+Iceberg v2 positional delete files are the merge-on-read alternative: a
+DELETE writes only (data_file, row_position) tombstones and readers
+subtract them, until a compaction rewrites the files. O(deleted rows)
+write cost instead of O(touched files), at the price of an anti-join per
+read — right for frequent small deletes (GDPR erasure, retractions).
 
-This module implements positional deletes over plain parquet using Spark's
-`_metadata.file_path` / `_metadata.row_index` scan columns (stable per
-parquet file):
-
-- ``delete_where`` scans ONLY the predicate's columns plus the two metadata
-  columns and appends tombstones to ``<path>/_deletes/`` — data files are
-  verifiably untouched (pinned byte-for-byte in tests/test_mor.py).
-- ``read`` subtracts tombstones with a left-anti join on
-  (file_path, row_index). The broadcast is size-GATED on the sidecar's
-  measured row count (one footer-cheap count of the tiny sidecar):
-  tombstones scale with delete volume, and a 100 TB table that has
-  absorbed heavy deletes would OOM an unconditional broadcast — above the
-  gate the anti-join stays adaptive, hash-partitioned on
-  (file_path, row_index), which co-partitions with the scan. At cluster
-  scale Delta encodes the same information as per-file roaring bitmaps;
-  the join-based form here has identical semantics.
-- ``purge`` applies all tombstones and rewrites the data files
-  (copy-on-write compaction), emptying the sidecar directory — the point
-  where merge-on-read debt is repaid.
-
-Registered query q_deletion_vectors runs the full cycle against an orders
-mirror and must read back exactly the oracle's filtered table.
+``MergeOnReadTable`` is a ``VersionedLakeTable`` whose DELETE is
+``mark_deleted``: tombstones are deletion vectors in the table's own
+snapshots, so they commit under OCC, time-travel and are vacuumed with the
+data. ``read`` subtracts them, data files stay byte-identical (pinned in
+tests/test_mor.py), and ``purge`` is ``compact``. Registered query
+q_deletion_vectors runs the cycle against an orders mirror.
 """
 
 from __future__ import annotations
@@ -40,101 +22,29 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .fs import LakeFS
 from .registry import df_query
 from .sources.tables import load_tables
+from .versioned import VersionedLakeTable
 
-_DELETES_DIR = "_deletes"
 
-
-class MergeOnReadTable:
-    """Parquet table with positional-delete sidecars (merge-on-read)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self.deletes_path = os.path.join(path, _DELETES_DIR)
-
-    # -- write side ---------------------------------------------------------
+class MergeOnReadTable(VersionedLakeTable):
+    """An unpartitioned versioned table whose DELETE is merge-on-read."""
 
     def write_base(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self.path)
+        self.overwrite(df)
 
     def delete_where(self, predicate: str) -> int:
-        """Append (file_path, row_index) tombstones for matching rows.
-        Reads only the predicate columns + metadata; writes only the
-        sidecar. Returns the number of tombstones written."""
-        matches = (
-            self._raw()
-            .filter(predicate)
-            .select(
-                F.col("_metadata.file_path").alias("file_path"),
-                F.col("_metadata.row_index").alias("row_index"),
-            )
-        )
-        matches.write.mode("append").parquet(self.deletes_path)
-        self.spark.catalog.refreshByPath(self.deletes_path)
-        # Distinct: overlapping predicates across DELETE calls legally
-        # re-tombstone the same position; the count reported is live
-        # distinct tombstones, matching what read() subtracts.
-        return (
-            self.spark.read.parquet(self.deletes_path).distinct().count()
-        )
-
-    # -- read side ----------------------------------------------------------
-
-    def _raw(self) -> DataFrame:
-        # The sidecar lives under the table path; exclude it from the scan.
-        df = self.spark.read.option(
-            "pathGlobFilter", "*.parquet"
-        ).parquet(self.path)
-        return df
-
-    def _tombstones(self) -> DataFrame | None:
-        if not LakeFS(self.spark, self.path).exists(self.deletes_path):
-            return None
-        return self.spark.read.parquet(self.deletes_path)
-
-    def read(self) -> DataFrame:
-        """Merge-on-read scan: base rows minus tombstoned positions."""
-        base = self._raw().withColumns(
-            {
-                "__fp": F.col("_metadata.file_path"),
-                "__ri": F.col("_metadata.row_index"),
-            }
-        )
-        tomb = self._tombstones()
-        if tomb is None:
-            return base.drop("__fp", "__ri")
-        cond = (base["__fp"] == tomb["file_path"]) & (
-            base["__ri"] == tomb["row_index"]
-        )
-        # Tombstones scale with DELETE volume, not with a dimension bound:
-        # a 100 TB table that has absorbed heavy deletes carries a sidecar
-        # far past the broadcast threshold, and an unconditional broadcast
-        # hint OOMs the read path (VERDICT r06 #2). Gate on the sidecar's
-        # measured count (a footer-level scan of the tiny-by-construction
-        # sidecar files only, never the base); above the gate the anti-join
-        # stays adaptive and hash-partitions on (file_path, row_index),
-        # which co-partitions with the base scan's file grouping.
-        from .plans.audit import gated_broadcast
-
-        tomb_b = gated_broadcast(tomb, tomb.count())
-        return base.join(tomb_b, cond, "left_anti").drop("__fp", "__ri")
-
-    # -- maintenance --------------------------------------------------------
+        """Commit (file_path, row_index) tombstones for the live rows
+        matching ``predicate``. Returns the live tombstone count: the
+        deletion vectors of the new snapshot, which never tombstone a
+        position twice (only live rows are matched)."""
+        version = self.mark_deleted(predicate)
+        return sum(d["rows"] for d in self._snapshot(version).deletes)
 
     def purge(self) -> None:
-        """Apply tombstones (copy-on-write rewrite) and clear the sidecar."""
-        kept = self.read()
-        tmp = self.path.rstrip("/") + "__purge_tmp"
-        kept.write.mode("overwrite").parquet(tmp)
-        fs = LakeFS(self.spark, self.path)
-        fs.delete(self.path, recursive=True)
-        fs.rename(tmp, self.path)
-        self.spark.catalog.refreshByPath(self.path)
+        """Apply the deletion vectors by rewriting the files they cover."""
+        self.compact()
 
 
 _MOR_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_mor")
@@ -162,12 +72,14 @@ WHERE o_orderkey % 7 <> 0 AND NOT (o_orderstatus = 'F' AND o_custkey % 3 = 0)
 """,
     tables=["orders"],
     doc="Merge-on-read deletion vectors (Delta DV / Iceberg v2 positional "
-    "deletes): two row-level DELETEs write only (file_path, row_index) "
-    "tombstone sidecars — the data files are byte-identical afterwards "
-    "(pinned in tests/test_mor.py) — and the scan subtracts them with a "
-    "broadcast anti-join on the position key. Oracle = orders minus both "
-    "predicates; a green row proves tombstones compose across commits "
-    "and the read sees exactly the surviving rows.",
+    "deletes): two row-level DELETEs each commit one (file_path, row_index) "
+    "tombstone file as a deletion vector in the versioned table's manifest "
+    "— the data files are byte-identical afterwards (pinned in "
+    "tests/test_mor.py) — and the scan subtracts them with an anti-join on "
+    "the position key, broadcast below a gate on the manifest's tombstone "
+    "count. Oracle = orders minus both predicates; a green row proves "
+    "tombstones compose across commits and the read sees exactly the "
+    "surviving rows.",
 )
 def q_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders"])
@@ -176,16 +88,12 @@ def q_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _mor_dir(sf_dir)
     table = MergeOnReadTable(spark, path)
-    marker = os.path.join(path, "_MOR_COMPLETE")
-    if not os.path.exists(marker):
+    # Built once per process: complete once its three commits are logged.
+    if table.latest_version() != 3:
         import shutil
 
         shutil.rmtree(path, ignore_errors=True)
         table.write_base(orders)
         table.delete_where("o_orderkey % 7 = 0")
         table.delete_where("o_orderstatus = 'F' AND o_custkey % 3 = 0")
-        with open(marker, "w"):
-            pass
-    return table.read().select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
-    )
+    return table.read()

@@ -21,9 +21,17 @@ commit model — natively:
   manifest's files with partition values parsed via basePath;
 - readers are **snapshot-isolated** for free: a lazy plan over version N
   keeps working while later commits run, because no commit removes files;
+- ``mark_deleted`` is the merge-on-read DELETE (Delta deletion vectors /
+  Iceberg v2 positional delete files): it writes one tombstone file of
+  (``_metadata.file_path``, ``_metadata.row_index``) rows and the manifest
+  lists it under ``deletes`` with its row count and the data files it
+  covers. Every read of that snapshot subtracts it; a later rewrite of the
+  covered files (compact, copy-on-write DML) drops it. Tombstones live in
+  the snapshot like data files, so they time-travel, commit under OCC and
+  are vacuumed like data files;
 - ``vacuum(retain_last=...)`` is the physical-deletion boundary (Delta
-  VACUUM): drops files unreferenced by the retained manifests, then the
-  expired manifests.
+  VACUUM): drops data and tombstone files unreferenced by the retained
+  manifests, then the expired manifests.
 
 Scale posture: manifests are metadata-sized (one relative path per live
 file — the thing Delta stores as add-actions); commits append one small
@@ -42,6 +50,7 @@ import re
 import uuid
 from dataclasses import dataclass, field, replace
 from typing import NoReturn
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +67,15 @@ from .lake import (
 )
 
 
+# Where mark_deleted stages tombstone files, their schema, and the scan
+# columns that give a row's position.
+_DELETES_DIR = "_deletes"
+_TOMBSTONES = "file_path string, row_index bigint"
+_POSITIONS = ("_metadata.file_path AS __fp", "_metadata.row_index AS __ri")
+# Parquet physical types whose footer min/max are exact (never truncated).
+_NUMERIC = ("INT32", "INT64", "FLOAT", "DOUBLE")
+
+
 class ConcurrentCommitError(RuntimeError):
     """Another writer committed the same version first (optimistic
     concurrency, Delta-protocol style): re-read the table and retry."""
@@ -70,7 +88,9 @@ class _Snapshot:
     carries every field but ``version`` and ``op`` forward unless the
     operation changes it; ``partition_cols`` is the writer's own.
     ``base`` (a shallow clone's source root) stays in the manifest format;
-    reads derive each file's root from its path (``_root_of``)."""
+    reads derive each file's root from its path (``_root_of``). Each
+    ``deletes`` entry is a deletion vector: {"path": tombstone file,
+    "rows": its row count, "files": the live files it covers}."""
 
     version: int | None = None
     op: str = ""
@@ -83,6 +103,7 @@ class _Snapshot:
     generated_cols: dict = field(default_factory=dict)
     retired_physical: tuple[str, ...] = ()
     stats: dict = field(default_factory=dict)
+    deletes: tuple[dict, ...] = ()
 
 
 class VersionedLakeTable(TxnLedger):
@@ -161,6 +182,7 @@ class VersionedLakeTable(TxnLedger):
             generated_cols=m.get("generated_cols", {}),
             retired_physical=tuple(m.get("retired_physical", ())),
             stats=m.get("stats", {}),
+            deletes=tuple(m.get("deletes", ())),
         )
 
     def _nonempty(self, snap: _Snapshot, what: str) -> _Snapshot:
@@ -177,39 +199,49 @@ class VersionedLakeTable(TxnLedger):
 
     # -- file probes --------------------------------------------------------
 
-    def _data_files(self) -> set[str]:
-        """All part files under the table root, as table-relative paths.
-        One recursive walk; partition depth is the directory depth."""
+    def _parquet_under(self, base: str) -> set[str]:
+        """Parquet files below ``base`` as ``base``-relative paths, one
+        listing per directory. Names Spark's file index hides (``.``, and
+        ``_`` unless a ``col=value`` directory) are skipped."""
         found: set[str] = set()
 
         def walk(rel: str) -> None:
-            absdir = os.path.join(self.path, rel) if rel else self.path
-            for name, is_dir, _ in self.fs.list(absdir):
-                if name.startswith((".", "_")):
+            for name, is_dir, _ in self.fs.list(os.path.join(base, rel)):
+                child = os.path.join(rel, name)
+                if name.startswith(".") or (name.startswith("_") and "=" not in name):
                     continue
-                child = os.path.join(rel, name) if rel else name
                 if is_dir:
                     walk(child)
                 elif name.endswith(".parquet"):
                     found.add(child)
 
-        if self.fs.is_dir(self.path):
+        if self.fs.is_dir(base):
             walk("")
         return found
 
-    def _commit(self, snap: _Snapshot, op: str, **changes) -> int:
+    def _data_files(self) -> set[str]:
+        """All data and tombstone files under the table root, as
+        table-relative paths."""
+        tombs = self._parquet_under(os.path.join(self.path, _DELETES_DIR))
+        return self._parquet_under(self.path) | {
+            os.path.join(_DELETES_DIR, f) for f in tombs
+        }
+
+    def _commit(self, snap: _Snapshot, op: str, staged=(), **changes) -> int:
         """Commit the version after ``snap``: its manifest is ``snap``'s
         fields with ``changes`` (files, schema, constraints, ...) applied.
         The put-if-absent write targets exactly snap.version+1, so a racer
         that committed in between makes THIS commit fail with
-        ConcurrentCommitError instead of silently dropping the racer's
-        files from the live set (the lost-update mode the concurrent
-        stress test caught). Per-file stats carry over for files the
+        ConcurrentCommitError (deleting ``staged``, exactly the files this
+        operation wrote) instead of silently dropping the racer's files
+        from the live set. Per-file stats carry over for files the
         snapshot already described; other files get theirs from the
-        parquet footer when ``stats_cols`` is set."""
+        parquet footer when ``stats_cols`` is set. Deletion vectors none
+        of whose files stay live are dropped."""
         new = replace(snap, **changes)
         version = (snap.version or 0) + 1
         files = sorted(new.files)
+        live = set(files)
         manifest = {
             "version": version,
             "op": op,
@@ -224,6 +256,7 @@ class VersionedLakeTable(TxnLedger):
             "column_mapping": new.column_mapping,
             "generated_cols": new.generated_cols,
             "retired_physical": list(new.retired_physical),
+            "deletes": [d for d in new.deletes if not live.isdisjoint(d["files"])],
         }
         manifest.update((k, v) for k, v in carried.items() if v)
         stats = new.stats
@@ -244,6 +277,7 @@ class VersionedLakeTable(TxnLedger):
                 self._manifest_path(version), json.dumps(manifest)
             )
         except FileExistsError:
+            self._drop(staged)
             raise ConcurrentCommitError(
                 f"version {version} at {self.path} was committed by a "
                 "concurrent writer; re-read and retry"
@@ -480,9 +514,8 @@ class VersionedLakeTable(TxnLedger):
         upper bound understate and pruning unsound for them."""
         import pyarrow.parquet as pq
 
-        path = rel if os.path.isabs(rel) else os.path.join(self.path, rel)
         try:
-            md = pq.ParquetFile(path).metadata
+            md = pq.ParquetFile(os.path.join(self.path, rel)).metadata
         except Exception:
             return {}
         logical_of = {self._phys(c, mapping): c for c in self.stats_cols}
@@ -493,22 +526,14 @@ class VersionedLakeTable(TxnLedger):
             for ci in range(g.num_columns):
                 col = g.column(ci)
                 pname = col.path_in_schema
-                if pname not in wanted or col.physical_type not in (
-                    "INT32",
-                    "INT64",
-                    "FLOAT",
-                    "DOUBLE",
-                ):
+                if pname not in wanted or col.physical_type not in _NUMERIC:
                     continue
                 st = col.statistics
                 if st is None or not st.has_min_max:
                     return {}  # any gap makes the file unprunable — be safe
                 name = logical_of[pname]  # stats are keyed by LOGICAL name
-                if name in out:
-                    out[name][0] = min(out[name][0], st.min)
-                    out[name][1] = max(out[name][1], st.max)
-                else:
-                    out[name] = [st.min, st.max]
+                lo, hi = out.get(name, (st.min, st.max))
+                out[name] = [min(lo, st.min), max(hi, st.max)]
         return out if set(out) == set(self.stats_cols) else {}
 
     # -- reads --------------------------------------------------------------
@@ -547,8 +572,9 @@ class VersionedLakeTable(TxnLedger):
         filters: list[tuple[str, float, float]] | None = None,
     ) -> DataFrame:
         """The table as of ``version`` (default: latest). Reads exactly the
-        manifest's files — dead files from later deletes are invisible, and
-        pre-evolution files yield NULL for later-added columns.
+        manifest's files minus the rows its deletion vectors tombstone —
+        dead files from later deletes are invisible, and pre-evolution
+        files yield NULL for later-added columns.
 
         ``filters`` [(col, lo, hi), ...] prunes files via the manifest's
         per-file min/max stats BEFORE Spark plans the scan (Iceberg/Delta
@@ -581,35 +607,58 @@ class VersionedLakeTable(TxnLedger):
         k = len(self.partition_cols) + 1
         return os.sep.join(parts[:-k]), os.sep.join(parts[-k:])
 
-    def _read_files(self, snap: _Snapshot, rel_files) -> DataFrame:
-        """Read ``rel_files`` of ``snap`` back as its LOGICAL schema.
+    def _read_files(
+        self, snap: _Snapshot, rel_files, positions: bool = False
+    ) -> DataFrame:
+        """Read ``rel_files`` of ``snap`` back as its LOGICAL schema, minus
+        the rows its deletion vectors tombstone: the one reader of every
+        read, time-travel read and rewrite. ``positions`` keeps each row's
+        (file URI, row index) as ``__fp`` / ``__ri``.
 
         A post-clone write mixes this table's files with the clone
         source's: each root's files are read with their own basePath and
         the reads unioned. Files are read under their PHYSICAL column
         names (the names renames never touch) and aliased back to the
-        logical schema — the metadata-only rename/drop contract."""
+        logical schema — the metadata-only rename/drop contract.
+
+        Deletion vectors covering ``rel_files`` are subtracted with a
+        left-anti join on (file_path, row_index). Tombstones scale with
+        DELETE volume, so the broadcast is gated on the row count the
+        manifest records; above the gate the join stays adaptive. Without
+        deletion vectors the plan is the plain scan."""
         roots: dict[str, list[str]] = {}
         for f in rel_files:
             root, home = self._root_of(f)
             roots.setdefault(root, []).append(os.path.join(root, home))
         if not roots:
             return self.spark.createDataFrame([], snap.schema)
+        wanted = set(rel_files)
+        dvs = [d for d in snap.deletes if not wanted.isdisjoint(d["files"])]
         mapping = snap.column_mapping
         frames = []
         for root, files in roots.items():
             reader = self.spark.read.schema(self._physical_schema(snap.schema, mapping))
             if self.partition_cols:
                 reader = reader.option("basePath", root)
-            frames.append(reader.parquet(*files))
+            df = reader.parquet(*files)
+            if positions or dvs:
+                df = df.selectExpr("*", *_POSITIONS)
+            frames.append(df)
         df = functools.reduce(DataFrame.unionByName, frames)
-        if mapping:
-            df = df.select(
-                *[
-                    F.col(self._phys(f.name, mapping)).alias(f.name)
-                    for f in snap.schema.fields
-                ]
+        if dvs:
+            from .plans.audit import gated_broadcast
+
+            tomb = self.spark.read.schema(_TOMBSTONES).parquet(
+                *[os.path.join(self.path, d["path"]) for d in dvs]
             )
+            hit = (df["__fp"] == tomb["file_path"]) & (df["__ri"] == tomb["row_index"])
+            tomb = gated_broadcast(tomb, sum(d["rows"] for d in dvs))
+            df = df.join(tomb, hit, "left_anti")
+            if not positions:
+                df = df.drop("__fp", "__ri")
+        if mapping:
+            cols = [F.col(self._phys(f.name, mapping)).alias(f.name) for f in snap.schema]
+            df = df.select(*cols, *(["__fp", "__ri"] if positions else []))
         return df
 
     # -- commits ------------------------------------------------------------
@@ -648,29 +697,15 @@ class VersionedLakeTable(TxnLedger):
         if use_partitioning:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(stage)
-
-        added: set[str] = set()
-
-        def walk(rel: str) -> None:
-            for name, is_dir, _size in self.fs.list(os.path.join(stage, rel)):
-                r = os.path.join(rel, name) if rel else name
-                if is_dir:
-                    walk(r)
-                elif not name.startswith("_") and not name.startswith("."):
-                    added.add(r)
-
-        walk("")
-        for rel in added:
-            dest_rel = os.path.join(subdir, rel) if subdir else rel
+        added = {os.path.join(subdir, rel): rel for rel in self._parquet_under(stage)}
+        for dest_rel, rel in added.items():
             dest = os.path.join(self.path, dest_rel)
-            parent = os.path.dirname(dest)
-            if parent:
-                self.fs.mkdirs(parent)
+            self.fs.mkdirs(os.path.dirname(dest))
             if not self.fs.rename(os.path.join(stage, rel), dest):
                 raise ValidationError(f"staged move failed: {rel} -> {dest_rel}")
         self.fs.delete(stage, recursive=True)
         self.spark.catalog.refreshByPath(self.path)
-        return {os.path.join(subdir, r) if subdir else r for r in added}
+        return set(added)
 
     def _checked_write(
         self, df: DataFrame, mapping: dict[str, str], metrics: dict
@@ -693,10 +728,14 @@ class VersionedLakeTable(TxnLedger):
         kept = {k: v for k, v in observed.items() if not k.startswith(rules)}
         return added, kept, bad
 
+    def _drop(self, staged) -> None:
+        """Delete files this operation staged and will not commit."""
+        for rel in staged:
+            self.fs.delete(os.path.join(self.path, rel))
+
     def _discard(self, added: set[str], message: str) -> NoReturn:
         """Delete an uncommitted write's staged files and refuse it."""
-        for rel in added:
-            self.fs.delete(os.path.join(self.path, rel))
+        self._drop(added)
         raise ValidationError(message)
 
     def _stage_append(
@@ -739,15 +778,26 @@ class VersionedLakeTable(TxnLedger):
         semantics."""
         return self._append(self._snapshot(), df, merge_schema)
 
-    def _append(self, snap: _Snapshot, df: DataFrame, merge_schema: bool) -> int:
+    def overwrite(self, df: DataFrame) -> int:
+        """Commit an INSERT OVERWRITE: ``df``'s rows replace every live file
+        and deletion vector (older snapshots keep reading theirs). Schema,
+        CHECK and generated-column rules apply as in append. Returns the
+        new version."""
+        return self._append(self._snapshot(), df, False, "overwrite")
+
+    def _append(
+        self, snap: _Snapshot, df: DataFrame, merge_schema: bool, op: str = "append"
+    ) -> int:
         added, _, bad, changes = self._stage_append(snap, df, merge_schema, {})
         if bad:
             self._discard(
                 added,
-                "append rejected by CHECK constraints / generated-"
+                f"{op} rejected by CHECK constraints / generated-"
                 f"column validation (staged files discarded): {bad}",
             )
-        return self._commit(snap, "append", **changes)
+        if op == "overwrite":
+            changes["files"] = added
+        return self._commit(snap, op, staged=added, **changes)
 
     def wap_append(
         self,
@@ -781,7 +831,7 @@ class VersionedLakeTable(TxnLedger):
                 "wap_append audit failed (staged files discarded, nothing "
                 "published): " + "; ".join(violations),
             )
-        return self._commit(snap, "append", **changes), observed
+        return self._commit(snap, "append", staged=added, **changes), observed
 
     def _rewrite(self, snap: _Snapshot, op: str, affected, rewrite, checks=None) -> int:
         """Commit ``op`` as a partition-bounded rewrite of ``snap``: the
@@ -810,7 +860,7 @@ class VersionedLakeTable(TxnLedger):
         )
         if bad:
             self._discard(added, f"{op} rejected by CHECK constraints: {bad}")
-        return self._commit(snap, op, files=(live - dead) | added)
+        return self._commit(snap, op, staged=added, files=(live - dead) | added)
 
     def delete_where(self, predicate: str) -> int:
         """Commit a DELETE. Survivors of affected partitions are rewritten as
@@ -903,25 +953,42 @@ class VersionedLakeTable(TxnLedger):
             lambda scope: scope.join(all_keys, keys, "left_anti").unionByName(inserts),
         )
 
-    # -- maintenance --------------------------------------------------------
+    def mark_deleted(self, predicate: str) -> int:
+        """Commit a merge-on-read DELETE (Delta deletion vectors / Iceberg
+        v2 positional deletes): no data file is rewritten. One job scans
+        the live rows matching ``predicate`` and writes their (file_path,
+        row_index) as one tombstone file, observing its row count and the
+        files it covers; the commit adds it to the snapshot's deletion
+        vectors. A NULL predicate keeps the row. Returns the new version."""
+        snap = self._nonempty(self._snapshot(), "mark_deleted")
+        if not snap.files:
+            return self._commit(snap, "mark_deleted(noop)")
+        obs = Observation()
+        hits = (
+            self._read_files(snap, snap.files, positions=True)
+            .filter(predicate)
+            .select(F.col("__fp").alias("file_path"), F.col("__ri").alias("row_index"))
+            .repartition(1)
+            .observe(
+                obs, F.count("*").alias("rows"), F.collect_set("file_path").alias("files")
+            )
+        )
+        added = self._staged_write(hits, {}, subdir=_DELETES_DIR, partitioned=False)
+        seen = obs.get
+        if not seen["rows"]:
+            self._drop(added)
+            return self._commit(snap, "mark_deleted(noop)")
+        # A file URI, decoded, is an absolute path: its root-relative part
+        # names the live file.
+        by_home = {self._root_of(f)[1]: f for f in snap.files}
+        covered = sorted(
+            by_home[self._root_of(unquote(urlsplit(u).path))[1]] for u in seen["files"]
+        )
+        (path,) = added
+        dv = {"path": path, "rows": seen["rows"], "files": covered}
+        return self._commit(snap, "mark_deleted", staged=added, deletes=(*snap.deletes, dv))
 
-    def _by_dir(self, snap: _Snapshot) -> dict[str, tuple[list[str], int]]:
-        """Live files grouped by partition directory relative to their root
-        (this table's, or a clone source's for shallow-clone files, so a
-        rewrite into that directory re-homes them under this table), with
-        the group's total bytes (one listing per directory on disk)."""
-        groups: dict[str, list[str]] = {}
-        for f in snap.files:
-            groups.setdefault(os.path.dirname(self._root_of(f)[1]), []).append(f)
-        out = {}
-        for d, group in groups.items():
-            paths = [os.path.join(self.path, f) for f in group]
-            size = {}
-            for absdir in {os.path.dirname(p) for p in paths}:
-                for name, is_dir, n in self.fs.list(absdir):
-                    size[os.path.join(absdir, name)] = n
-            out[d] = (group, sum(size.get(p, 0) for p in paths))
-        return out
+    # -- maintenance --------------------------------------------------------
 
     def compact(self, target_file_bytes: int = 128 << 20) -> int:
         """Commit an OPTIMIZE: rewrite the current live set as bin-packed
@@ -934,29 +1001,22 @@ class VersionedLakeTable(TxnLedger):
         survives a VACUUM of its source. Returns the new version, or -1 if
         the table is already compact (no commit written)."""
         snap = self._snapshot()
-        if snap.version is None:
-            return -1
-        live = set(snap.files)
-        new_live = set(live)
+        deleted = {f for d in snap.deletes for f in d["files"]}
+
         # A partition is worth rewriting if it has more files than its data
-        # needs, or if it still references a shallow-clone source's files
-        # (the rewrite deep-copies them under this table's root).
-        for d, (files, total) in self._by_dir(snap).items():
-            want = max(1, math.ceil(total / target_file_bytes))
-            if len(files) <= want and not any(map(os.path.isabs, files)):
-                continue
-            # Stage into the partition directory (values are fixed within
-            # it), keeping the hive layout without re-shuffling.
-            added = self._staged_write(
-                self._read_files(snap, files).coalesce(want).drop(*self.partition_cols),
-                snap.column_mapping,
-                subdir=d,
-                partitioned=False,
+        # needs, if it still references a shallow-clone source's files
+        # (the rewrite deep-copies them under this table's root), or if a
+        # deletion vector covers one of its files (the rewrite applies it).
+        def worth(files: list[str], want: int) -> bool:
+            return (
+                len(files) > want
+                or any(map(os.path.isabs, files))
+                or not deleted.isdisjoint(files)
             )
-            new_live = (new_live - set(files)) | added
-        if new_live == live:
-            return -1
-        return self._commit(snap, "compact", files=new_live)
+
+        return self._rewrite_dirs(
+            snap, "compact", DataFrame.coalesce, 1, target_file_bytes, worth
+        )
 
     def cluster(
         self,
@@ -979,14 +1039,7 @@ class VersionedLakeTable(TxnLedger):
         the table is empty."""
         from .operators.zorder import minmax_scale, zorder_column
 
-        snap = self._snapshot()
-        if snap.version is None:
-            return -1
-        live = set(snap.files)
-        new_live = set(live)
-        for d, (files, total) in self._by_dir(snap).items():
-            df = self._read_files(snap, files).drop(*self.partition_cols)
-            want = max(min_files, math.ceil(total / target_file_bytes))
+        def layout(df: DataFrame, want: int) -> DataFrame:
             aggs = []
             for c in zorder_by:
                 aggs += [F.min(c).alias(f"mn_{c}"), F.max(c).alias(f"mx_{c}")]
@@ -1000,34 +1053,68 @@ class VersionedLakeTable(TxnLedger):
                 )
                 for c in zorder_by
             ]
-            clustered = (
+            return (
                 df.withColumn("__z", zorder_column(cols, bits))
                 .repartitionByRange(want, "__z")
                 .sortWithinPartitions("__z")
                 .drop("__z")
             )
-            added = self._staged_write(
-                clustered, snap.column_mapping, subdir=d, partitioned=False
-            )
+
+        return self._rewrite_dirs(
+            self._snapshot(), "zorder", layout, min_files, target_file_bytes
+        )
+
+    def _rewrite_dirs(
+        self, snap: _Snapshot, op: str, layout, min_files: int, target_bytes: int, worth=None
+    ) -> int:
+        """Commit ``op`` (compact, cluster) as a per-directory rewrite of
+        ``snap``. Live files are grouped by partition directory relative to
+        their root (a shallow-clone source's files are re-homed under this
+        table) and sized by one listing per directory. Each directory
+        ``worth(files, want)`` rewriting (default: all) gets ``layout(its
+        rows, want)`` staged into it as about ``want`` files: partition
+        values are fixed there, so no re-shuffle. Returns the new version,
+        or -1 if nothing was rewritten."""
+        if snap.version is None:
+            return -1
+        live = set(snap.files)
+        new_live = set(live)
+        groups: dict[str, list[str]] = {}
+        for f in snap.files:
+            groups.setdefault(os.path.dirname(self._root_of(f)[1]), []).append(f)
+        for d, files in groups.items():
+            paths = [os.path.join(self.path, f) for f in files]
+            size = {
+                os.path.join(absdir, name): n
+                for absdir in {os.path.dirname(p) for p in paths}
+                for name, _, n in self.fs.list(absdir)
+            }
+            total = sum(size.get(p, 0) for p in paths)
+            want = max(min_files, math.ceil(total / target_bytes))
+            if worth and not worth(files, want):
+                continue
+            df = layout(self._read_files(snap, files).drop(*self.partition_cols), want)
+            added = self._staged_write(df, snap.column_mapping, subdir=d, partitioned=False)
             new_live = (new_live - set(files)) | added
         if new_live == live:
             return -1
-        return self._commit(snap, "zorder", files=new_live)
+        # Every file new to the live set was staged by this operation.
+        return self._commit(snap, op, staged=new_live - live, files=new_live)
 
     def restore(self, version: int) -> int:
         """Delta RESTORE TABLE ... TO VERSION AS OF n: commit a NEW version
-        whose manifest is the target version's file list and schema, with
-        the schema's column mapping, generated columns and CHECK
-        constraints — a zero-copy rollback that PRESERVES history (the bad
+        whose manifest is the target version's file list, deletion vectors
+        and schema, with the schema's column mapping, generated columns and
+        CHECK constraints — a zero-copy rollback that PRESERVES history (the bad
         versions stay readable until vacuum, exactly Delta's semantics; a
         destructive log rewind would break time travel and concurrent
         readers). The retired-physical ledger only grows, so it carries
-        forward from the head. Refuses if any restored file has been
-        vacuumed away in the meantime."""
+        forward from the head. Refuses if any restored data or tombstone
+        file has been vacuumed away in the meantime."""
         head = self._snapshot()
         target = self._snapshot(version)
         missing = [
-            f for f in target.files
+            f for f in (*target.files, *(d["path"] for d in target.deletes))
             if not self.fs.exists(os.path.join(self.path, f))
         ]
         if missing:
@@ -1040,6 +1127,7 @@ class VersionedLakeTable(TxnLedger):
             head,
             "restore",
             files=target.files,
+            deletes=target.deletes,
             schema=target.schema,
             column_mapping=target.column_mapping,
             generated_cols=target.generated_cols,
@@ -1049,8 +1137,8 @@ class VersionedLakeTable(TxnLedger):
     def clone_to(self, dest_path: str) -> "VersionedLakeTable":
         """Zero-copy SHALLOW CLONE of the latest snapshot (Delta CLONE):
         the clone gets its own commit log whose first manifest references
-        the source's live data files by absolute path — no data moves —
-        and carries the source's schema, column mapping, CHECK
+        the source's live data and tombstone files by absolute path — no
+        data moves — and carries the source's schema, column mapping, CHECK
         constraints and generated columns. Writes to the clone land under
         the clone's root and never touch the source; the source evolving
         (appends/deletes) never changes the clone (its manifest pins the
@@ -1063,12 +1151,14 @@ class VersionedLakeTable(TxnLedger):
         empty = clone._snapshot()
         if empty.version is not None:
             raise ValidationError(f"clone destination {dest_path} not empty")
+        absolute = functools.partial(os.path.join, self.path)
         clone._commit(
             empty,
             f"clone(shallow from {self.path}@v{snap.version})",
-            files=[
-                f if os.path.isabs(f) else os.path.join(self.path, f)
-                for f in snap.files
+            files=[absolute(f) for f in snap.files],
+            deletes=[
+                {**d, "path": absolute(d["path"]), "files": list(map(absolute, d["files"]))}
+                for d in snap.deletes
             ],
             schema=snap.schema,
             base=snap.base or self.path,
@@ -1080,20 +1170,21 @@ class VersionedLakeTable(TxnLedger):
         return clone
 
     def orphans(self, retain_last: int = 1) -> set[str]:
-        """Table-relative data files on disk that no retained manifest
-        references (failed writes, vacuum candidates). Pure report — the
-        audit half of vacuum()."""
+        """Table-relative data and tombstone files on disk that no retained
+        manifest references (failed writes, vacuum candidates). Pure
+        report — the audit half of vacuum()."""
         vs = self.versions()
         if not vs:
             return set()
         referenced: set[str] = set()
         for v in vs[-max(1, retain_last):]:
-            referenced |= set(self._snapshot(v).files)
+            snap = self._snapshot(v)
+            referenced |= {*snap.files, *(d["path"] for d in snap.deletes)}
         return self._data_files() - referenced
 
     def vacuum(self, retain_last: int = 1) -> int:
-        """Physically delete files unreferenced by the newest ``retain_last``
-        manifests, then drop the expired manifests (Delta VACUUM + log
+        """Physically delete data and tombstone files unreferenced by the
+        newest ``retain_last`` manifests, then drop the expired manifests (Delta VACUUM + log
         retention in one). Also clears ``_staging`` leftovers from crashed
         commits (underscore-prefixed, so invisible to readers and to the
         orphan walk) — like Delta's VACUUM, this must not run concurrently

@@ -53,11 +53,15 @@ _SAMPLED = {
     ("test_determinism.py", "test_partition_invariance"): (3, 0),
 }
 
-# Cases the default run keeps whatever their residue. q_dedup_clusters
-# is the oracle check of connected-components dedup; its residue (2) is
-# sampled by neither parity sweep.
+# Cases the default run keeps whatever their residue, which neither
+# parity sweep samples: q_dedup_clusters (residue 2) is the oracle check
+# of connected-components dedup, q_deletion_vectors (residue 3) that of
+# merge-on-read deletion vectors.
 _PINNED = {
-    ("test_oracle_parity.py", "test_query_parity"): {"q_dedup_clusters"},
+    ("test_oracle_parity.py", "test_query_parity"): {
+        "q_dedup_clusters",
+        "q_deletion_vectors",
+    },
 }
 
 # Whole files gated out of the default run (reason documented per file).

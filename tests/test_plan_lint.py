@@ -355,7 +355,8 @@ HINT_WHITELIST = {
     "q_kmeans_step": "centroid components: corpus ⋈ LIMIT-k ids (k·dim rows)",
     "q_similarity_pq_rerank": "PQ codebook/LUT/probe tables (16-code × 8-sub model)",
     "q_pq_adc_step": "PQ codebook literal + probes·8·16-row LUT",
-    "q_deletion_vectors": "size-gated on measured tombstone count (mor.read)",
+    "q_deletion_vectors": "size-gated on the tombstone count the manifest "
+    "records for the snapshot's deletion vectors (versioned._read_files)",
     "q_hits": "size-gated on measured per-side node counts",
     "q_item_cf": "size-gated (gated_broadcast, d17ab03)",
     "q_rec_hitrate": "size-gated (gated_broadcast, d17ab03)",

@@ -438,11 +438,46 @@ def test_append_never_mixes_two_snapshots(spark, tmp_path, monkeypatch):
         t.append(batch)
     monkeypatch.undo()
     assert raced and t.history()[-1]["op"] == "add_generated_column"
+    assert t.orphans() == set()  # the losing append's files are gone
     assert t.append(batch) == 3
     # Row 1 predates the column; every row written after it has its value.
     assert sorted((r.k, r.v2) for r in t.read().collect()) == [
         (1, None), (2, 40), (3, 60),
     ]
+    assert t.orphans() == set()
+
+
+def _stale(t, version):
+    """Pin handle ``t`` to the log as it stood at ``version``."""
+    t.versions = lambda: list(range(1, version + 1))
+    t.latest_version = lambda: version
+
+
+def test_losing_commit_deletes_only_what_it_staged(spark, tmp_path):
+    """A merge-on-read delete that loses the OCC race deletes the
+    tombstone file it staged; a losing RESTORE, which stages nothing and
+    re-references existing files, deletes nothing."""
+    import os
+
+    from nyc_taxi_lakehouse_spark.versioned import ConcurrentCommitError
+
+    path = str(tmp_path / "lose")
+    t = VersionedLakeTable(spark, path)
+    t.append(spark.range(20).selectExpr("id AS k"))
+    t.delete_where("k < 2")  # v2 no longer lists v1's files
+    VersionedLakeTable(spark, path).mark_deleted("k < 5")  # v3 wins
+    on_disk = t._data_files()
+    v1_files = set(t._snapshot(1).files)
+    _stale(t, 2)
+    with pytest.raises(ConcurrentCommitError):
+        t.mark_deleted("k >= 15")
+    with pytest.raises(ConcurrentCommitError):
+        t.restore(1)
+    fresh = VersionedLakeTable(spark, path)
+    assert fresh._data_files() == on_disk and v1_files <= on_disk
+    assert all(os.path.exists(os.path.join(path, f)) for f in on_disk)
+    assert fresh.orphans(retain_last=3) == set()
+    assert sorted(r.k for r in fresh.read().collect()) == list(range(5, 20))
 
 
 def test_restore_is_zero_copy_and_history_preserving(spark, tmp_path):
@@ -520,6 +555,8 @@ def test_occ_concurrent_append_stress(spark, tmp_path):
     assert t.read().count() == 1 + 2 * rounds
     # version numbers are a gapless sequence: one winner per version
     assert t.versions() == list(range(1, 2 + 2 * rounds))
+    # no conflict left a file that no manifest references
+    assert t.orphans(retain_last=len(t.versions())) == set()
 
 
 def test_occ_concurrent_merge_stress(spark, tmp_path):
@@ -564,6 +601,7 @@ def test_occ_concurrent_merge_stress(spark, tmp_path):
     assert len(rows) == 20
     assert all(v == rounds for v in rows.values()), rows
     assert t.versions() == list(range(1, 2 + 2 * rounds))
+    assert t.orphans(retain_last=len(t.versions())) == set()
 
 
 def test_crashed_commit_staging_is_invisible_and_vacuumable(spark, tmp_path):
