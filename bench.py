@@ -223,13 +223,13 @@ HEADLINE = [
 ]
 
 
-# Replay-backed streaming queries memoize their sink per process (the cache
-# key includes the pid — streaming/replay.py:_replay_key), so in a fresh
-# bench process run 1 executes the real watermarked drain and run 2 reads
-# the memoized sink. The reported per-query number stays the min (the
-# memoized read, comparable across rounds); the run-1 wall time is reported
-# separately under "first_drain" so the bench file is self-describing about
-# what the streaming pipelines actually cost end-to-end.
+# Replay-backed streaming queries memoize their sink per Spark application
+# (a scratch table under the application's temp directory — scratch.py), so
+# in a fresh bench process run 1 executes the real watermarked drain and
+# later runs read the memoized sink. The reported per-query number is the
+# median of those memoized reads (comparable across rounds); the run-1
+# wall time is reported separately under "first_drain" so the bench file
+# is self-describing about what the streaming pipelines cost end-to-end.
 REPLAY_BACKED = {
     "q_stream_dedup",
     "q_session_stream",
@@ -319,7 +319,7 @@ def main() -> None:
         bests[name] = round(samples_sorted[0], 4)
         if name in REPLAY_BACKED:
             # Run 1 executes the real watermarked drain; later runs read
-            # the per-process memoized sink (see REPLAY_BACKED note). The
+            # the application's memoized sink (see REPLAY_BACKED note). The
             # drain time is reported separately; the per-query number is
             # the median of the warm (memoized-read) runs only — a median
             # that included the drain would misstate the steady-state read.

@@ -476,11 +476,14 @@ class ControlTable:
     """High-watermark bookkeeping (reference nyc_taxi_iceberg_etl.py:46-82)."""
 
     def __init__(self, spark: SparkSession, path: str):
+        from .fs import LakeFS
+
         self.spark = spark
         self.path = path
+        self.fs = LakeFS(spark, path)
 
     def get_watermark(self, source: str):
-        if not os.path.isdir(self.path):
+        if not self.fs.is_dir(self.path):
             return None
         df = self.spark.read.parquet(self.path)
         row = (

@@ -17,13 +17,10 @@ q_deletion_vectors runs the cycle against an orders mirror.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .registry import df_query
+from .scratch import memoized, scratch_dir
 from .sources.tables import load_tables
 from .versioned import VersionedLakeTable
 
@@ -45,22 +42,6 @@ class MergeOnReadTable(VersionedLakeTable):
     def purge(self) -> None:
         """Apply the deletion vectors by rewriting the files they cover."""
         self.compact()
-
-
-_MOR_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_mor")
-
-
-def _mor_dir(sf_dir: str) -> str:
-    """Content-keyed per-process table dir (operators/evolution.py
-    discipline)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"mor:{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"mor:{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(_MOR_ROOT, f"{key}-pid{os.getpid()}")
 
 
 @df_query(
@@ -86,14 +67,13 @@ def q_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    path = _mor_dir(sf_dir)
+    path = scratch_dir(spark, "mor", sf_dir, ["orders"])
     table = MergeOnReadTable(spark, path)
-    # Built once per process: complete once its three commits are logged.
-    if table.latest_version() != 3:
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
+    def build(_path: str) -> None:
         table.write_base(orders)
         table.delete_where("o_orderkey % 7 = 0")
         table.delete_where("o_orderstatus = 'F' AND o_custkey % 3 = 0")
+
+    memoized(path, build)
     return table.read()

@@ -23,14 +23,11 @@ partition pruning and column pruning apply to each side independently.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import df_query
+from ..scratch import memoized, scratch_dir
 from ..sources.tables import load_tables
 from ..versioned import VersionedLakeTable
 
@@ -74,23 +71,6 @@ def snapshot_diff(
             *[F.col("__new")[c].alias(c) for c in value_cols],
         )
     )
-
-
-_CDF_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_cdf")
-
-
-def _cdf_dir(sf_dir: str) -> str:
-    """Content-keyed per-process table dir (same discipline as
-    operators/evolution.py:_evo_dir — immune to regenerated test data and
-    concurrent sessions)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"cdf:{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"cdf:{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(_CDF_ROOT, f"{key}-pid{os.getpid()}")
 
 
 @df_query(
@@ -184,13 +164,10 @@ def _build_cdf_table(spark: SparkSession, sf_dir: str) -> VersionedLakeTable:
     orders = t["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    path = _cdf_dir(sf_dir)
+    path = scratch_dir(spark, "cdf", sf_dir, ["orders"])
     table = VersionedLakeTable(spark, path)
-    marker = os.path.join(path, "_CDF_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
+    def build(_path: str) -> None:
         table.append(orders.filter("o_orderkey % 3 <> 0"))
         inserts = orders.filter("o_orderkey % 3 = 0")
         updates = orders.filter(
@@ -203,8 +180,8 @@ def _build_cdf_table(spark: SparkSession, sf_dir: str) -> VersionedLakeTable:
             .unionByName(deletes.withColumn("__del", F.lit(True)))
         )
         table.merge_upsert(batch, keys=["o_orderkey"], delete_col="__del")
-        with open(marker, "w"):
-            pass
+
+    memoized(path, build)
     return table
 
 

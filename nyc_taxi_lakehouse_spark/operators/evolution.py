@@ -19,35 +19,13 @@ partitioned by o_orderstatus) all at once.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..lake import LakeTable
 from ..registry import df_query
+from ..scratch import memoized, scratch_dir
 from ..sources.tables import load_tables
-
-_EVO_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_schema_evo")
-
-
-def _evo_dir(sf_dir: str) -> str:
-    """Per-process, content-keyed table directory: the returned DataFrame is
-    a lazy read over these files, so they must outlive the call; keying on
-    the source fingerprint + pid makes reuse safe across repeated runs and
-    immune to regenerated test data / concurrent sessions (same discipline
-    as streaming/replay.py's cache)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(_EVO_ROOT, f"{key}-pid{os.getpid()}")
-
 
 @df_query(
     "q_schema_evolution",
@@ -74,13 +52,10 @@ FROM orders WHERE o_orderkey % 2 = 1
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["orders"])
     orders = t["orders"]
-    path = _evo_dir(sf_dir)
+    path = scratch_dir(spark, "schema_evo", sf_dir, ["orders"])
     table = LakeTable(spark, path, partition_cols=["o_orderstatus"])
-    marker = os.path.join(path, "_EVO_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
+    def build(_path: str) -> None:
         base = orders.filter("o_orderkey % 2 = 0").select(
             "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
         )
@@ -93,26 +68,11 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.append(base)
         table.append(evolved, merge_schema=True)
-        with open(marker, "w"):
-            pass
+
+    memoized(path, build)
     return table.read().select(
         "o_orderkey", "o_custkey", "o_totalprice", "priority_class", "o_orderstatus"
     )
-
-
-_TT_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_time_travel")
-
-
-def _tt_dir(sf_dir: str) -> str:
-    """Content-keyed per-process table dir (same discipline as _evo_dir)."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"tt:{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"tt:{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(_TT_ROOT, f"{key}-pid{os.getpid()}")
 
 
 @df_query(
@@ -140,38 +100,21 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t["orders"].select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
-    path = _tt_dir(sf_dir)
+    path = scratch_dir(spark, "time_travel", sf_dir, ["orders"])
     table = VersionedLakeTable(spark, path, partition_cols=["o_orderstatus"])
-    marker = os.path.join(path, "_TT_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
+    def build(_path: str) -> None:
         table.append(orders.filter("o_orderkey % 2 = 0"))
         table.append(orders.filter("o_orderkey % 2 = 1"))
         table.delete_where("o_orderstatus = 'F'")
-        with open(marker, "w"):
-            pass
+
+    memoized(path, build)
     return table.read(version=2).select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
     )
 
 
 # --- Partition-SPEC evolution through the oracle gate ---------------------
-
-_PEVO_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_part_evo")
-
-
-def _pevo_dir(sf_dir: str) -> str:
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(_PEVO_ROOT, f"{key}-pid{os.getpid()}")
-
 
 @df_query(
     "q_partition_evolution",
@@ -204,19 +147,16 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("l_shipdate").cast("int").alias("ship_year"),
         F.month("l_shipdate").cast("int").alias("ship_month"),
     )
-    path = _pevo_dir(sf_dir)
+    path = scratch_dir(spark, "part_evo", sf_dir, ["lineitem"])
     table = PartitionEvolvingTable(spark, path)
-    marker = os.path.join(path, "_PEVO_COMPLETE")
-    if not os.path.exists(marker):
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
+    def build(_path: str) -> None:
         table.set_spec(["ship_year"])
         table.append(line.filter("l_orderkey % 2 = 0"))
         table.set_spec(["ship_year", "ship_month"])
         table.append(line.filter("l_orderkey % 2 = 1"))
-        with open(marker, "w"):
-            pass
+
+    memoized(path, build)
     return table.read().filter("ship_month = 3").select(
         "l_orderkey",
         "l_linenumber",

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .lake import ControlTable, LakeTable, validate_columns, validate_non_empty
+from .scratch import memoized, scratch_dir
 from .sources.tables import load_tables
 
 CLEAN_REQUIRED = ["order_key", "l_quantity", "l_extendedprice", "l_shipdate"]
@@ -139,25 +140,6 @@ def run_quality_gates(df: DataFrame, required: list[str]) -> dict:
 _INC_SPLIT = "1998-01-01"  # mid-corpus high-watermark for the two increments
 
 
-def _inc_dir(sf_dir: str) -> str:
-    """Content-keyed per-process pipeline root (same discipline as
-    operators/evolution.py's table dirs)."""
-    import hashlib
-    import os
-    import tempfile
-
-    src = os.path.join(sf_dir, "lineitem.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"inc:{src}:{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        fp = f"inc:{src}:absent"
-    key = hashlib.sha256(fp.encode()).hexdigest()[:12]
-    return os.path.join(
-        tempfile.gettempdir(), "nyc_taxi_lakehouse_incremental", f"{key}-pid{os.getpid()}"
-    )
-
-
 def _month_rollup(facts: LakeTable, months: list[tuple[int, int]]) -> DataFrame:
     """Per-(month, returnflag) revenue rollup restricted to the given
     months — the partition-bounded recompute side of the refresh."""
@@ -217,15 +199,13 @@ GROUP BY 1, 2, 3
 )
 def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
     raw = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
-    root = _inc_dir(sf_dir)
+    root = scratch_dir(spark, "incremental", sf_dir, ["lineitem"])
     facts = LakeTable(spark, os.path.join(root, "facts"), ["ship_year", "ship_month"])
     mart = LakeTable(spark, os.path.join(root, "mart"), ["ship_year", "ship_month"])
-    marker = os.path.join(root, "_INC_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build(_root: str) -> None:
         control = ControlTable(spark, os.path.join(root, "ctrl"))
         # Increment 1: history up to the watermark.
         batch1 = clean_facts(raw.filter(F.col("l_shipdate") <= F.lit(_INC_SPLIT)))
@@ -247,8 +227,8 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch2 = facts.read().filter(F.col("l_shipdate") > F.lit(_INC_SPLIT))
         months2 = _touched_months(batch2)
         refresh_mart(mart, _month_rollup(facts, months2), months2)
-        with open(marker, "w"):
-            pass
+
+    memoized(root, build)
     return mart.read().select(
         "ship_year", "ship_month", "l_returnflag", "n_lines", "revenue"
     )

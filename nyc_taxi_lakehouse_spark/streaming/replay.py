@@ -21,22 +21,23 @@ reference's Debezium config produces — realtime_cdc_processor.py:103-146),
 written once per sf_dir and reused across runs.
 
 Every replay query is a plan plus a final projection over ONE helper:
-``_replay_sink(spark, key, name, build)`` memoizes the run directory
-``_REPLAY_ROOT/<key>/<name>``, drains ``build(run_dir)`` into an
-append-mode parquet sink through ``cdc.drain`` (the package's one
-start/await/timeout site) and returns a lazy read of the sink. Replay
-sources (envelope dirs, the near-dup document source) go through the
-same ``_memoized`` idiom. Its ``_REPLAY_COMPLETE`` marker is written only
-after the build or drain returned: a drain that timed out or failed
-leaves no marker, so the next call clears the partial sink and
-checkpoint and drains again instead of reading back a partial result.
+``_replay_sink(spark, sf_dir, name, build)`` drains ``build(run_dir)``
+into an append-mode parquet sink through ``cdc.drain`` (the package's one
+start/await/timeout site) and returns a lazy read of the sink. The run
+directory is the scratch table ``scratch_dir(spark, name, sf_dir,
+[source])``, built once per Spark application by ``scratch.memoized``;
+replay sources (envelope dirs, the near-dup document source) go through
+the same memo. Its marker is written only after the build or drain
+returned: a drain that timed out or failed leaves no marker, so the next
+call clears the partial sink and checkpoint and drains again instead of
+reading back a partial result. Spark deletes every run directory with
+the application (see scratch.py).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,11 +45,9 @@ from pyspark.sql import functions as F
 from ..functions.detsql import DUCK
 from ..plans.ckpt import register_run_checkpoint, round_checkpoint
 from ..registry import df_query
+from ..scratch import memoized, scratch_dir
 from ..sources.tables import load_tables
 from .cdc import drain, file_replay_source, parse_cdc, windowed_aggregation
-
-_REPLAY_ROOT = os.path.join(tempfile.gettempdir(), "nyc_taxi_lakehouse_cdc_replay")
-_REPLAY_COMPLETE = "_REPLAY_COMPLETE"
 
 # Chunked-delivery opt-in (VERDICT r10 #2): with N > 1, the replay writes
 # its source as N event-time-ordered files and the drain runs ONE FILE PER
@@ -124,34 +123,6 @@ def _write_time_chunks(
     with open(os.path.join(out_dir, "_SUCCESS"), "w"):
         pass
     return out_dir
-
-
-def _replay_key(sf_dir: str) -> str:
-    """Cache key for memoized replay artifacts.
-
-    Content-addressed: fingerprints the events table's file names, sizes and
-    mtimes, so regenerated test data under the same directory name gets a
-    fresh replay instead of stale cached results. The process id is included
-    so two concurrent sessions never race on rmtree-vs-read of a shared
-    directory — memoization is per-process (each driver/pytest session reuses
-    its own replay across repeated runs at the same sf)."""
-    import hashlib
-
-    events_path = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.sha256()
-    paths = [events_path]
-    if os.path.isdir(events_path):
-        paths = [
-            os.path.join(events_path, n) for n in sorted(os.listdir(events_path))
-        ]
-    for p in paths:
-        try:
-            st = os.stat(p)
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}".encode())
-        except OSError:
-            h.update(f"{p}:absent".encode())
-    base = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return f"{base}-{h.hexdigest()[:12]}-pid{os.getpid()}"
 
 
 def _envelope_frame(events: DataFrame) -> DataFrame:
@@ -232,25 +203,14 @@ def _parallel_width(spark: SparkSession) -> int:
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def _memoized(path: str, build) -> str:
-    """Build ``path`` once: if its ``_REPLAY_COMPLETE`` marker is absent,
-    clear any partial build, call ``build(path)`` and write the marker only
-    after it returned. Underscore files are invisible to the file stream
-    source, so the marker may sit inside a replay source directory."""
-    marker = os.path.join(path, _REPLAY_COMPLETE)
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
-        build(path)
-        with open(marker, "w"):
-            pass
-    return path
-
-
-def _replay_sink(spark: SparkSession, key: str, name: str, build) -> DataFrame:
-    """Drain ``build(run_dir)`` (a streaming frame) once per replay key into
-    an append-mode parquet sink under ``_REPLAY_ROOT/<key>/<name>`` and
-    return a lazy read of the sink. The replay is deterministic, so later
-    calls only read the sink back; no rows round-trip through the driver."""
+def _replay_sink(
+    spark: SparkSession, sf_dir: str, name: str, build, source: str = "events"
+) -> DataFrame:
+    """Drain ``build(run_dir)`` (a streaming frame) once per application
+    and ``source`` table state into an append-mode parquet sink under the
+    scratch directory ``<name>-<key>``, and return a lazy read of the sink.
+    The replay is deterministic, so later calls only read the sink back;
+    no rows round-trip through the driver."""
 
     def run(run_dir: str) -> None:
         drain(
@@ -262,12 +222,12 @@ def _replay_sink(spark: SparkSession, key: str, name: str, build) -> DataFrame:
             name,
         )
 
-    run_dir = _memoized(os.path.join(_REPLAY_ROOT, key, name), run)
+    run_dir = memoized(scratch_dir(spark, name, sf_dir, [source]), run)
     return spark.read.parquet(os.path.join(run_dir, "sink"))
 
 
 def _prepare_envelopes(
-    spark: SparkSession, events: DataFrame, key: str, chunks: int | None = None
+    spark: SparkSession, events: DataFrame, sf_dir: str, chunks: int | None = None
 ):
     """Shared envelope replay dir; ``chunks`` defaults to the session's
     chunked-delivery conf (single-batch-only queries pass 1). Returns
@@ -282,7 +242,9 @@ def _prepare_envelopes(
             write_envelopes(events, env_dir, parallel=_parallel_width(spark))
 
     suffix = _chunk_suffix(chunks)
-    env_dir = _memoized(os.path.join(_REPLAY_ROOT, key, "envelopes" + suffix), write)
+    env_dir = memoized(
+        scratch_dir(spark, "envelopes" + suffix, sf_dir, ["events"]), write
+    )
     return env_dir, (1 if chunks > 1 else None), suffix
 
 
@@ -312,7 +274,6 @@ WHERE event_id IS NOT NULL AND ts IS NOT NULL AND value > 0
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
 
@@ -331,11 +292,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Delivery 2: identical payloads, separate files — at-least-once redelivery.
             write_envelopes(t["events"], env_dir, mode="append", parallel=w)
 
-    env_dir = _memoized(
-        os.path.join(_REPLAY_ROOT, key, "envelopes_x2" + suffix), write_twice
+    env_dir = memoized(
+        scratch_dir(spark, "envelopes_x2" + suffix, sf_dir, ["events"]), write_twice
     )
     sink = _replay_sink(
-        spark, key, "dedup_pipeline" + suffix,
+        spark, sf_dir, "dedup_pipeline" + suffix,
         lambda _: parse_cdc(file_replay_source(
             spark, env_dir, max_files_per_trigger=1 if chunks > 1 else None
         ))
@@ -403,10 +364,9 @@ HAVING MAX(ts_us) + {_SESSION_GAP_US} <= watermark_us
 )
 def q_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
+    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], sf_dir)
     sink = _replay_sink(
-        spark, key, "session_pipeline" + suffix,
+        spark, sf_dir, "session_pipeline" + suffix,
         lambda _: parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
         .withWatermark("event_time", "10 minutes")
         .groupBy("user_id", F.session_window("event_time", "30 minutes"))
@@ -458,10 +418,9 @@ HAVING (window_start + 300) * 1000000 <= watermark_us
 )
 def q_cdc_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
+    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], sf_dir)
     sink = _replay_sink(
-        spark, key, "pipeline" + suffix,
+        spark, sf_dir, "pipeline" + suffix,
         lambda _: windowed_aggregation(
             parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
         ),
@@ -558,10 +517,9 @@ JOIN ev c
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
+    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], sf_dir)
     sink = _replay_sink(
-        spark, key, "join_pipeline" + suffix,
+        spark, sf_dir, "join_pipeline" + suffix,
         lambda _: _click_purchase_join(spark, env_dir, mft, "inner"),
     )
     return sink.select(
@@ -604,10 +562,9 @@ def q_user_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import running_user_profile
 
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], sf_dir, chunks=1)
     emitted = _replay_sink(
-        spark, key, "profile_pipeline",
+        spark, sf_dir, "profile_pipeline",
         lambda _: running_user_profile(
             parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
         ),
@@ -661,7 +618,6 @@ WHERE p.event_type = 'purchase'
 )
 def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
 
     def build(run_dir: str) -> DataFrame:
@@ -702,7 +658,7 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _click_purchase_join(spark, env_dir, 1, "left_outer")
 
     sink = _replay_sink(
-        spark, key, "outer_join_pipeline" + _chunk_suffix(chunks), build
+        spark, sf_dir, "outer_join_pipeline" + _chunk_suffix(chunks), build
     )
     return sink.filter("user_id >= 0").select(
         "user_id",
@@ -751,14 +707,13 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import streaming_heavy_hitter_candidates
 
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], key)
+    env_dir, mft, suffix = _prepare_envelopes(spark, t["events"], sf_dir)
     # Chunk-safe by construction: MG state persists across batches, so
     # the FINAL summary (highest-n emission per shard, selected below)
     # carries the no-false-negative guarantee whatever the batching,
     # and the exact recount is invariant on candidate supersets.
     emitted = _replay_sink(
-        spark, key, "hh_pipeline" + suffix,
+        spark, sf_dir, "hh_pipeline" + suffix,
         lambda _: streaming_heavy_hitter_candidates(
             parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft)),
             "user_id",
@@ -888,7 +843,6 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     t = load_tables(spark, sf_dir, ["documents"])
-    key = _replay_key(sf_dir)
     chunks = _replay_chunks(spark)
     suffix = _chunk_suffix(chunks)
     docs = t["documents"].selectExpr(
@@ -911,8 +865,8 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             docs.write.mode("overwrite").parquet(os.path.join(src_dir, "data"))
 
-    src_dir = _memoized(
-        os.path.join(_REPLAY_ROOT, key, "neardup_src" + suffix), write_src
+    src_dir = memoized(
+        scratch_dir(spark, "neardup_src" + suffix, sf_dir, ["documents"]), write_src
     )
 
     def build(_run_dir: str) -> DataFrame:
@@ -944,7 +898,9 @@ def q_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    out = _replay_sink(spark, key, "neardup_pipeline" + suffix, build)
+    out = _replay_sink(
+        spark, sf_dir, "neardup_pipeline" + suffix, build, source="documents"
+    )
     return out.where(F.col("n_claims") >= 2).select(
         F.unix_timestamp(F.col("w.start")).alias("win_start"),
         F.col("band_id").cast("int").alias("band_id"),
@@ -1010,8 +966,7 @@ JOIN dim d2
 )
 def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], sf_dir, chunks=1)
 
     def build(_run_dir: str) -> DataFrame:
         from pyspark.sql import Window
@@ -1069,7 +1024,7 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             facts.value.alias("purchase_value"),
         )
 
-    sink = _replay_sink(spark, key, "scd2_enrich_pipeline", build)
+    sink = _replay_sink(spark, sf_dir, "scd2_enrich_pipeline", build)
     return sink.select(
         "user_id",
         "purchase_id",
@@ -1103,8 +1058,7 @@ def run_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .stateful import running_type_profile_tws
 
     t = load_tables(spark, sf_dir, ["events"])
-    key = _replay_key(sf_dir)
-    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], key, chunks=1)
+    env_dir, mft, _ = _prepare_envelopes(spark, t["events"], sf_dir, chunks=1)
     saved = with_conf(spark, {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
@@ -1112,7 +1066,7 @@ def run_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     })
     try:
         emitted = _replay_sink(
-            spark, key, "tws_pipeline",
+            spark, sf_dir, "tws_pipeline",
             lambda _: running_type_profile_tws(
                 parse_cdc(file_replay_source(spark, env_dir, max_files_per_trigger=mft))
             ),

@@ -1,7 +1,8 @@
 """The one stream-drain primitive (streaming/cdc.py:drain) and the replay
-memo on top of it (streaming/replay.py:_replay_sink): a drain that
-outlives its bound is stopped and raises, a failed replay drain leaves no
-completion marker, and no other module triggers or awaits a stream."""
+memo on top of it (streaming/replay.py:_replay_sink over
+scratch.memoized): a drain that outlives its bound is stopped and raises,
+a failed replay drain leaves no completion marker, and no other module
+triggers or awaits a stream."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import time
 
 import pytest
 
+from nyc_taxi_lakehouse_spark import scratch
 from nyc_taxi_lakehouse_spark.lake import LakeTable
 from nyc_taxi_lakehouse_spark.plans.invariance import content_hash
 from nyc_taxi_lakehouse_spark.registry import all_queries
@@ -49,22 +51,23 @@ def test_failed_replay_drain_leaves_no_marker(spark, tmp_path, monkeypatch):
     and the next call clears it, drains again and returns the same rows as
     an uninterrupted replay."""
     fn = all_queries()["q_cdc_windowed"].fn
-    monkeypatch.setattr(replay, "_REPLAY_ROOT", str(tmp_path / "ref"))
+    monkeypatch.setattr(scratch, "scratch_root", lambda _: str(tmp_path / "ref"))
     expected = content_hash(fn(spark, SF))
     assert expected[1] > 0
 
-    monkeypatch.setattr(replay, "_REPLAY_ROOT", str(tmp_path / "memo"))
-    run_dir = tmp_path / "memo" / replay._replay_key(SF) / "pipeline"
+    monkeypatch.setattr(scratch, "scratch_root", lambda _: str(tmp_path / "memo"))
+    run_dir = pathlib.Path(scratch.scratch_dir(spark, "pipeline", SF, ["events"]))
+    assert run_dir.parent == tmp_path / "memo"
     monkeypatch.setattr(cdc, "DRAIN_TIMEOUT_S", 0.001)
     with pytest.raises(TimeoutError, match="pipeline did not drain"):
         fn(spark, SF)
     assert spark.streams.active == []
     assert (run_dir / "ckpt").is_dir()  # the partial run is really there
-    assert not (run_dir / replay._REPLAY_COMPLETE).exists()
+    assert not (run_dir / scratch._COMPLETE).exists()
 
     monkeypatch.setattr(cdc, "DRAIN_TIMEOUT_S", 600)
     assert content_hash(fn(spark, SF)) == expected
-    assert (run_dir / replay._REPLAY_COMPLETE).exists()
+    assert (run_dir / scratch._COMPLETE).exists()
 
 
 def _stream_calls(source: str, exempt: str | None = None) -> list[int]:

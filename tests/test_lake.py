@@ -345,6 +345,15 @@ def test_lake_table_on_scheme_qualified_uri(spark, tmp_path):
     assert not t.fs.exists(f"{uri}/day=d2")
 
 
+def test_control_table_on_scheme_qualified_uri(spark, tmp_path):
+    """A watermark set on a file:// control table reads back: the existence
+    guard goes through the table's FileSystem, not the local os.path."""
+    ctrl = ControlTable(spark, f"file://{tmp_path}/ctrl")
+    assert ctrl.get_watermark("lineitem") is None
+    ctrl.set_watermark("lineitem", "1998-01-01")
+    assert ctrl.get_watermark("lineitem") == "1998-01-01"
+
+
 def test_schema_compat_rules(spark):
     """Registry-style compatibility: widening/nullable-add are backward-safe,
     required-add breaks backward, drop/widen/nullable-flip break forward."""

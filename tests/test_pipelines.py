@@ -123,21 +123,21 @@ def test_observe_metrics_accumulate_during_action(spark):
     assert row["null_keys"] == 0
 
 
-def test_incremental_rollup_fails_fast_on_empty_increment(spark, monkeypatch):
+def test_incremental_rollup_fails_fast_on_empty_increment(
+    spark, monkeypatch, tmp_path
+):
     """The increment-2 row-count precondition must raise (not assert —
     stripped under `python -O`): with the split watermark pushed past the
     corpus max shipdate, ingest_facts finds nothing newer and the rollup
     must fail fast instead of publishing a mart missing increment 2."""
-    from nyc_taxi_lakehouse_spark import pipelines
+    from nyc_taxi_lakehouse_spark import pipelines, scratch
     from nyc_taxi_lakehouse_spark.registry import all_queries
 
     monkeypatch.setattr(pipelines, "_INC_SPLIT", "2999-01-01")
-    # Content-keyed cache dir would collide with the real run (and the
-    # marker would short-circuit the build); give the poisoned run its own.
-    import tempfile
-
-    poisoned_root = tempfile.mkdtemp(prefix="inc_poisoned_")
-    monkeypatch.setattr(pipelines, "_inc_dir", lambda sf_dir: poisoned_root)
+    # The content-keyed scratch dir would collide with the real run (and
+    # its marker would short-circuit the build); give the poisoned run its
+    # own scratch root.
+    monkeypatch.setattr(scratch, "scratch_root", lambda _: str(tmp_path))
     with pytest.raises(RuntimeError, match="watermark"):
         all_queries()["q_incremental_rollup"].fn(
             spark, "/root/testdata/sf0.001"

@@ -117,18 +117,6 @@ def test_rotation_readmits_oldest_verified_after_pool_drains():
     assert rounds == sorted(rounds)
 
 
-def test_no_rotation_env_flag_gives_registration_order(monkeypatch):
-    monkeypatch.setenv("LAKEHOUSE_NO_ROTATION", "1")
-    plain = list(all_queries())
-    monkeypatch.delenv("LAKEHOUSE_NO_ROTATION")
-    rotated = list(all_queries())
-    assert sorted(plain) == sorted(rotated)
-    # the flagged order must not depend on correctness artifacts: it is
-    # _DRIVER_PRIORITY followed by registration order, stable across runs
-    monkeypatch.setenv("LAKEHOUSE_NO_ROTATION", "1")
-    assert list(all_queries()) == plain
-
-
 def test_semantics_change_represents_query_despite_clean_row():
     """A clean driver row that PREDATES a committed semantic change must
     not keep the query out of the driver cap: q_dedup_chargram's newest

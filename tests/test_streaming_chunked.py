@@ -25,10 +25,8 @@ import pytest
 
 from nyc_taxi_lakehouse_spark.plans.invariance import content_hash
 from nyc_taxi_lakehouse_spark.registry import all_queries
-from nyc_taxi_lakehouse_spark.streaming.replay import (
-    _REPLAY_ROOT,
-    REPLAY_CHUNKS_CONF,
-)
+from nyc_taxi_lakehouse_spark.scratch import scratch_root
+from nyc_taxi_lakehouse_spark.streaming.replay import REPLAY_CHUNKS_CONF
 
 SF = "/root/testdata/sf0.001"
 
@@ -65,10 +63,9 @@ def test_chunked_mode_actually_chunks(spark):
         all_queries()["q_cdc_windowed"].fn(spark, SF).count()
     finally:
         spark.conf.set(REPLAY_CHUNKS_CONF, "1")
-    chunk_dirs = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*"))
+    root = scratch_root(spark)
+    chunk_dirs = glob.glob(os.path.join(root, "*_c4*"))
     assert chunk_dirs, "no chunked replay artifacts were created"
-    chunk_files = glob.glob(os.path.join(_REPLAY_ROOT, "*", "*_c4*", "chunk-0003.*"))
-    chunk_files += glob.glob(
-        os.path.join(_REPLAY_ROOT, "*", "*_c4*", "**", "chunk-0003.*")
-    )
+    chunk_files = glob.glob(os.path.join(root, "*_c4*", "chunk-0003.*"))
+    chunk_files += glob.glob(os.path.join(root, "*_c4*", "**", "chunk-0003.*"))
     assert chunk_files, "chunked dirs exist but hold no 4th chunk file"
