@@ -473,7 +473,16 @@ class LakeTable(TxnLedger):
 
 
 class ControlTable:
-    """High-watermark bookkeeping (reference nyc_taxi_iceberg_etl.py:46-82)."""
+    """High-watermark bookkeeping (reference nyc_taxi_iceberg_etl.py:46-82).
+
+    One parquet table of ``CONTROL_SCHEMA`` rows, one appended per
+    ``set_watermark``; the newest row of a source is its watermark. Reads
+    apply the fixed schema, so no schema-inference job runs, and the row
+    a write appends is built from Spark expressions over ``spark.range``,
+    so no pickled Python row goes through Python workers.
+    """
+
+    CONTROL_SCHEMA = "source string, watermark string, updated_at timestamp"
 
     def __init__(self, spark: SparkSession, path: str):
         from .fs import LakeFS
@@ -485,7 +494,7 @@ class ControlTable:
     def get_watermark(self, source: str):
         if not self.fs.is_dir(self.path):
             return None
-        df = self.spark.read.parquet(self.path)
+        df = self.spark.read.schema(self.CONTROL_SCHEMA).parquet(self.path)
         row = (
             df.filter(F.col("source") == source)
             .orderBy(F.desc("updated_at"))
@@ -495,11 +504,11 @@ class ControlTable:
         return row[0]["watermark"] if row else None
 
     def set_watermark(self, source: str, watermark) -> None:
-        self.spark.createDataFrame(
-            [(source, watermark)], "source string, watermark string"
-        ).withColumn("updated_at", F.current_timestamp()).write.mode("append").parquet(
-            self.path
-        )
+        self.spark.range(1, numPartitions=1).select(
+            F.lit(source).cast("string").alias("source"),
+            F.lit(watermark).cast("string").alias("watermark"),
+            F.current_timestamp().alias("updated_at"),
+        ).write.mode("append").parquet(self.path)
 
 
 # ---------------------------------------------------------------------------

@@ -435,7 +435,9 @@ def _knn_exact_loop(
 
     w = Window.partitionBy("ck").orderBy("dist2", "sk")
     pending = round_checkpoint(probes)
-    state = spark.createDataFrame([], "ck bigint, sk bigint, dist2 bigint, rk int")
+    state = spark.createDataFrame(
+        spark.sparkContext.emptyRDD(), "ck bigint, sk bigint, dist2 bigint, rk int"
+    )
     # Round 1's state is a literal frame, not a checkpoint — guard the
     # eviction ladder below (r9: this loop was the one place the r8 #2
     # checkpoint-lifecycle campaign could not evict, because each round's

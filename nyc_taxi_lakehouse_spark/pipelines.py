@@ -19,7 +19,7 @@ refresh/delete to the touched months.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .lake import ControlTable, LakeTable, validate_columns, validate_non_empty
@@ -77,6 +77,10 @@ def ingest_facts(
     ingested (nyc_taxi_iceberg_etl.py:46-82's control-table pattern); the
     watermark advances to the batch max afterwards. The shipdate predicate
     reaches the parquet scan (PushedFilters) so re-runs scan nothing new.
+    The row count and the new watermark ride the append's write job as one
+    Observation, so the source is read once. An empty increment appends no
+    rows, returns 0 and leaves the watermark as it was; its write job still
+    runs, and on an unpartitioned table Spark leaves one zero-row file.
     """
     raw = load_tables(spark, sf_dir, ["lineitem"])["lineitem"]
     wm = control.get_watermark(source_name) if control else None
@@ -84,14 +88,20 @@ def ingest_facts(
         raw = raw.filter(F.col("l_shipdate") > F.lit(wm))
     cleaned = clean_facts(raw)
     validate_columns(cleaned, CLEAN_REQUIRED, "facts")
-    cnt = cleaned.count()
-    if cnt == 0:
+    obs = Observation()
+    table.append(
+        cleaned.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.max(F.col("l_shipdate").cast("string")).alias("watermark"),
+        )
+    )
+    batch = obs.get
+    if batch["rows"] == 0:
         return 0
-    table.append(cleaned)
     if control:
-        new_wm = cleaned.agg(F.max(F.col("l_shipdate").cast("string"))).collect()[0][0]
-        control.set_watermark(source_name, new_wm)
-    return cnt
+        control.set_watermark(source_name, batch["watermark"])
+    return batch["rows"]
 
 
 def build_daily_summary(spark: SparkSession, table: LakeTable, out: LakeTable) -> DataFrame:
@@ -242,8 +252,6 @@ def observed_clean_facts(raw: DataFrame):
     observed frame and the pyspark.sql.Observation handle; ``obs.get``
     yields the metrics dict after any action (tests/test_pipelines.py),
     or a QueryExecutionListener collects them in production."""
-    from pyspark.sql import Observation
-
     name = Observation("ingest_metrics")
     cleaned = clean_facts(raw)
     observed = cleaned.observe(

@@ -69,21 +69,6 @@ def df_query(
     return deco
 
 
-# Queries whose COMMITTED OUTPUT SEMANTICS changed in a given round: a
-# clean driver row from an EARLIER round verified the old semantics, so
-# the rotation must not let it keep the query outside the driver cap —
-# eligible_round() treats such rows as never-verified until a window at
-# or after the change round lands a fresh clean row (which then clears
-# the entry naturally: rnd >= change round).
-_SEMANTICS_CHANGED: dict[str, int] = {
-    # r9 candidate/score factoring + absolute df ceiling changed the
-    # committed pair set (sf0.1 1684 -> 32 983); the r09 window predates
-    # its rotation slot, so its newest driver row still reflects the old
-    # semantics (VERDICT r9 "What's wrong" #3 / next-round #3).
-    "q_dedup_chargram": 9,
-}
-
-
 def all_queries() -> dict[str, QuerySpec]:
     # Import side-effect modules that register queries.
     from .operators import relational  # noqa: F401
@@ -152,8 +137,6 @@ def all_queries() -> dict[str, QuerySpec]:
         rnd, hash_verified = row
         if not hash_verified and _REGISTRY[n].oracle is not None:
             return -1  # oracle exists now; the rows-only row doesn't count
-        if rnd < _SEMANTICS_CHANGED.get(n, 0):
-            return -1  # clean row predates a semantic change; re-present
         return rnd
 
     names.sort(key=lambda n: (eligible_round(n), pos[n]))

@@ -19,6 +19,23 @@ each round-robin pass evicted classes before their reuse: Janino recompiled
 HotSpot's JIT compiled every new class again. With the working set cached, a
 warm marts pass compiles 0-10 classes (AQE plan variants it had not met
 before) and a warm lake cycle 4.
+
+Streaming checkpoints commit through Hadoop's ``FileSystem`` API
+(``CHECKPOINT_FILE_MANAGER``) instead of Spark's default ``FileContext``
+one. Without the native Hadoop library, ``FileContext``'s rename asks
+``RawLocalFileSystem.getFileLinkStatus`` for both paths, and each call forks
+a ``readlink`` process; ``ChecksumFs`` then renames the ``.crc`` file the
+same way. Every offset, commit, sink-log and state-store file of a
+micro-batch is written to a temp file and renamed, so one CDC drain of the
+lake ETL cycle (sf0.01, 4 cores) forked 847 processes. With the
+``FileSystem`` manager it forks 239, nearly all of them the ``chmod`` that
+``RawLocalFileSystem.setPermission`` runs on each file create, and the
+drain's median wall falls from 2.35 s to 1.70 s (8 alternating warm drains
+per manager), with the same sink rows. The trade-off: ``FileSystem`` has no
+non-overwriting rename, so the manager checks that the target is absent and
+then renames. Two applications draining one checkpoint at once are no
+longer refused by the rename itself; inside one application Spark already
+refuses a second active run of the same query.
 """
 
 from __future__ import annotations
@@ -35,6 +52,14 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # of any engine workload finds its classes cached. A static conf, fixed when
 # the JVM starts.
 CODEGEN_CACHE_ENTRIES = 2048
+
+# Streaming checkpoint manager of sessions built by ``get_spark``: commits
+# rename through ``FileSystem`` rather than ``FileContext``, which forks a
+# ``readlink`` per path on a host without the native Hadoop library.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -54,6 +79,16 @@ def get_spark(
     cycle's 118-124, and at 100 entries each warm pass recompiled 90-128 of
     them. The cache is JVM-wide and sized once, so ``getOrCreate`` on a
     running session keeps that session's size.
+
+    Streaming checkpoints commit through ``CHECKPOINT_FILE_MANAGER``.
+    Spark's default ``FileContext`` manager forks a ``readlink`` per path
+    of each checkpoint rename when the native Hadoop library is absent:
+    847 forked processes per lake ETL CDC drain, against 239 (the ``chmod``
+    of each file create) with the ``FileSystem`` manager. Its rename is
+    exists-then-rename rather than an atomic put-if-absent, so two
+    applications draining one checkpoint at once are not refused by the
+    rename; within one application Spark refuses a second active run of a
+    query id anyway.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -78,6 +113,7 @@ def get_spark(
         # stages in the order it plans them, which varies run to run, so a
         # stage id in the class name made one pipeline several classes.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
@@ -99,6 +135,8 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     Static conf cannot be set on a running session, so such a session (the
     ``__spark_entry__`` driver's) keeps its own generated-class cache size;
     only sessions built by ``get_spark`` get ``CODEGEN_CACHE_ENTRIES``.
+    The checkpoint manager follows the same rule: a session built elsewhere
+    (a cluster driver on HDFS, say) keeps ``FileContext``'s atomic rename.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

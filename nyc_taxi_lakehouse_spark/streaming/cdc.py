@@ -19,6 +19,11 @@ Structured Streaming:
   DRAIN_TIMEOUT_S is stopped and raises TimeoutError instead of returning
   with the query still running and its sink partial. Continuous
   (processing-time) serving is a deployment concern outside this package.
+  Each micro-batch commits its offset, commit, sink-log and state-store
+  files by rename; sessions from ``session.get_spark`` rename through
+  Hadoop's FileSystem, because FileContext's rename forks a ``readlink``
+  per path on a host without the native Hadoop library (847 → 239 forked
+  processes per lake ETL drain; see the session module).
 
 The payload here is the testdata `events` shape; the trips shape differs
 only in the StructType.

@@ -631,7 +631,8 @@ class VersionedLakeTable(TxnLedger):
             root, home = self._root_of(f)
             roots.setdefault(root, []).append(os.path.join(root, home))
         if not roots:
-            return self.spark.createDataFrame([], snap.schema)
+            empty = self.spark.sparkContext.emptyRDD()
+            return self.spark.createDataFrame(empty, snap.schema)
         wanted = set(rel_files)
         dvs = [d for d in snap.deletes if not wanted.isdisjoint(d["files"])]
         mapping = snap.column_mapping

@@ -70,6 +70,19 @@ def test_failed_replay_drain_leaves_no_marker(spark, tmp_path, monkeypatch):
     assert (run_dir / scratch._COMPLETE).exists()
 
 
+def test_checkpoints_commit_through_filesystem_manager(spark, tmp_path):
+    """Sessions from get_spark rename checkpoint files through Hadoop's
+    FileSystem: FileContext's rename forks a readlink per path when the
+    native Hadoop library is absent."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    created = manager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert created.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def _stream_calls(source: str, exempt: str | None = None) -> list[int]:
     """Line numbers of ``.trigger(...)`` / ``.awaitTermination(...)`` calls
     outside the function named ``exempt``; comments and docstrings are not

@@ -3,9 +3,13 @@ control, validation gates (reference S7-S9, §2.11)."""
 
 from __future__ import annotations
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_taxi_lakehouse_spark import lake
 from nyc_taxi_lakehouse_spark.lake import (
     ControlTable,
     LakeTable,
@@ -14,6 +18,8 @@ from nyc_taxi_lakehouse_spark.lake import (
     validate_columns,
     validate_non_empty,
 )
+
+from .conftest import spark_jobs
 
 
 @pytest.fixture
@@ -191,6 +197,79 @@ def test_control_table_watermark(spark, tmp_path):
     c.set_watermark("trips", "2024-01-01T00:00:00")
     c.set_watermark("trips", "2024-02-01T00:00:00")
     assert c.get_watermark("trips") == "2024-02-01T00:00:00"
+
+
+def test_get_watermark_reads_with_the_fixed_schema(spark, tmp_path):
+    """The control table's schema is fixed, so a watermark read runs one
+    job and no schema inference."""
+    c = ControlTable(spark, str(tmp_path / "ctl"))
+    c.set_watermark("trips", "2024-01-01T00:00:00")
+    c.set_watermark("events", "2024-03-01T00:00:00")
+    assert spark_jobs(spark, lambda: c.get_watermark("trips"))[:2] == (
+        "2024-01-01T00:00:00",
+        1,
+    )
+
+
+def test_set_watermark_builds_no_python_rows(spark, tmp_path, monkeypatch):
+    """The watermark row is built from Spark expressions: no pickled Python
+    row, so no Python worker runs for a one-row write."""
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("set_watermark built its row with createDataFrame")
+
+    c = ControlTable(spark, str(tmp_path / "ctl"))
+    monkeypatch.setattr(type(spark), "createDataFrame", refuse)
+    c.set_watermark("trips", "2024-01-01T00:00:00")
+    monkeypatch.undo()
+    assert c.get_watermark("trips") == "2024-01-01T00:00:00"
+    assert spark.read.parquet(c.path).schema.simpleString() == (
+        "struct<source:string,watermark:string,updated_at:timestamp>"
+    )
+
+
+def _literal_row_frames(source: str) -> list[int]:
+    """Line numbers of ``createDataFrame`` calls whose data is a list or
+    tuple literal (or a list comprehension); comments and docstrings are
+    not calls, so they never match."""
+    lines = []
+    for node in ast.walk(ast.parse(source)):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "createDataFrame"
+        ):
+            continue
+        data = node.args[:1] + [k.value for k in node.keywords if k.arg == "data"]
+        if any(isinstance(d, (ast.List, ast.Tuple, ast.ListComp)) for d in data):
+            lines.append(node.lineno)
+    return lines
+
+
+def test_literal_row_scanner_ignores_comments_and_rdds():
+    src = (
+        "def f(spark, rdd, schema):\n"
+        '    """spark.createDataFrame([(1,)], schema)"""\n'
+        "    # spark.createDataFrame([], schema)\n"
+        "    a = spark.createDataFrame(rdd, schema)\n"
+        "    b = spark.createDataFrame([], schema)\n"
+        "    c = spark.createDataFrame([(i,) for i in range(3)], schema)\n"
+        "    return spark.createDataFrame(data=((1,),), schema=schema)\n"
+    )
+    assert _literal_row_frames(src) == [5, 6, 7]
+
+
+def test_lake_write_path_builds_no_python_rows():
+    """Rows on the lake write path come from Spark expressions: a
+    ``createDataFrame`` of Python rows pickles them through Python workers,
+    about a CPU second for one row."""
+    root = pathlib.Path(lake.__file__).parent
+    offenders = [
+        f"{name}:{line}"
+        for name in ("lake.py", "versioned.py", "mor.py", "pipelines.py")
+        for line in _literal_row_frames((root / name).read_text())
+    ]
+    assert not offenders, offenders
 
 
 def test_validation_gates(spark, trips):

@@ -13,6 +13,9 @@ from nyc_taxi_lakehouse_spark.pipelines import (
     refresh_mart,
     run_quality_gates,
 )
+from nyc_taxi_lakehouse_spark.sources.tables import load_tables
+
+from .conftest import spark_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -33,6 +36,27 @@ def test_ingest_incremental_watermark(spark, tmp_path):
 
     parts = [d for d in os.listdir(table.path) if d.startswith("ship_year=")]
     assert parts, "expected identity partition directories"
+
+
+def test_ingest_reads_its_source_once(spark, tmp_path):
+    """The row count and the new watermark ride the append's write job: on
+    a fresh table, ingest_facts reads the watermark, writes the batch and
+    advances the watermark, one job each."""
+    load_tables(spark, SF, ["lineitem"])  # the source's schema is memoized
+    table = LakeTable(spark, str(tmp_path / "facts"), ["ship_year", "ship_month"])
+    control = ControlTable(spark, str(tmp_path / "ctrl"))
+    control.set_watermark("lineitem", "1996-01-01")
+
+    n, jobs, _ = spark_jobs(spark, lambda: ingest_facts(spark, SF, table, control))
+    assert jobs <= 3
+    batch = clean_facts(spark.read.parquet(f"{SF}/lineitem.parquet")).filter(
+        F.col("l_shipdate") > F.lit("1996-01-01")
+    )
+    want = batch.agg(
+        F.count(F.lit(1)), F.max(F.col("l_shipdate").cast("string"))
+    ).first()
+    assert n == want[0] == table.read().count()
+    assert control.get_watermark("lineitem") == want[1]
 
 
 def test_daily_summary_ctas(spark, tmp_path):

@@ -74,8 +74,6 @@ def test_rotation_puts_unverified_first():
     """Against the real repo history: the head of iteration must be names
     without a counting driver row (a 'no_oracle' row stops counting once
     the query has an oracle), ordered before anything already verified."""
-    from nyc_taxi_lakehouse_spark.registry import _SEMANTICS_CHANGED
-
     lr = _driver_verified_rounds()
     q = all_queries()
     names = list(q)
@@ -86,8 +84,6 @@ def test_rotation_puts_unverified_first():
             return False
         if not row[1] and q[n].oracle is not None:
             return False
-        if row[0] < _SEMANTICS_CHANGED.get(n, 0):
-            return False  # clean row predates a semantic change
         return True
 
     unchecked_total = sum(1 for n in names if not verified(n))
@@ -101,8 +97,6 @@ def test_rotation_readmits_oldest_verified_after_pool_drains():
     """Among verified queries, iteration order is ascending by the round
     of their last clean driver row — least-recently-verified re-enter the
     driver cap first once no never-checked queries remain."""
-    from nyc_taxi_lakehouse_spark.registry import _SEMANTICS_CHANGED
-
     lr = _driver_verified_rounds()
     q = all_queries()
     rounds = []
@@ -110,28 +104,7 @@ def test_rotation_readmits_oldest_verified_after_pool_drains():
         row = lr.get(n)
         if row is None or (not row[1] and q[n].oracle is not None):
             rounds.append(-1)
-        elif row[0] < _SEMANTICS_CHANGED.get(n, 0):
-            rounds.append(-1)  # clean row predates a semantic change
         else:
             rounds.append(row[0])
     assert rounds == sorted(rounds)
 
-
-def test_semantics_change_represents_query_despite_clean_row():
-    """A clean driver row that PREDATES a committed semantic change must
-    not keep the query out of the driver cap: q_dedup_chargram's newest
-    clean row is pre-r9 but its committed outputs changed in r9, so the
-    rotation re-presents it at the head of the window (VERDICT r9 #3).
-    Once a post-change clean row lands, the entry clears naturally."""
-    from nyc_taxi_lakehouse_spark.registry import _SEMANTICS_CHANGED
-
-    lr = _driver_verified_rounds()
-    names = list(all_queries())
-    for n, change_round in _SEMANTICS_CHANGED.items():
-        row = lr.get(n)
-        if row is not None and row[0] < change_round:
-            # stale clean row -> must sort with the never-verified class
-            assert names.index(n) < 50, (
-                f"{n}: semantics changed in r{change_round} but its stale "
-                f"r{row[0]} row keeps it outside the driver cap"
-            )

@@ -7,6 +7,8 @@ import pytest
 from nyc_taxi_lakehouse_spark.lake import ValidationError
 from nyc_taxi_lakehouse_spark.versioned import VersionedLakeTable
 
+from .conftest import spark_jobs
+
 
 def _mk(spark, rows, with_extra=False):
     cols = "id bigint, status string, amount double" + (
@@ -799,6 +801,18 @@ def test_stats_pruning_survives_rename(spark, tmp_path):
     )
     kept3, total3 = t.prune_files([("bucket", 99, 99)])
     assert total3 == total + 1 and len(kept3) == 1
+
+
+def test_fully_pruned_read_runs_no_tasks(spark, tmp_path):
+    """A read whose filters prune every file is an empty frame of the
+    logical schema that runs no task: no Python worker starts for it."""
+    t = VersionedLakeTable(spark, str(tmp_path / "pr"), stats_cols=["amount"])
+    t.append(_mk(spark, [(1, "O", 10.0), (2, "F", 20.0)]).coalesce(1))
+    assert t.prune_files([("amount", 100.0, 200.0)]) == ([], 1)
+    pruned = t.read(filters=[("amount", 100.0, 200.0)])
+    assert pruned.schema == t.read().schema
+    rows, _, tasks = spark_jobs(spark, pruned.collect)
+    assert (rows, tasks) == ([], 0)
 
 
 def test_generated_columns(spark, tmp_path):
