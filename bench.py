@@ -200,8 +200,8 @@ HEADLINE = [
     # part-22/23 flagships: in-engine batch inference, two-sample QQ.
     "q_linear_scorer",
     "q_qq_table",
-    # round-5 flagships: exact kNN via grid blocking + geometric ring
-    # expansion (oracle = brute-force cross product), grid-blocked DBSCAN
+    # round-5 flagships: exact kNN via grid blocking + a per-probe
+    # distance bound (oracle = brute-force cross product), grid-blocked DBSCAN
     # (oracle = recursive-CTE closure), exact earth-mover drift.
     "q_spatial_knn_exact",
     "q_dbscan",

@@ -188,8 +188,8 @@ def gated_broadcast(df: DataFrame, n_rows: int, max_rows: int | None = None):
     defaults to 'huge'), so an unhinted join of a checkpointed small table
     sort-merges at EVERY scale, while an unconditional F.broadcast hint
     broadcasts at every scale — wrong at 100 TB when the relation scales
-    with the corpus (the q_hits scores / DBSCAN cores / kNN pending-probe
-    class, VERDICT r05 #2). The caller passes the row count it already
+    with the corpus (the q_hits scores / DBSCAN cores class, VERDICT
+    r05 #2). The caller passes the row count it already
     knows (a bounded 1-row scalar off the checkpointed frame, or a bound
     derived from one); below the threshold the hint is safe by
     measurement, above it the join stays adaptive and shuffles.

@@ -251,9 +251,9 @@ def test_hits_penultimate_round_is_live(spark):
 )
 def test_reliable_mode_query_results_match_local(spark, tmp_path, qname):
     """r10 widened round_checkpoint to every iterative loop (BFS,
-    diameter, HITS rounds, spatial kNN ring loop, k-center, k-means,
-    BPE) — each migrated query must produce identical results in both
-    modes."""
+    diameter, HITS rounds, k-center, k-means, BPE) — each migrated query
+    must produce identical results in both modes. Exact spatial kNN has
+    no rounds; it stays here as a plan the conf must not change."""
     from nyc_taxi_lakehouse_spark.plans.ckpt import release_run_checkpoints
     from nyc_taxi_lakehouse_spark.plans.invariance import content_hash
     from nyc_taxi_lakehouse_spark.registry import all_queries

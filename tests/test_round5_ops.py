@@ -1,5 +1,5 @@
 """Behavioral tests for the round-5 operators: exact kNN via grid
-blocking + geometric ring expansion — pinned against an independent
+blocking + a per-probe distance bound — pinned against an independent
 python brute-force reference (the parity gate's DuckDB oracle is itself
 a cross product, but a shared formula bug in the synthetic coordinates
 would fool it; this reference recomputes everything from first
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import duckdb
 
-from .conftest import SF_SMOKE
+from .conftest import SF_DIR, SF_SMOKE, spark_jobs
 
 
 def _duck(sf_dir: str, tables=("customer", "supplier")):
@@ -25,12 +25,12 @@ def _coords(key: int, mx: int, my: int) -> tuple[int, int]:
 
 
 def test_spatial_knn_exact_vs_bruteforce(spark):
-    """Ring expansion must yield the TRUE k nearest suppliers for every
+    """Bound-then-gather must yield the TRUE k nearest suppliers for every
     probe — exactly k rows each (|suppliers| >= k at every SF), ranks
     1..k in nondecreasing distance, ties broken by suppkey — equal to
     the serial O(N*M) scan. At the smoke SF the corpus is 10 suppliers
     over 1024 cells, so almost every probe's 3x3 neighborhood is empty
-    and the expansion loop genuinely runs (asserted: some true neighbor
+    and the bound genuinely reaches past it (asserted: some true neighbor
     lies beyond the one-cell radius the radius-bounded q_spatial_knn
     would have searched)."""
     from nyc_taxi_lakehouse_spark.operators.spatial import (
@@ -64,12 +64,30 @@ def test_spatial_knn_exact_vs_bruteforce(spark):
         assert [r[0] for r in rows] == list(range(1, _KNN_K + 1))
         assert [(d2, sk) for _, sk, d2 in rows] == expected[ck]
 
-    # The expansion loop must have done real work: at this sparsity some
+    # The bound must have done real work: at this sparsity some
     # probe's nearest neighbor lies beyond the 3x3 neighborhood (its
     # distance exceeds 2*CELL, which no cell at Chebyshev distance <= 1
     # can contain).
     max_nn = max(rows[0][2] for rows in by_probe.values())
     assert max_nn > (2 * _CELL) ** 2
+
+
+def test_spatial_knn_exact_runs_no_construction_jobs(spark):
+    """Exact kNN is one lazy plan: building it runs no Spark job, and a
+    content-hash collect of it runs at most 12 (the ring loop it replaced
+    ran 61 jobs in construction at sf0.01)."""
+    from nyc_taxi_lakehouse_spark.plans.invariance import content_hash
+    from nyc_taxi_lakehouse_spark.registry import all_queries
+    from nyc_taxi_lakehouse_spark.sources.tables import load_tables
+
+    # A table's first load infers its schema (one job each); count the
+    # query's own jobs against the warm table memo.
+    load_tables(spark, SF_DIR, ["customer", "supplier"])
+    fn = all_queries()["q_spatial_knn_exact"].fn
+    out, built, _ = spark_jobs(spark, lambda: fn(spark, SF_DIR))
+    _, consumed, _ = spark_jobs(spark, lambda: content_hash(out))
+    assert built == 0
+    assert built + consumed <= 12
 
 
 def test_dbscan_vs_union_find(spark):

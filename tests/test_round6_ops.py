@@ -1,19 +1,18 @@
 """Round-6 regression tests.
 
-Covers the ADVICE r05 findings: the exact-kNN completion certificate must
-use a STRICT bound (an unsearched supplier on the right/top wall sits at
-axis distance exactly `wall`, so it can tie the k-th candidate's dist2 and
-win the (dist2, suppkey) tiebreak), and the no-wall sentinel must square
-without BIGINT overflow regardless of disjunct evaluation order.
-"""
+Covers the ADVICE r05 findings on exact kNN: a supplier that ties the
+k-th candidate's dist2 on a cell wall must still win the (dist2, suppkey)
+tiebreak, and distances at the grid's extremes must stay exact BIGINT
+arithmetic. Every layout is checked against a serial brute force."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
 def _knn_frames(spark, probes, supps):
-    """Build the (ck,x,y,pcx,pcy) / (sk,sx,sy,scx,scy) frames the loop
+    """Build the (ck,x,y,pcx,pcy) / (sk,sx,sy,scx,scy) frames the kNN
     helper expects from plain (key, x, y) tuples."""
     from nyc_taxi_lakehouse_spark.operators.spatial import _CELL
 
@@ -48,7 +47,7 @@ def test_knn_wall_tie_goes_to_unsearched_supplier(spark):
     and shipped suppkey 50; exact semantics (and the brute force) pick
     suppkey 10 on the (dist2, sk) tiebreak."""
     from nyc_taxi_lakehouse_spark.operators.spatial import (
-        _CELL, _knn_exact_loop,
+        _CELL, _knn_exact,
     )
 
     wall = 3 * _CELL - 4000  # probe x=4000 in cell 1; right wall of the
@@ -64,7 +63,7 @@ def test_knn_wall_tie_goes_to_unsearched_supplier(spark):
     p, s = _knn_frames(spark, probes, supps)
     got = sorted(
         (r.ck, r.sk, r.dist2, r.rk)
-        for r in _knn_exact_loop(spark, p, s, 1).collect()
+        for r in _knn_exact(spark, p, s, 1).collect()
     )
     assert got == [(1, 10, wall * wall, 1)], got
     expect = _brute_knn(probes, supps, 1)
@@ -76,7 +75,7 @@ def test_knn_boundary_grid_vs_bruteforce(spark):
     (coordinates at exact multiples of _CELL and one-off each side) and
     check the full k=3 result against the serial brute force."""
     from nyc_taxi_lakehouse_spark.operators.spatial import (
-        _CELL, _SPACE, _knn_exact_loop,
+        _CELL, _SPACE, _knn_exact,
     )
 
     xs = [0, 1, _CELL - 1, _CELL, _CELL + 1, 3 * _CELL, 3 * _CELL - 1,
@@ -88,7 +87,7 @@ def test_knn_boundary_grid_vs_bruteforce(spark):
     ]
     p, s = _knn_frames(spark, probes, supps)
     got = {}
-    for r in _knn_exact_loop(spark, p, s, 3).collect():
+    for r in _knn_exact(spark, p, s, 3).collect():
         got.setdefault(r.ck, []).append((r.rk, r.sk, r.dist2))
     expect = _brute_knn(probes, supps, 3)
     for ck, rows in expect.items():
@@ -137,23 +136,67 @@ def test_dbscan_forward_offset_decomposition_property():
         assert halved == naive
 
 
-def test_knn_randomized_layout_vs_bruteforce(spark):
-    """Seeded random probe/supplier layout (positions fully arbitrary, not
-    hash-derived) through the full ring-expansion loop vs serial brute
-    force — coverage beyond the hand-built wall cases."""
+def _random_layout(rng, space):
+    probes = [(k, rng.randrange(space), rng.randrange(space)) for k in range(1, 25)]
+    supps = [(100 + k, rng.randrange(space), rng.randrange(space)) for k in range(30)]
+    return probes, supps, 4
+
+
+def _fewer_than_k_layout(rng, space):
+    probes = [(k, rng.randrange(space), rng.randrange(space)) for k in range(1, 9)]
+    supps = [(100 + k, rng.randrange(space), rng.randrange(space)) for k in range(2)]
+    return probes, supps, 3
+
+
+def _no_supplier_layout(rng, space):
+    probes = [(k, rng.randrange(space), rng.randrange(space)) for k in range(1, 9)]
+    return probes, [], 3
+
+
+def _one_far_cell_layout(rng, space):
+    from nyc_taxi_lakehouse_spark.operators.spatial import _CELL
+
+    probes = [(k, rng.randrange(_CELL), rng.randrange(_CELL)) for k in range(1, 9)]
+    supps = [
+        (100 + k, space - 1 - rng.randrange(_CELL),
+         space - 1 - rng.randrange(_CELL))
+        for k in range(6)
+    ]
+    return probes, supps, 4
+
+
+def _grid_corner_layout(rng, space):
+    probes = [
+        (1, 0, 0), (2, 0, space - 1), (3, space - 1, 0), (4, space - 1, space - 1),
+    ]
+    supps = [(100 + k, rng.randrange(space), rng.randrange(space)) for k in range(12)]
+    return probes, supps, 3
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [_random_layout, _fewer_than_k_layout, _no_supplier_layout,
+     _one_far_cell_layout, _grid_corner_layout],
+    ids=["seeded", "fewer-than-k", "no-suppliers", "one-far-cell", "grid-corners"],
+)
+def test_knn_randomized_layout_vs_bruteforce(spark, layout):
+    """Seeded probe/supplier layouts (positions arbitrary, not
+    hash-derived) through the bound-then-gather plan vs serial brute
+    force: a random layout, fewer suppliers than k (the whole-grid
+    fallback), no suppliers at all, every supplier in one cell far from
+    the probes, and probes in the four grid corners."""
     import random
 
-    from nyc_taxi_lakehouse_spark.operators.spatial import (
-        _SPACE, _knn_exact_loop,
-    )
+    from nyc_taxi_lakehouse_spark.operators.spatial import _SPACE, _knn_exact
 
-    rng = random.Random(1234)
-    probes = [(k, rng.randrange(_SPACE), rng.randrange(_SPACE)) for k in range(1, 25)]
-    supps = [(100 + k, rng.randrange(_SPACE), rng.randrange(_SPACE)) for k in range(30)]
+    probes, supps, k = layout(random.Random(1234), _SPACE)
     p, s = _knn_frames(spark, probes, supps)
     got = {}
-    for r in _knn_exact_loop(spark, p, s, 4).collect():
+    for r in _knn_exact(spark, p, s, k).collect():
         got.setdefault(r.ck, []).append((r.rk, r.sk, r.dist2))
-    expect = _brute_knn(probes, supps, 4)
-    for ck, rows in expect.items():
-        assert sorted(got[ck]) == [(rk, sk, d2) for sk, d2, rk in rows], ck
+    expect = {
+        ck: [(rk, sk, d2) for sk, d2, rk in rows]
+        for ck, rows in _brute_knn(probes, supps, k).items()
+        if rows
+    }
+    assert {ck: sorted(rows) for ck, rows in got.items()} == expect
