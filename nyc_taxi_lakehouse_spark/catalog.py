@@ -8,20 +8,17 @@ This module is that surface on the Spark session catalog with USING parquet
 (the Iceberg catalog isn't available in this environment; on a real cluster
 only the USING clause changes).
 
-Catalog tables and the path-based LakeTable layer (lake.py) compose:
-`CatalogTable.lake()` hands back a LakeTable rooted at the table's location,
-and `repair()` re-syncs catalog partition metadata after any path-level
-mutation (Spark tracks datasource-table partitions in the metastore, so
-files written behind the catalog's back need ALTER TABLE ... RECOVER
-PARTITIONS — the same discipline external writers need on Hive/Glue).
+A catalog table is plain parquet whose partitions the metastore tracks;
+it is written through the catalog (``CatalogTable.append``, INSERT INTO).
+The versioned lake tables (lake.py / versioned.py) keep their own manifest
+and are path-based; the two are separate formats, and neither writes
+behind the other's metadata.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from .lake import LakeTable
 
 
 def _ident(name: str) -> str:
@@ -56,18 +53,6 @@ class CatalogTable:
         self.name = name
         self.partition_cols = list(partition_cols)
 
-    @property
-    def location(self) -> str:
-        """Filesystem location from DESCRIBE TABLE EXTENDED."""
-        for row in self.spark.sql(f"DESCRIBE TABLE EXTENDED {_ident(self.name)}").collect():
-            if row.col_name == "Location":
-                loc = row.data_type
-                if loc.startswith("file:"):
-                    # file:/p, file:///p → /p (keep exactly one leading slash)
-                    loc = "/" + loc[5:].lstrip("/")
-                return loc
-        raise ValueError(f"no Location for table {self.name}")
-
     def df(self) -> DataFrame:
         return self.spark.table(self.name)
 
@@ -84,19 +69,6 @@ class CatalogTable:
         if missing:
             raise ValueError(f"append to {self.name}: missing columns {missing}")
         df.select(*order).write.insertInto(self.name, overwrite=False)
-
-    def repair(self) -> None:
-        """ALTER TABLE ... RECOVER PARTITIONS: re-discover partitions after
-        path-level writes that bypassed the catalog (e.g. via lake())."""
-        if self.partition_cols:
-            self.spark.sql(f"ALTER TABLE {_ident(self.name)} RECOVER PARTITIONS")
-        self.spark.catalog.refreshTable(self.name)
-
-    def lake(self) -> LakeTable:
-        """Path-based LakeTable over this table's location (delete_where /
-        merge_upsert / compact). Call repair() after mutations so catalog
-        readers see the new file layout."""
-        return LakeTable(self.spark, self.location, self.partition_cols)
 
     def drop(self) -> None:
         self.spark.sql(f"DROP TABLE IF EXISTS {_ident(self.name)}")

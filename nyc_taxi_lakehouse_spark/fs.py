@@ -1,17 +1,30 @@
 """Hadoop FileSystem wrapper — object-store-safe table maintenance.
 
-LakeTable's maintenance paths (existence probes, the schema sidecar, compact,
-partition-directory drops, staging cleanup) run through the JVM Hadoop
-FileSystem API instead of os/shutil, so identical code drives file:// here
-and s3a:// / abfs:// / hdfs:// on a real cluster — the operational surface
-Delta's OPTIMIZE/VACUUM provide natively (reference delegates this to
-Iceberg's table maintenance; SURVEY §1.4). Driver-side work stays metadata-
-sized: directory statuses and a one-file JSON sidecar, never row data.
+The lake table's file work (commit-log listing and manifests, staged data
+file moves, vacuum) runs through the JVM Hadoop FileSystem API instead of
+os/shutil, so identical code drives file:// here and s3a:// / abfs:// /
+hdfs:// on a real cluster — the operational surface Delta's
+OPTIMIZE/VACUUM provide natively (reference delegates this to Iceberg's
+table maintenance; SURVEY §1.4). Driver-side work stays metadata-sized:
+directory statuses and small JSON manifests, never row data.
+
+Every call here is a py4j round trip, so listings the table layer makes
+per write (``glob``) cost a fixed number of calls whatever they match,
+rather than one call per path.
 """
 
 from __future__ import annotations
 
+import functools
+import re
+
 from pyspark.sql import SparkSession
+
+
+def glob_escape(text: str) -> str:
+    """``text`` with Hadoop glob metacharacters escaped, so it matches
+    itself literally inside a glob pattern."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", text)
 
 
 class LakeFS:
@@ -23,8 +36,19 @@ class LakeFS:
         self._conf = spark._jsc.hadoopConfiguration()
         self._fs = self._path(base).getFileSystem(self._conf)
 
+    @functools.cached_property
+    def _classes(self):
+        # py4j resolves each segment of a dotted JVM name with its own
+        # round trip: look the classes up once, not once per call.
+        jvm = self._jvm
+        return (
+            jvm.org.apache.hadoop.fs.Path,
+            jvm.org.apache.hadoop.fs.FileUtil,
+            jvm.scala.collection.immutable.ArraySeq,
+        )
+
     def _path(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
+        return self._classes[0](path)
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._path(path)))
@@ -38,6 +62,23 @@ class LakeFS:
         return [
             (s.getPath().getName(), bool(s.isDirectory()), int(s.getLen()))
             for s in self._fs.listStatus(self._path(path))
+        ]
+
+    def glob(self, base: str, pattern: str) -> list[str]:
+        """``base``-relative paths matching the Hadoop glob ``pattern``
+        (``*``-style, one component per ``/``, e.g. ``*/*.parquet``) below
+        ``base``; empty when ``base`` does not exist. A fixed five calls
+        whatever the match count: the matches come back as one
+        newline-joined string (names cannot hold a newline — Spark escapes
+        control characters in partition values)."""
+        found = self._fs.globStatus(self._path(f"{glob_escape(base.rstrip('/'))}/{pattern}"))
+        if not found:
+            return []
+        _, file_util, array_seq = self._classes
+        joined = array_seq.unsafeWrapArray(file_util.stat2Paths(found))
+        depth = pattern.count("/") + 1
+        return [
+            "/".join(p.split("/")[-depth:]) for p in joined.mkString("\n").split("\n")
         ]
 
     def delete(self, path: str, recursive: bool = False) -> bool:

@@ -131,7 +131,7 @@ def dedup_append(table: LakeTable, new_docs: DataFrame) -> int:
         batch.groupBy("__h").agg(F.min("doc_id").alias("doc_id")),
         ["__h", "doc_id"],
     )
-    if table.exists():
+    if table.latest_version() is not None:
         existing = table.read().select(norm.alias("__h")).distinct()
         batch_canon = batch_canon.join(existing, "__h", "left_anti")
     out = assign_split(batch_canon.drop("__h"))

@@ -3,16 +3,17 @@
 The reference appends with merge-schema enabled
 (nyc_taxi_to_iceberg.py:141-143: writeTo(...).option("mergeSchema","true")),
 relying on the table format to serve old files with NULLs for later-added
-columns. lake.py implements that contract over plain parquet via a persisted
-schema sidecar; tests/test_lake.py pins the mechanics. This query runs the
-WHOLE round trip as a driver-checkable operator:
+columns. The lake table implements that contract over plain parquet: the
+union schema is part of the append's commit, and every read applies the
+snapshot's schema; tests/test_lake.py pins the mechanics. This query runs
+the WHOLE round trip as a driver-checkable operator:
 
   batch 1 (even order keys, original columns) → append
   batch 2 (odd order keys, + priority_class column) → append(merge_schema=True)
   read() → union schema, old files' missing column read as NULL
 
 The DuckDB oracle reproduces the expected union with an explicit NULL fill —
-so a green row proves the sidecar-applied read schema, the NULL fill for
+so a green row proves the snapshot-applied read schema, the NULL fill for
 pre-evolution files, and partition-column round-tripping (the lake table is
 partitioned by o_orderstatus) all at once.
 """

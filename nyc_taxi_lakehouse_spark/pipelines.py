@@ -7,7 +7,8 @@ Each reference DAG becomes a composable function over the lakehouse layer
                         → cleaning chain → partitioned append → control update
                         (nyc_taxi_to_iceberg.py:84-143, nyc_taxi_iceberg_etl.py:46-82)
 - refresh_mart        = comprehensive_analytics refresh idiom: DELETE recent
-                        partitions + re-append (comprehensive_analytics.py:207-213)
+                        partitions + re-append (comprehensive_analytics.py:207-213),
+                        as one replace_where commit
 - build_daily_summary = CTAS daily summary (nyc_taxi_to_iceberg.py:165-184)
 - run_quality_gates   = the DAG validation tasks (nyc_taxi_iceberg_etl.py:173-192)
 
@@ -118,8 +119,8 @@ def build_daily_summary(spark: SparkSession, table: LakeTable, out: LakeTable) -
             F.max("l_quantity").alias("max_qty"),
         )
     )
-    # CREATE OR REPLACE: full overwrite of the small summary table.
-    df.write.mode("overwrite").parquet(out.path)
+    # CREATE OR REPLACE: one overwrite commit of the small summary table.
+    out.overwrite(df)
     return out.read()
 
 
@@ -128,11 +129,14 @@ def refresh_mart(
 ) -> None:
     """The reference's idempotent DELETE-recent + append refresh
     (comprehensive_analytics.py:207-213) bounded to the given (year, month)
-    partitions — only those partitions rewrite."""
+    partitions, as one replace_where commit: the predicate names partition
+    columns only, so those partitions leave the manifest without a scan and
+    ``fresh`` — which may read ``mart`` itself — is the only write. A fresh
+    mart gets an append."""
     pred = " OR ".join(
         f"(ship_year = {y} AND ship_month = {m})" for y, m in months
     )
-    mart.refresh_where(fresh, pred)
+    mart.replace_where(fresh, pred)
 
 
 def run_quality_gates(df: DataFrame, required: list[str]) -> dict:
@@ -200,8 +204,9 @@ GROUP BY 1, 2, 3
     "path (ingest_facts filters l_shipdate > stored watermark; the "
     "predicate reaches the parquet scan) — and after each ingest only the "
     "touched (year, month) partitions of the mart are recomputed and "
-    "swapped (refresh_mart -> delete_where + append, dynamic partition "
-    "overwrite). Oracle = the single-pass full rollup: a green row proves "
+    "swapped (refresh_mart -> replace_where: the touched partitions leave "
+    "the manifest and the recomputed rows land in the same commit). "
+    "Oracle = the single-pass full rollup: a green row proves "
     "increment 2 neither re-scanned nor disturbed increment 1's partitions "
     "yet the final mart equals the from-scratch build — the reference's "
     "scheduled-mart idiom (comprehensive_analytics.py:207-213) made "

@@ -5,9 +5,9 @@ Maps the reference's ``create_spark_session`` boilerplate
 spark-defaults.conf:16-18) onto a local-mode builder: AQE + partition
 coalescing on, zstd parquet, Kryo. The reference uses Iceberg on MinIO; this
 engine uses a plain parquet warehouse (delta-spark is unavailable in this
-environment) with an explicit lakehouse table layer in ``tables.py`` that
-carries the same semantics (partitioned writes, delete+append refresh,
-schema merge).
+environment) with an explicit lakehouse table layer in ``versioned.py``
+(``lake.LakeTable``) that carries the same semantics (partitioned writes,
+versioned commits, replace_where refresh, schema merge).
 
 The session also sizes Spark's JVM-wide generated-class cache
 (``spark.sql.codegen.cache.maxEntries``, default 100) to the engine's working
@@ -53,6 +53,15 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the JVM starts.
 CODEGEN_CACHE_ENTRIES = 2048
 
+# Input-path count above which Spark lists a scan's paths with a distributed
+# job of one task per path (``spark.sql.sources.parallelPartitionDiscovery.
+# threshold``, default 32). A lake table read passes one path per live file
+# from its manifest, so above 32 files merely constructing the read ran that
+# job: 0.34 s and 33 tasks for 33 files against 0.058 s and no job for 30
+# (sf0.01, 4 cores). Set to Int.MaxValue, the driver lists every scan's paths
+# itself. A runtime conf, so ``configure_runtime`` sets it too.
+LISTING_JOB_THRESHOLD = 2**31 - 1
+
 # Streaming checkpoint manager of sessions built by ``get_spark``: commits
 # rename through ``FileSystem`` rather than ``FileContext``, which forks a
 # ``readlink`` per path on a host without the native Hadoop library.
@@ -79,6 +88,9 @@ def get_spark(
     cycle's 118-124, and at 100 entries each warm pass recompiled 90-128 of
     them. The cache is JVM-wide and sized once, so ``getOrCreate`` on a
     running session keeps that session's size.
+
+    Scans list their input paths on the driver (``LISTING_JOB_THRESHOLD``),
+    so a lake table read of any file count constructs without a job.
 
     Streaming checkpoints commit through ``CHECKPOINT_FILE_MANAGER``.
     Spark's default ``FileContext`` manager forks a ``readlink`` per path
@@ -114,6 +126,10 @@ def get_spark(
         # stage id in the class name made one pipeline several classes.
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_JOB_THRESHOLD),
+        )
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
@@ -141,6 +157,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold",
+        str(LISTING_JOB_THRESHOLD),
+    )
     # The events table is nanosecond-precision parquet, which Spark 4 rejects
     # by default; read as raw long and convert at the source layer.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -272,19 +272,20 @@ def run_cdc_merge(
     ).select("rec.*", "op", "cdc_ts_ms")
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        # Exactly-once discipline (Delta txn appId/version pattern): the
-        # checkpoint delivers each micro-batch at-least-once across
-        # restarts; skip any batch id the table's txn ledger already
-        # recorded. (The keyed MERGE is idempotent anyway — the ledger
-        # makes the guarantee hold for non-idempotent sinks too, and is
-        # pinned by tests/test_streaming.py.)
-        if batch_id <= table.txn_version("cdc_merge"):
-            return
+        # Exactly-once discipline (Delta txn appId/version): the checkpoint
+        # delivers each micro-batch at-least-once across restarts; the merge
+        # records its batch id in its own commit and skips any batch id the
+        # table already recorded. (The keyed MERGE is idempotent anyway —
+        # the txn makes the guarantee hold for non-idempotent sinks too,
+        # and is pinned by tests/test_streaming.py.)
         updates = batch.withColumn("__delete", F.col("op") == "d").drop("op")
         table.merge_upsert(
-            updates, keys=["event_id"], order_col="cdc_ts_ms", delete_col="__delete"
+            updates,
+            keys=["event_id"],
+            order_col="cdc_ts_ms",
+            delete_col="__delete",
+            txn=("cdc_merge", batch_id),
         )
-        table.txn_commit("cdc_merge", batch_id)
 
     drain(
         ops.writeStream.foreachBatch(upsert).option(

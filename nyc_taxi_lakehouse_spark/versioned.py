@@ -1,15 +1,14 @@
-"""Versioned lake tables: snapshot isolation, time travel, VACUUM.
+"""Versioned lake tables: the one lake table format.
 
-The reference gets these semantics from Iceberg (its tables are snapshot
-trees on MinIO; SURVEY §1.1/§1.4); ``lake.py``'s LakeTable deliberately
-covers only the *current-state* contract (append / delete / merge) over
-plain parquet. This module adds the log-structured half — the Delta/Iceberg
-commit model — natively:
+The reference keeps every table in Iceberg (snapshot trees on MinIO;
+SURVEY §1.1/§1.4): schema, partitioning and commits all live in table
+metadata. ``VersionedLakeTable`` (``lake.LakeTable`` is the same class) is
+that table over plain parquet — the Delta/Iceberg commit model, natively:
 
 - every mutation is a **commit**: data files are only ever ADDED (appends
   write fresh uniquely-named part files; deletes rewrite survivors as new
   files), and a JSON manifest ``_log/v{N}.json`` records the live file set,
-  schema, and operation of each version;
+  schema, and operation of each version — there is no other table state;
 - every operation reads **one snapshot** and commits against exactly that
   version: it lists the log once, parses one manifest once (``_snapshot``),
   works from that snapshot alone, and writes the next manifest as the
@@ -20,7 +19,12 @@ commit model — natively:
   ``VERSION AS OF``): the scan lists nothing, it reads exactly the
   manifest's files with partition values parsed via basePath;
 - readers are **snapshot-isolated** for free: a lazy plan over version N
-  keeps working while later commits run, because no commit removes files;
+  keeps working while later commits run, because no commit removes files —
+  so ``replace_where`` (Delta replaceWhere, the reference's DELETE+append
+  refresh in one commit) may take a frame derived from the table itself;
+- a streaming sink's progress is part of the commit: ``merge_upsert(...,
+  txn=(app_id, batch_id))`` records the batch id in the same manifest as
+  the merge (Delta's ``txn`` action) and skips a replayed batch id;
 - ``mark_deleted`` is the merge-on-read DELETE (Delta deletion vectors /
   Iceberg v2 positional delete files): it writes one tombstone file of
   (``_metadata.file_path``, ``_metadata.row_index``) rows and the manifest
@@ -52,19 +56,112 @@ from dataclasses import dataclass, field, replace
 from typing import NoReturn
 from urllib.parse import unquote, urlsplit
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .fs import LakeFS
-from .lake import (
-    TxnLedger,
-    ValidationError,
-    _added_fields,
-    _merge_batch,
-    _partition_filter,
-    _partition_subdir,
-)
+from .fs import LakeFS, glob_escape
+
+
+class ValidationError(ValueError):
+    """A write or gate refused: schema conflict, CHECK violation, failed
+    audit, bad argument."""
+
+
+def _nullability_normalized(dt: T.DataType) -> T.DataType:
+    """Return `dt` with every nullable / containsNull / valueContainsNull flag
+    forced True, recursively — so schema-compat checks compare VALUE types,
+    not nullability metadata (two frames built by different paths routinely
+    disagree on containsNull while being byte-compatible in parquet)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullability_normalized(f.dataType), True)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullability_normalized(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _nullability_normalized(dt.keyType),
+            _nullability_normalized(dt.valueType),
+            True,
+        )
+    return dt
+
+
+def _partition_filter(pcols: list[str], parts: list[tuple]):
+    """OR-of-ANDs Column matching the given partition-value tuples.
+
+    Null-safe: a NULL partition value (written by Spark as
+    __HIVE_DEFAULT_PARTITION__ and read back as NULL) must still match its
+    partition — plain `==` is never TRUE for NULL and would silently exclude
+    those rows from a rewrite."""
+    cond = F.lit(False)
+    for p in parts:
+        c = F.lit(True)
+        for col, val in zip(pcols, p):
+            c = c & F.col(col).eqNullSafe(F.lit(val))
+        cond = cond | c
+    return cond
+
+
+def _partition_subdir(pcols: list[str], part: tuple) -> str:
+    """Relative directory for one partition-value tuple, using Spark's NULL
+    directory convention."""
+    return "/".join(
+        f"{col}={'__HIVE_DEFAULT_PARTITION__' if val is None else val}"
+        for col, val in zip(pcols, part)
+    )
+
+
+def _added_fields(
+    current: T.StructType, incoming: T.StructType, what: str
+) -> list[T.StructField]:
+    """The merge-schema rule: a column present on both sides must keep its
+    value type (parquet has no transparent type widening, so a conflict
+    raises ValidationError naming ``what``); returns the incoming fields
+    the current schema lacks."""
+    have = {f.name: f for f in current.fields}
+    for f in incoming.fields:
+        old = have.get(f.name)
+        if old is not None and _nullability_normalized(
+            old.dataType
+        ) != _nullability_normalized(f.dataType):
+            raise ValidationError(
+                f"{what}: column {f.name!r} type conflict {old.dataType} vs "
+                f"{f.dataType}"
+            )
+    return [f for f in incoming.fields if f.name not in have]
+
+
+def _merge_batch(
+    updates: DataFrame, keys: list[str], order_col: str | None, delete_col: str | None
+) -> tuple[DataFrame, DataFrame]:
+    """The MERGE batch rule: keep the last write per key by ``order_col``,
+    then return (inserts, all_keys): the rows not flagged by ``delete_col``
+    (which is dropped), and every key the batch touches — updated and
+    deleted keys alike leave the table."""
+    if order_col:
+        w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+        updates = (
+            updates.withColumn("__rn", F.row_number().over(w))
+            .filter("__rn = 1")
+            .drop("__rn")
+        )
+    inserts = updates
+    if delete_col:
+        inserts = updates.filter(
+            ~F.coalesce(F.col(delete_col), F.lit(False))
+        ).drop(delete_col)
+    return inserts, updates.select(*keys)
+
+
+def _sql_str(value: str) -> str:
+    """A Spark SQL string literal holding ``value``."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 # Where mark_deleted stages tombstone files, their schema, and the scan
@@ -90,7 +187,9 @@ class _Snapshot:
     ``base`` (a shallow clone's source root) stays in the manifest format;
     reads derive each file's root from its path (``_root_of``). Each
     ``deletes`` entry is a deletion vector: {"path": tombstone file,
-    "rows": its row count, "files": the live files it covers}."""
+    "rows": its row count, "files": the live files it covers}. ``txns``
+    maps a streaming writer's app id to the highest micro-batch id it has
+    committed (Delta's ``txn`` action)."""
 
     version: int | None = None
     op: str = ""
@@ -104,10 +203,16 @@ class _Snapshot:
     retired_physical: tuple[str, ...] = ()
     stats: dict = field(default_factory=dict)
     deletes: tuple[dict, ...] = ()
+    txns: dict = field(default_factory=dict)
 
 
-class VersionedLakeTable(TxnLedger):
-    """A partitioned parquet table with Delta-style versioned commits."""
+class VersionedLakeTable:
+    """A partitioned parquet table with Delta-style versioned commits.
+
+    Concurrency contract: any number of writers. Commits are OCC-serialized
+    (put-if-absent at read-version+1) and data files land via private
+    staging, so a writer that loses the race discards its files and raises
+    ConcurrentCommitError."""
 
     def __init__(
         self,
@@ -139,13 +244,7 @@ class VersionedLakeTable(TxnLedger):
         return os.path.join(self._log_dir, f"v{version:09d}.json")
 
     def versions(self) -> list[int]:
-        if not self.fs.is_dir(self._log_dir):
-            return []
-        out = []
-        for name, is_dir, _ in self.fs.list(self._log_dir):
-            if not is_dir and name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
+        return sorted(int(name[1:-5]) for name in self.fs.glob(self._log_dir, "v*.json"))
 
     def latest_version(self) -> int | None:
         vs = self.versions()
@@ -183,6 +282,7 @@ class VersionedLakeTable(TxnLedger):
             retired_physical=tuple(m.get("retired_physical", ())),
             stats=m.get("stats", {}),
             deletes=tuple(m.get("deletes", ())),
+            txns=m.get("txns", {}),
         )
 
     def _nonempty(self, snap: _Snapshot, what: str) -> _Snapshot:
@@ -257,6 +357,7 @@ class VersionedLakeTable(TxnLedger):
             "generated_cols": new.generated_cols,
             "retired_physical": list(new.retired_physical),
             "deletes": [d for d in new.deletes if not live.isdisjoint(d["files"])],
+            "txns": new.txns,
         }
         manifest.update((k, v) for k, v in carried.items() if v)
         stats = new.stats
@@ -271,7 +372,6 @@ class VersionedLakeTable(TxnLedger):
                     stats[f] = s
         if stats or self.stats_cols:
             manifest["stats"] = stats
-        self.fs.mkdirs(self._log_dir)
         try:
             self.fs.write_text_exclusive(
                 self._manifest_path(version), json.dumps(manifest)
@@ -665,14 +765,13 @@ class VersionedLakeTable(TxnLedger):
     # -- commits ------------------------------------------------------------
 
     def _staged_write(
-        self,
-        df: DataFrame,
-        mapping: dict[str, str],
-        subdir: str = "",
-        partitioned: bool | None = None,
+        self, df: DataFrame, mapping: dict[str, str], subdir: str | None = None
     ) -> set[str]:
         """Write df's part files through a PRIVATE staging directory, then
         move them into the table layout; returns the relative paths added.
+        With ``subdir`` None the files take the table's partition layout at
+        its root; with a directory they land unpartitioned there (compact's
+        per-directory rewrite, tombstone files).
 
         The naive write-then-diff (snapshot _data_files before/after a
         mode("append") write straight into the table) has two concurrency
@@ -686,27 +785,66 @@ class VersionedLakeTable(TxnLedger):
 
         Data files always carry PHYSICAL column names; callers work in
         logical names and pass the mapping the commit will record."""
-        if os.path.isabs(subdir) or os.path.normpath(subdir).split(os.sep)[0] == "..":
+        if subdir is not None and (
+            os.path.isabs(subdir) or os.path.normpath(subdir).split(os.sep)[0] == ".."
+        ):
             raise ValidationError(f"staged write outside the table: {subdir!r}")
         if mapping:
             df = df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
         stage = os.path.join(self.path, "_staging", uuid.uuid4().hex)
+        pcols = self.partition_cols if subdir is None else []
         writer = df.write.mode("overwrite")
-        use_partitioning = (
-            bool(self.partition_cols) if partitioned is None else partitioned
-        )
-        if use_partitioning:
-            writer = writer.partitionBy(*self.partition_cols)
+        if pcols:
+            writer = writer.partitionBy(*pcols)
         writer.parquet(stage)
-        added = {os.path.join(subdir, rel): rel for rel in self._parquet_under(stage)}
-        for dest_rel, rel in added.items():
-            dest = os.path.join(self.path, dest_rel)
-            self.fs.mkdirs(os.path.dirname(dest))
-            if not self.fs.rename(os.path.join(stage, rel), dest):
-                raise ValidationError(f"staged move failed: {rel} -> {dest_rel}")
-        self.fs.delete(stage, recursive=True)
+        files = self.fs.glob(stage, "/".join(["*"] * len(pcols) + ["*.parquet"]))
+        try:
+            self._move(stage, os.path.join(self.path, subdir or ""), files, pcols)
+        finally:
+            self.fs.delete(stage, recursive=True)
         self.spark.catalog.refreshByPath(self.path)
-        return set(added)
+        return {os.path.join(subdir or "", f) for f in files}
+
+    def _move(self, stage: str, dest: str, files: list[str], pcols: list[str]) -> None:
+        """Move the ``stage``-relative ``files``, ``len(pcols)`` partition
+        directories deep, to the same relative paths below ``dest``.
+
+        Each FileSystem call is a py4j round trip, and Hadoop's mkdirs forks
+        a ``chmod`` per directory it creates on a host without the native
+        library, so the move works per directory level: one glob lists the
+        table's directories of that level, a staged directory the table
+        lacks moves whole by one rename (no mkdirs), and only files whose
+        leaf directory the table already has move one by one. A concurrent
+        writer that created the same directory first makes the rename nest
+        ours inside it; that is checked after each directory rename, and
+        the write is then undone and refused with ConcurrentCommitError."""
+
+        def move(rel: str) -> None:
+            if not self.fs.rename(os.path.join(stage, rel), os.path.join(dest, rel)):
+                raise ValidationError(f"staged move failed: {rel} -> {dest}")
+
+        pending = files
+        for level in range(1, len(pcols) + 1):
+            pattern = "/".join(f"{glob_escape(c)}=*" for c in pcols[:level])
+            have = set(self.fs.glob(dest, pattern))
+            head = lambda f: "/".join(f.split("/")[:level])  # noqa: E731
+            fresh = sorted({head(f) for f in pending} - have)
+            for d in fresh:
+                move(d)
+                nested = os.path.join(dest, d, os.path.basename(d))
+                if self.fs.exists(nested):
+                    self.fs.delete(nested, recursive=True)
+                    for f in files:
+                        self.fs.delete(os.path.join(dest, f))
+                    raise ConcurrentCommitError(
+                        f"partition directory {d} at {dest} was created by a "
+                        "concurrent writer; re-read and retry"
+                    )
+            pending = [f for f in pending if head(f) not in fresh]
+        if not pcols and pending:
+            self.fs.mkdirs(dest)
+        for f in pending:
+            move(f)
 
     def _checked_write(
         self, df: DataFrame, mapping: dict[str, str], metrics: dict
@@ -754,10 +892,12 @@ class VersionedLakeTable(TxnLedger):
             new_fields = _added_fields(
                 snap.schema, df.schema, f"append(merge_schema={merge_schema})"
             )
-            if new_fields and not merge_schema:
+            missing = [n for n in snap.schema.names if n not in df.columns]
+            if (new_fields or missing) and not merge_schema:
                 raise ValidationError(
-                    f"append: new columns {[f.name for f in new_fields]} — pass "
-                    "merge_schema=True to evolve the table schema"
+                    f"append: new columns {[f.name for f in new_fields]}, missing "
+                    f"columns {missing} — pass merge_schema=True to evolve the "
+                    "table schema"
                 )
             schema = T.StructType(list(snap.schema.fields) + new_fields)
         mapping = self._mapping_with_new_cols(snap, df)
@@ -776,7 +916,12 @@ class VersionedLakeTable(TxnLedger):
         added files. Returns the new version. CHECK constraints in force
         are enforced during the staging write (Observation — no extra
         pass); a violating batch is discarded before commit, Delta
-        semantics."""
+        semantics. ``merge_schema=True`` lets the batch add columns (the
+        reference's mergeSchema append, nyc_taxi_to_iceberg.py:141-143)
+        or lack some: the commit's schema is the union, and files without
+        a column read NULL for it. Without it the batch must carry exactly
+        the table's columns. A column on both sides must keep its type —
+        parquet has no transparent type widening."""
         return self._append(self._snapshot(), df, merge_schema)
 
     def overwrite(self, df: DataFrame) -> int:
@@ -784,21 +929,51 @@ class VersionedLakeTable(TxnLedger):
         and deletion vector (older snapshots keep reading theirs). Schema,
         CHECK and generated-column rules apply as in append. Returns the
         new version."""
-        return self._append(self._snapshot(), df, False, "overwrite")
+        snap = self._snapshot()
+        return self._append(snap, df, False, "overwrite", dead=set(snap.files))
+
+    def replace_where(self, df: DataFrame, predicate: str) -> int:
+        """Commit Delta's replaceWhere: the rows matching ``predicate``
+        leave and ``df``'s rows are added in ONE commit, so no reader ever
+        sees one half applied and a failure in between loses nothing — the
+        reference's DELETE-recent + append refresh
+        (comprehensive_analytics.py:207-213). On a table with no commit
+        yet it is an append. ``df`` is checked like an append (schema,
+        CHECK, generated columns) and may be a plan over this very table:
+        the snapshot it reads stays on disk. Dropping the rows costs what
+        delete_where's does: nothing but the manifest for a predicate over
+        partition columns only. Returns the new version."""
+        snap = self._snapshot()
+        if snap.version is None:
+            return self._append(snap, df, False)
+        dead, kept = self._drop_rows(snap, predicate)
+        return self._append(snap, df, False, "replace_where", dead=dead, kept=kept)
 
     def _append(
-        self, snap: _Snapshot, df: DataFrame, merge_schema: bool, op: str = "append"
+        self,
+        snap: _Snapshot,
+        df: DataFrame,
+        merge_schema: bool,
+        op: str = "append",
+        dead=frozenset(),
+        kept: DataFrame | None = None,
+        **extra,
     ) -> int:
+        """Commit ``op``: ``df`` staged as an append of ``snap`` while the
+        live files ``dead`` leave, and the rows ``kept`` (their survivors,
+        if any) are rewritten alongside. ``extra`` are further manifest
+        changes. A CHECK or generated-column violation discards all of it."""
         added, _, bad, changes = self._stage_append(snap, df, merge_schema, {})
+        if kept is not None:
+            added |= self._staged_write(kept, changes["column_mapping"])
         if bad:
             self._discard(
                 added,
                 f"{op} rejected by CHECK constraints / generated-"
                 f"column validation (staged files discarded): {bad}",
             )
-        if op == "overwrite":
-            changes["files"] = added
-        return self._commit(snap, op, staged=added, **changes)
+        changes["files"] = (set(snap.files) - set(dead)) | added
+        return self._commit(snap, op, staged=added, **changes, **extra)
 
     def wap_append(
         self,
@@ -834,48 +1009,119 @@ class VersionedLakeTable(TxnLedger):
             )
         return self._commit(snap, "append", staged=added, **changes), observed
 
-    def _rewrite(self, snap: _Snapshot, op: str, affected, rewrite, checks=None) -> int:
+    def _bounded(
+        self, snap: _Snapshot, current: DataFrame, affected: DataFrame
+    ) -> tuple[set[str], DataFrame | None]:
+        """The partition-bounded scope of a rewrite of ``snap``, whose rows
+        are ``current``: (the live files of the partitions holding a row of
+        ``affected``, those partitions' rows) — one small distinct collect.
+        An unpartitioned table is one scope: (every live file,
+        ``current``). (empty set, None) when no partition is touched."""
+        pcols = self.partition_cols
+        if not pcols:
+            return set(snap.files), current
+        parts = [tuple(r) for r in affected.select(*pcols).distinct().collect()]
+        if not parts:
+            return set(), None
+        prefixes = tuple(_partition_subdir(pcols, p) + "/" for p in parts)
+        dead = {f for f in snap.files if self._root_of(f)[1].startswith(prefixes)}
+        return dead, current.filter(_partition_filter(pcols, parts))
+
+    def _matching_dirs(self, snap: _Snapshot, predicate: str) -> set[str] | None:
+        """The partition directories of ``snap``'s live files whose values
+        satisfy ``predicate``, decided from the manifest alone: the
+        predicate filters a VALUES relation of one row per directory,
+        which Spark evaluates on the driver without a job. None when the
+        table is unpartitioned or the predicate reads a non-partition
+        column — it cannot then be decided per directory."""
+        pcols = self.partition_cols
+        if not pcols:
+            return None
+        dirs = sorted({os.path.dirname(self._root_of(f)[1]) for f in snap.files})
+        types = {f.name: f.dataType.simpleString() for f in snap.schema}
+        rows = []
+        for i, d in enumerate(dirs):
+            segs = d.split("/")
+            if len(segs) != len(pcols) or any(
+                not seg.startswith(f"{c}=") for seg, c in zip(segs, pcols)
+            ):
+                return None
+            vals = [unquote(seg.split("=", 1)[1]) for seg in segs]
+            lits = [
+                "NULL" if v == "__HIVE_DEFAULT_PARTITION__" else _sql_str(v)
+                for v in vals
+            ]
+            rows.append(
+                f"({i}, "
+                + ", ".join(f"CAST({v} AS {types[c]})" for v, c in zip(lits, pcols))
+                + ")"
+            )
+        if not rows:
+            return set()
+        names = ", ".join(f"`{c}`" for c in pcols)
+        values = self.spark.sql(f"SELECT * FROM VALUES {', '.join(rows)} AS t(__dir, {names})")
+        try:
+            hits = values.filter(predicate).select("__dir").collect()
+        except AnalysisException:
+            return None
+        return {dirs[r[0]] for r in hits}
+
+    def _drop_rows(
+        self, snap: _Snapshot, predicate: str
+    ) -> tuple[set[str], DataFrame | None]:
+        """What dropping the rows matching ``predicate`` from ``snap``
+        takes: (the live files that leave, the rows of theirs that stay,
+        or None when none can). A predicate over partition columns only
+        drops whole directories (``_matching_dirs``): no scan, no rewrite —
+        Delta's metadata-only delete. Otherwise the partitions holding a
+        match are rewritten without it (``_bounded``). SQL DELETE
+        semantics: a NULL predicate keeps the row."""
+        dirs = self._matching_dirs(snap, predicate)
+        if dirs is not None:
+            dead = {f for f in snap.files if os.path.dirname(self._root_of(f)[1]) in dirs}
+            return dead, None
+        current = self._scan(snap)
+        dead, scope = self._bounded(snap, current, current.filter(predicate))
+        keep = ~F.coalesce(F.expr(predicate), F.lit(False))
+        return dead, None if scope is None else scope.filter(keep)
+
+    def _rewrite(
+        self, snap: _Snapshot, op: str, affected, rewrite, checks=None, **extra
+    ) -> int:
         """Commit ``op`` as a partition-bounded rewrite of ``snap``: the
         partitions holding a row of ``affected(current)`` are replaced by
         ``rewrite(their rows)``, written as NEW files (nothing is
         physically removed, so every earlier snapshot and any in-flight
         reader keeps working); every other partition's files carry over.
         An unpartitioned table rewrites whole. ``checks`` (CHECK
-        counters) ride the write; a violation discards it."""
+        counters) ride the write; a violation discards it. ``extra`` are
+        further manifest changes, committed even when nothing is touched."""
         current = self._scan(snap)
-        live = set(snap.files)
-        pcols = self.partition_cols
-        if pcols:
-            parts = [
-                tuple(r) for r in affected(current).select(*pcols).distinct().collect()
-            ]
-            if not parts:
-                return self._commit(snap, f"{op}(noop)")
-            prefixes = tuple(_partition_subdir(pcols, p) + "/" for p in parts)
-            dead = {f for f in live if self._root_of(f)[1].startswith(prefixes)}
-            scope = current.filter(_partition_filter(pcols, parts))
-        else:
-            dead, scope = live, current
+        dead, scope = self._bounded(snap, current, affected(current))
+        if scope is None:
+            return self._commit(snap, f"{op}(noop)", **extra)
         added, _, bad = self._checked_write(
             rewrite(scope), snap.column_mapping, checks or {}
         )
         if bad:
             self._discard(added, f"{op} rejected by CHECK constraints: {bad}")
-        return self._commit(snap, op, staged=added, files=(live - dead) | added)
+        return self._commit(
+            snap, op, staged=added, files=(set(snap.files) - dead) | added, **extra
+        )
 
     def delete_where(self, predicate: str) -> int:
-        """Commit a DELETE. Survivors of affected partitions are rewritten as
-        NEW files; the manifest drops the affected partitions' old files.
-        Partition-bounded exactly like LakeTable.delete_where; SQL DELETE
-        semantics (a NULL predicate keeps the row). Returns the new
-        version."""
+        """Commit a DELETE. Partition-bounded: a predicate over partition
+        columns only drops the matching partitions' files from the manifest
+        without a scan; any other predicate rewrites the survivors of the
+        partitions holding a match as NEW files. SQL DELETE semantics (a
+        NULL predicate keeps the row). Returns the new version."""
         snap = self._nonempty(self._snapshot(), "delete_where")
-        keep = ~F.coalesce(F.expr(predicate), F.lit(False))
-        return self._rewrite(
-            snap,
-            "delete_where",
-            lambda current: current.filter(predicate),
-            lambda scope: scope.filter(keep),
+        dead, kept = self._drop_rows(snap, predicate)
+        if not dead:
+            return self._commit(snap, "delete_where(noop)")
+        added = set() if kept is None else self._staged_write(kept, snap.column_mapping)
+        return self._commit(
+            snap, "delete_where", staged=added, files=(set(snap.files) - dead) | added
         )
 
     def update_where(self, predicate: str, set_exprs: dict[str, str]) -> int:
@@ -930,17 +1176,32 @@ class VersionedLakeTable(TxnLedger):
         keys: list[str],
         order_col: str | None = None,
         delete_col: str | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> int:
         """Commit a keyed MERGE (Delta MERGE WHEN MATCHED UPDATE/DELETE,
         NOT MATCHED INSERT) with last-write-wins by ``order_col`` within the
-        batch. Affected partitions' surviving rows + inserts are written as
-        NEW files; the manifest swaps those partitions' file sets. Earlier
-        snapshots stay readable — each CDC batch becomes one time-travelable
-        version. Returns the new version."""
-        inserts, all_keys = _merge_batch(updates, keys, order_col, delete_col)
+        batch (e.g. source ts_ms — the Debezium contract); ``delete_col =
+        true`` rows delete. Affected partitions' surviving rows + inserts
+        are written as NEW files; the manifest swaps those partitions' file
+        sets. Earlier snapshots stay readable — each CDC batch becomes one
+        time-travelable version. Returns the new version.
+
+        ``txn=(app_id, batch_id)`` is Delta's txn action for a
+        foreachBatch sink: the batch id is recorded in the SAME manifest
+        as the merge, and a batch id at or below the one recorded for
+        ``app_id`` is skipped (no commit; the current version is
+        returned). Structured Streaming delivers each micro-batch
+        at-least-once across restarts; this makes it effectively-once."""
         snap = self._snapshot()
+        extra = {}
+        if txn is not None:
+            app_id, batch_id = txn
+            if batch_id <= snap.txns.get(app_id, -1):
+                return snap.version
+            extra["txns"] = {**snap.txns, app_id: int(batch_id)}
+        inserts, all_keys = _merge_batch(updates, keys, order_col, delete_col)
         if snap.version is None:
-            return self._append(snap, inserts, False)
+            return self._append(snap, inserts, False, **extra)
         # Align the insert side to the table schema (drops batch-only
         # bookkeeping columns like the order_col).
         inserts = inserts.select(*snap.schema.names)
@@ -952,6 +1213,7 @@ class VersionedLakeTable(TxnLedger):
             .select(*pcols)
             .unionByName(inserts.select(*pcols)),
             lambda scope: scope.join(all_keys, keys, "left_anti").unionByName(inserts),
+            **extra,
         )
 
     def mark_deleted(self, predicate: str) -> int:
@@ -974,7 +1236,7 @@ class VersionedLakeTable(TxnLedger):
                 obs, F.count("*").alias("rows"), F.collect_set("file_path").alias("files")
             )
         )
-        added = self._staged_write(hits, {}, subdir=_DELETES_DIR, partitioned=False)
+        added = self._staged_write(hits, {}, subdir=_DELETES_DIR)
         seen = obs.get
         if not seen["rows"]:
             self._drop(added)
@@ -993,8 +1255,11 @@ class VersionedLakeTable(TxnLedger):
 
     def compact(self, target_file_bytes: int = 128 << 20) -> int:
         """Commit an OPTIMIZE: rewrite the current live set as bin-packed
-        files (coalesced toward the target size) and commit the new layout.
-        Unlike LakeTable.compact this is non-destructive — the fragmented
+        files (coalesced toward the target size — the reference's
+        ``write-target-file-size-bytes=134217728`` sink setting) and commit
+        the new layout. Streaming sinks and frequent small appends fragment
+        partitions; only directories with more files than their data needs
+        are rewritten. Non-destructive — the fragmented
         files stay on disk serving older snapshots until vacuum(); readers
         of any version are never disturbed (Delta OPTIMIZE semantics: a
         data-identical commit). On a shallow clone it also deep-copies every
@@ -1095,7 +1360,7 @@ class VersionedLakeTable(TxnLedger):
             if worth and not worth(files, want):
                 continue
             df = layout(self._read_files(snap, files).drop(*self.partition_cols), want)
-            added = self._staged_write(df, snap.column_mapping, subdir=d, partitioned=False)
+            added = self._staged_write(df, snap.column_mapping, subdir=d)
             new_live = (new_live - set(files)) | added
         if new_live == live:
             return -1

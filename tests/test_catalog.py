@@ -1,5 +1,5 @@
 """S11 SQL DDL surface: CREATE DATABASE / CREATE TABLE ... USING parquet
-PARTITIONED BY ... TBLPROPERTIES, catalog append, and LakeTable interop
+PARTITIONED BY ... TBLPROPERTIES and catalog append
 (reference nyc_taxi_to_iceberg.py:37-71)."""
 
 from __future__ import annotations
@@ -61,19 +61,6 @@ def test_tblproperties_roundtrip(spark, trips_table):
     }
     assert props.get("write.format.default") == "parquet"
     assert props.get("write.parquet.compression-codec") == "zstd"
-
-
-def test_lake_interop_delete_then_repair(spark, trips_table):
-    df = spark.createDataFrame(
-        [(1, 10.0, 2024, 1), (2, 20.0, 2024, 1), (3, 30.0, 2024, 2)],
-        "trip_id bigint, fare double, year int, month int",
-    )
-    trips_table.append(df)
-    lake = trips_table.lake()
-    lake.delete_where("month = 1 AND trip_id = 2")
-    trips_table.repair()
-    rows = spark.table("taxi_test.trips").orderBy("trip_id").collect()
-    assert [r.trip_id for r in rows] == [1, 3]
 
 
 def test_ddl_string_values_escaped(spark, tmp_path):

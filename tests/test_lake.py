@@ -1,4 +1,4 @@
-"""Lakehouse table layer tests: delete+append refresh, merge, watermark
+"""Lakehouse table layer tests: replace_where refresh, merge, watermark
 control, validation gates (reference S7-S9, §2.11)."""
 
 from __future__ import annotations
@@ -51,12 +51,13 @@ def test_delete_where_rewrites_only_affected_partitions(spark, trips, tmp_path):
 
 
 def test_refresh_where_idempotent(spark, trips, tmp_path):
-    """The reference's DELETE+append refresh run twice yields one copy."""
+    """The reference's DELETE+append refresh (replace_where) run twice
+    yields one copy."""
     t = LakeTable(spark, str(tmp_path / "t"), partition_cols=["day"])
     t.append(trips)
     fresh = trips.filter("day = '2024-01-03'").withColumn("amount", F.col("amount") * 2)
-    t.refresh_where(fresh, "day = '2024-01-03'")
-    t.refresh_where(fresh, "day = '2024-01-03'")
+    t.replace_where(fresh, "day = '2024-01-03'")
+    t.replace_where(fresh, "day = '2024-01-03'")
     df = t.read()
     assert df.count() == 30
     # day-03 rows are i∈{2,5,...}; doubled min = 4.0 proves the fresh copy won
@@ -131,9 +132,7 @@ def test_merge_upsert_drops_fully_deleted_partition(spark, tmp_path):
     t.merge_upsert(deletes, keys=["id"], delete_col="__del")
     df = t.read()
     assert [r.id for r in df.collect()] == [2]
-    import os
-
-    assert not os.path.isdir(str(tmp_path / "t" / "day=d1"))
+    assert not [f for f in t._snapshot().files if f.startswith("day=d1/")]
 
 
 def test_delete_where_null_predicate_keeps_row(spark, tmp_path):
@@ -154,8 +153,8 @@ def test_delete_where_null_predicate_keeps_row(spark, tmp_path):
 
 def test_append_merge_schema_evolution(spark, tmp_path):
     """mergeSchema append: new column visible on read, old rows NULL, and
-    reads stay deterministic via the schema sidecar (ADVICE r1: mergeSchema
-    is a read option — writer option was a silent no-op)."""
+    reads stay deterministic via the committed schema (ADVICE r1:
+    mergeSchema is a read option — writer option was a silent no-op)."""
     import pytest as _pytest
 
     from nyc_taxi_lakehouse_spark.lake import ValidationError
@@ -179,7 +178,8 @@ def test_append_merge_schema_evolution(spark, tmp_path):
     }
     rows = df.collect()
     assert rows[0].pay_type is None and rows[1].pay_type == "card"
-    # Narrower appends are also evolution (old footer vs new footer races).
+    # Narrower appends are also evolution: without merge_schema the batch
+    # must carry exactly the table's columns.
     narrow = spark.createDataFrame([(3, "d3", 3.0)], "id long, day string, amount double")
     with _pytest.raises(ValidationError):
         t.append(narrow)
@@ -272,6 +272,172 @@ def test_lake_write_path_builds_no_python_rows():
     assert not offenders, offenders
 
 
+# The one DataFrameWriter call each lake module may hold, and why.
+_WRITE_PATH_ALLOWED = {
+    # Every data and tombstone file of a lake table lands through its
+    # private staging directory, before the commit that lists it.
+    ("versioned.py", "VersionedLakeTable._staged_write"),
+    # The control table is a plain parquet append log of watermark rows,
+    # read with its fixed schema; it is not a lake table.
+    ("lake.py", "ControlTable.set_watermark"),
+}
+_WRITE_PATH_MODULES = (
+    "lake.py",
+    "versioned.py",
+    "mor.py",
+    "pipelines.py",
+    "llm/pipeline.py",
+    "operators/evolution.py",
+)
+
+
+def _writer_calls(source: str) -> list[tuple[int, str]]:
+    """(line, enclosing ``Class.function``) of every DataFrameWriter
+    ``.parquet`` / ``.save`` / ``.insertInto`` call: a call on a chain
+    through ``.write``, directly or through a local name bound to one
+    (``writer = df.write.mode(...)``; ``writer.parquet(p)``). Reads
+    (``spark.read...parquet``) do not pass through ``.write``."""
+
+    def chain(expr, bound) -> set[str]:
+        attrs = set()
+        while True:
+            if isinstance(expr, ast.Call):
+                expr = expr.func
+            elif isinstance(expr, ast.Attribute):
+                attrs.add(expr.attr)
+                expr = expr.value
+            else:
+                if isinstance(expr, ast.Name):
+                    attrs |= bound.get(expr.id, set())
+                return attrs
+
+    found = []
+
+    def visit(node, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, f"{scope}{child.name}.")
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = f"{scope}{child.name}"
+                bound: dict[str, set[str]] = {}
+                body = sorted(ast.walk(child), key=lambda n: getattr(n, "lineno", 0))
+                for n in body:
+                    if isinstance(n, ast.Assign):
+                        attrs = chain(n.value, bound)
+                        for target in n.targets:
+                            if isinstance(target, ast.Name):
+                                bound[target.id] = bound.get(target.id, set()) | attrs
+                    elif (
+                        isinstance(n, ast.Call)
+                        and isinstance(n.func, ast.Attribute)
+                        and n.func.attr in ("parquet", "save", "insertInto")
+                        and "write" in chain(n.func.value, bound)
+                    ):
+                        found.append((n.lineno, name))
+        return None
+
+    visit(ast.parse(source), "")
+    return sorted(set(found))
+
+
+def test_writer_scanner_follows_bound_names():
+    src = (
+        "class T:\n"
+        "    def w(self, df, spark):\n"
+        '        """df.write.parquet(p)"""\n'
+        "        spark.read.schema(s).parquet(p)\n"
+        "        writer = df.write.mode('append')\n"
+        "        writer = writer.partitionBy('a')\n"
+        "        writer.parquet(p)\n"
+        "        reader = spark.read.option('k', 1)\n"
+        "        reader.parquet(p)\n"
+        "def f(df):\n"
+        "    df.write.format('x').save(p)\n"
+        "    df.write.insertInto('t')\n"
+    )
+    assert _writer_calls(src) == [(7, "T.w"), (11, "f"), (12, "f")]
+
+
+def test_lake_writes_go_through_the_manifest():
+    """A lake module writes data only where a commit lists it: any other
+    DataFrameWriter call puts files behind the manifest, where no snapshot
+    sees them (or a plain-parquet read sees files no snapshot lists)."""
+    root = pathlib.Path(lake.__file__).parent
+    offenders = [
+        f"{name}:{line} ({where})"
+        for name in _WRITE_PATH_MODULES
+        for line, where in _writer_calls((root / name).read_text())
+        if (name, where) not in _WRITE_PATH_ALLOWED
+    ]
+    assert not offenders, offenders
+
+
+def test_two_level_table_survives_deleting_every_row(spark, tmp_path):
+    """Deleting every row of a two-level partitioned table leaves an empty
+    table with its schema, and it stays writable: no directory left on
+    disk decides what the table is."""
+    t = LakeTable(spark, str(tmp_path / "t"), ["y", "m"])
+    rows = spark.range(12).selectExpr(
+        "id", "CAST(2024 AS INT) AS y", "CAST(id % 3 + 1 AS INT) AS m"
+    )
+    t.append(rows)
+    t.delete_where("y = 2024")
+    empty = t.read()
+    assert empty.count() == 0
+    assert sorted((f.name, f.dataType.simpleString()) for f in empty.schema) == [
+        ("id", "bigint"),
+        ("m", "int"),
+        ("y", "int"),
+    ]
+    t.replace_where(rows.filter("m = 1"), "y = 2024 AND m = 1")
+    assert sorted(r.id for r in t.read().collect()) == [0, 3, 6, 9]
+
+
+def test_failed_replace_where_leaves_previous_version(spark, trips, tmp_path):
+    """A write that fails inside replace_where commits nothing: the
+    previous version stays the latest and reads as before."""
+    t = LakeTable(spark, str(tmp_path / "t"), partition_cols=["day"])
+    t.append(trips)
+    versions = t.versions()
+    boom = trips.filter("assert_true(amount < 0) IS NULL")
+    with pytest.raises(Exception, match="is not true"):
+        t.replace_where(boom, "day = '2024-01-01'")
+    assert t.versions() == versions
+    assert t.read().count() == 30
+
+
+def test_partition_predicate_replace_reads_nothing(spark, trips, tmp_path):
+    """A replace_where whose predicate names partition columns only drops
+    those partitions from the manifest without a scan: its one job is the
+    write of the new rows."""
+    t = LakeTable(spark, str(tmp_path / "t"), partition_cols=["day"])
+    t.append(trips)
+    fresh = spark.range(5).selectExpr(
+        "id + 100 AS id", "'2024-01-02' AS day", "CAST(id AS DOUBLE) AS amount"
+    )
+    _, jobs, _ = spark_jobs(spark, lambda: t.replace_where(fresh, "day = '2024-01-02'"))
+    assert jobs == 1
+    got = t.read()
+    assert got.count() == 25
+    assert sorted(r.id for r in got.filter("day = '2024-01-02'").collect()) == list(
+        range(100, 105)
+    )
+    assert t.history()[-1]["op"] == "replace_where"
+
+
+@pytest.mark.parametrize("n_files", [30, 33, 40])
+def test_read_construction_runs_no_job(spark, tmp_path, n_files):
+    """Constructing a read of a snapshot runs no Spark job whatever its file
+    count: Spark lists more than 32 input paths with a distributed job
+    unless the session says otherwise."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(0, 10 * n_files, numPartitions=n_files))
+    assert len(t._snapshot().files) == n_files
+    df, jobs, _ = spark_jobs(spark, t.read)
+    assert jobs == 0
+    assert df.count() == 10 * n_files
+
+
 def test_validation_gates(spark, trips):
     assert validate_non_empty(trips) == 30
     validate_columns(trips, ["id", "day"])
@@ -303,23 +469,29 @@ def test_compact_bin_packs_small_files(spark, tmp_path):
     assert len(files_before) >= 5
     before_rows = sorted(r.id for r in t.read().collect())
 
-    n = t.compact(target_file_bytes=1 << 30)  # everything fits one file
-    assert n == 1
+    v = t.compact(target_file_bytes=1 << 30)  # everything fits one file
+    assert v == t.latest_version() == 6
+    assert len(t._snapshot().files) == 1
+    assert sorted(r.id for r in t.read().collect()) == before_rows
+    # Idempotent: second compact touches nothing and commits nothing.
+    assert t.compact(target_file_bytes=1 << 30) == -1
+    # The fragments serve the older snapshots until vacuum removes them.
+    t.vacuum(retain_last=1)
     files_after = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
     assert len(files_after) == 1
-    assert sorted(r.id for r in t.read().collect()) == before_rows
-    # Idempotent: second compact touches nothing.
-    assert t.compact(target_file_bytes=1 << 30) == 0
 
 
 def test_sorted_append_orders_within_files(spark, tmp_path):
+    """Rows sorted within each task (the reference's Iceberg ``sorted.by``
+    order) keep that order in the files an append commits: the staged
+    write and move never reorder."""
     from nyc_taxi_lakehouse_spark.lake import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "sorted"))
     df = spark.createDataFrame(
         [(i, (i * 37) % 100) for i in range(1000)], "id int, ts int"
     ).repartition(2)
-    t.append(df, sort_cols=["ts"])
+    t.append(df.sortWithinPartitions("ts"))
     import pyarrow.parquet as pq
     import os
 
@@ -342,7 +514,7 @@ def test_delete_where_null_partition_value(spark, tmp_path):
     t.delete_where("amount > 20")
     rows = {r.id for r in t.read().collect()}
     assert rows == {1, 3}
-    # Deleting the whole NULL partition drops its directory too.
+    # Deleting the whole NULL partition drops its files from the manifest.
     t.delete_where("day IS NULL")
     assert {r.id for r in t.read().collect()} == {1}
 
@@ -398,7 +570,7 @@ def test_append_merge_schema_ignores_nullability_flags(spark, tmp_path):
 
 def test_lake_table_on_scheme_qualified_uri(spark, tmp_path):
     """The maintenance layer must work on scheme-qualified URIs (file:// here,
-    s3a:// in production) — exercises LakeFS end-to-end: append, sidecar
+    s3a:// in production) — exercises LakeFS end-to-end: append, committed
     schema evolution, delete with partition drop, compact."""
     uri = f"file://{tmp_path}/t"
     t = LakeTable(spark, uri, partition_cols=["day"])
@@ -414,14 +586,14 @@ def test_lake_table_on_scheme_qualified_uri(spark, tmp_path):
                               "id long, day string, amount double, note string"),
         merge_schema=True,
     )
-    assert t.fs.exists(f"{uri}/_merged_schema.json")
+    assert "note" in t._snapshot().schema.names
     got = t.read()
     assert got.count() == 11 and "note" in got.columns
-    assert t.compact(min_files=2) >= 1
+    assert t.compact() == t.latest_version() == 5
     assert t.read().count() == 11
     t.delete_where("day = 'd2'")
     assert t.read().filter("day = 'd2'").count() == 0
-    assert not t.fs.exists(f"{uri}/day=d2")
+    assert not [f for f in t._snapshot().files if f.startswith("day=d2/")]
 
 
 def test_control_table_on_scheme_qualified_uri(spark, tmp_path):

@@ -75,11 +75,7 @@ def test_merge_upsert_matches_model(spark, batches):
                 updates, keys=["event_id"], order_col="cdc_ts", delete_col="__delete"
             )
             model_apply(model, batch)
-            got = (
-                {r.event_id: round(r.value, 4) for r in table.read().collect()}
-                if table.exists()
-                else {}
-            )
+            got = {r.event_id: round(r.value, 4) for r in table.read().collect()}
             want = {k: round(v, 4) for k, v in model.items()}
             assert got == want, f"batch={batch}\ngot={got}\nwant={want}"
     finally:

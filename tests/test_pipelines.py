@@ -15,7 +15,7 @@ from nyc_taxi_lakehouse_spark.pipelines import (
 )
 from nyc_taxi_lakehouse_spark.sources.tables import load_tables
 
-from .conftest import spark_jobs
+from .conftest import SF_DIR, spark_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -59,6 +59,50 @@ def test_ingest_reads_its_source_once(spark, tmp_path):
     assert control.get_watermark("lineitem") == want[1]
 
 
+def test_ingest_into_live_table_runs_three_jobs(spark, tmp_path):
+    """On a table that already holds rows, ingest_facts still runs one job
+    each to read the watermark, write the batch and advance the watermark:
+    the append checks the batch against the committed schema, so no
+    schema-inference job reads the table's files (sf0.01: more live files
+    than Spark's 32-path parallel-listing threshold)."""
+    load_tables(spark, SF_DIR, ["lineitem"])
+    table = LakeTable(spark, str(tmp_path / "facts"), ["ship_year", "ship_month"])
+    control = ControlTable(spark, str(tmp_path / "ctrl"))
+    cleaned = clean_facts(spark.read.parquet(f"{SF_DIR}/lineitem.parquet"))
+    table.append(cleaned.filter(F.col("l_shipdate") <= F.lit("1998-01-01")))
+    assert len(table._snapshot().files) > 32
+    control.set_watermark("lineitem", "1998-01-01")
+
+    n, jobs, _ = spark_jobs(spark, lambda: ingest_facts(spark, SF_DIR, table, control))
+    assert jobs <= 3
+    assert n > 0 and table.read().count() == cleaned.count()
+
+
+def test_refresh_live_mart_is_one_write(spark, tmp_path):
+    """Refreshing every month of a live mart (sf0.01: more months than
+    Spark's 32-path parallel-listing threshold) is one replace_where
+    commit: the months leave the manifest without a scan, the fresh rows
+    may read the mart itself, and no staging copy of them is made."""
+    facts = LakeTable(spark, str(tmp_path / "facts"), ["ship_year", "ship_month"])
+    ingest_facts(spark, SF_DIR, facts)
+    months = [
+        (r.ship_year, r.ship_month)
+        for r in facts.read().select("ship_year", "ship_month").distinct().collect()
+    ]
+    assert len(months) > 32
+    mart = LakeTable(spark, str(tmp_path / "mart"), ["ship_year", "ship_month"])
+    refresh_mart(mart, facts.read(), months)  # a fresh mart: an append
+    n = facts.read().count()
+    bumped = mart.read().withColumn("l_quantity", F.col("l_quantity") + 1000)
+
+    _, jobs, _ = spark_jobs(spark, lambda: refresh_mart(mart, bumped, months))
+    assert jobs <= 4
+    got = mart.read()
+    assert got.count() == n
+    assert got.filter(F.col("l_quantity") <= 1000).count() == 0
+    assert [h["op"] for h in mart.history()] == ["append", "replace_where"]
+
+
 def test_daily_summary_ctas(spark, tmp_path):
     table = LakeTable(spark, str(tmp_path / "facts"), ["ship_year", "ship_month"])
     ingest_facts(spark, SF, table)
@@ -87,8 +131,7 @@ def test_refresh_mart_idempotent(spark, tmp_path):
         for r in table.read().select("ship_year", "ship_month").distinct().collect()
     ][:2]
     def make_fresh():
-        # Re-derived per run, as a scheduled job would — lazy plans over a
-        # rewritten plain-parquet path do not survive across refreshes.
+        # Re-derived per run, as a scheduled job would.
         return table.read().filter(
             " OR ".join(f"(ship_year = {y} AND ship_month = {m})" for y, m in months)
         ).withColumn("l_quantity", F.col("l_quantity") + 1000)

@@ -139,10 +139,11 @@ def test_table_as_stream_chain(spark, cdc_dir, tmp_path):
     _write_batch2(cdc_dir)
     run_cdc_pipeline(spark, str(cdc_dir), str(sink), str(tmp_path / "ckpt_w2"))
     windowed_schema = spark.read.parquet(str(sink)).schema
-    table = LakeTable(spark, str(sink))
     from nyc_taxi_lakehouse_spark.streaming.cdc import activity_score_stream
 
-    scored = activity_score_stream(table.read_stream(windowed_schema))
+    scored = activity_score_stream(
+        spark.readStream.schema(windowed_schema).parquet(str(sink))
+    )
     out = tmp_path / "scored"
     q = (
         scored.writeStream.format("parquet")
@@ -439,40 +440,42 @@ def test_stream_static_broadcast_join(spark, tmp_path):
 
 
 def test_txn_ledger_skips_replayed_batches(spark, tmp_path):
-    """The Delta txn (appId, version) pattern on LakeTable: a foreachBatch
-    sink that checks/commits the ledger skips an already-committed batch id
-    on restart replay — even if the replayed content differs (simulating a
-    non-idempotent sink drifting), table state is unchanged."""
-    from nyc_taxi_lakehouse_spark.lake import LakeTable
-
+    """The Delta txn (appId, version) action on the lake table: a
+    foreachBatch sink passing ``txn=(app, batch_id)`` to merge_upsert
+    records the batch id in the merge's own commit, and a restart replay of
+    an already-committed batch id is skipped — even if the replayed content
+    differs (simulating a non-idempotent sink drifting), table state and
+    version are unchanged."""
     t = LakeTable(spark, str(tmp_path / "txn_table"))
     schema = "event_id long, v double, cdc_ts_ms long, __delete boolean"
     t.append(spark.createDataFrame([(1, 10.0, 1, False)], schema).drop("__delete"))
 
     def upsert(batch, batch_id):
-        if batch_id <= t.txn_version("app"):
-            return False
-        t.merge_upsert(batch, keys=["event_id"], order_col="cdc_ts_ms",
-                       delete_col="__delete")
-        t.txn_commit("app", batch_id)
-        return True
+        return t.merge_upsert(batch, keys=["event_id"], order_col="cdc_ts_ms",
+                              delete_col="__delete", txn=("app", batch_id))
 
-    assert t.txn_version("app") == -1
+    assert t._snapshot().txns == {}
     b0 = spark.createDataFrame([(1, 20.0, 2, False)], schema)
-    assert upsert(b0, 0) is True
-    assert t.read().collect()[0].v == 20.0
+    v0 = upsert(b0, 0)
+    assert v0 == 2 and t.read().collect()[0].v == 20.0
+    # The merge's own manifest carries the txn: no second write records it.
+    assert t._manifest(v0)["txns"] == {"app": 0}
+    assert t._manifest(v0)["op"] == "merge_upsert"
 
     # restart replay of batch 0 with DIFFERENT content: must be skipped
     b0_drift = spark.createDataFrame([(1, 999.0, 3, False)], schema)
-    assert upsert(b0_drift, 0) is False
+    assert upsert(b0_drift, 0) == v0 == t.latest_version()
     assert t.read().collect()[0].v == 20.0
-    assert t.txn_version("app") == 0
 
     # the next batch id applies normally
     b1 = spark.createDataFrame([(1, 30.0, 4, False)], schema)
-    assert upsert(b1, 1) is True
+    assert upsert(b1, 1) == 3
     assert t.read().collect()[0].v == 30.0
-    assert t.txn_version("app") == 1
+    assert t._snapshot().txns == {"app": 1}
+    # Another app's txn starts from nothing; both are carried forward.
+    t.merge_upsert(b1, keys=["event_id"], order_col="cdc_ts_ms",
+                   delete_col="__delete", txn=("other", 0))
+    assert t._snapshot().txns == {"app": 1, "other": 0}
 
 
 def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):

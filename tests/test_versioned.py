@@ -43,7 +43,7 @@ def test_snapshot_isolation_reader_survives_delete(spark, tmp_path):
     t.append(_mk(spark, [(1, "O", 10.0), (2, "F", 20.0), (3, "F", 21.0)]))
     pinned = t.read(1)  # lazy plan over version-1 files
     t.delete_where("status = 'F'")
-    # The delete rewrote partition F's survivors (none) as a new commit but
+    # The delete dropped partition F from the next commit's manifest but
     # removed no files — the pinned plan still collects all three rows.
     assert sorted(r.id for r in pinned.collect()) == [1, 2, 3]
     assert sorted(r.id for r in t.read().collect()) == [1]
@@ -83,6 +83,37 @@ def test_append_schema_conflict_rejected(spark, tmp_path):
         t.append(
             _mk(spark, [(5, "O", 1.0, "z")], with_extra=True), merge_schema=False
         )
+
+
+def test_partition_directory_race_is_refused(spark, tmp_path, monkeypatch):
+    """A staged partition directory the table lacks moves in whole, by one
+    rename. If a concurrent writer created that directory after the table's
+    directories were listed, the rename nests ours inside it: the write is
+    undone and refused as a concurrent commit, leaving the table and the
+    other writer's files as they were."""
+    import os
+
+    from nyc_taxi_lakehouse_spark.versioned import ConcurrentCommitError
+
+    path = str(tmp_path / "vt")
+    t = VersionedLakeTable(spark, path, ["status"])
+    t.append(_mk(spark, [(1, "O", 10.0)]))
+    before = t._data_files()
+    listed = t.fs.glob
+    # The partition listing as taken before the O directory existed.
+    monkeypatch.setattr(
+        t.fs, "glob", lambda base, pattern: [] if pattern == "status=*" else listed(base, pattern)
+    )
+    with pytest.raises(ConcurrentCommitError, match="status=O"):
+        t.append(_mk(spark, [(2, "O", 20.0), (3, "P", 30.0)]))
+    monkeypatch.undo()
+    assert t.versions() == [1]
+    assert t._data_files() == before
+    assert not os.path.exists(os.path.join(path, "status=O", "status=O"))
+    assert sorted(r.id for r in t.read().collect()) == [1]
+    # A retry sees the directory and moves files into it one by one.
+    t.append(_mk(spark, [(2, "O", 20.0), (3, "P", 30.0)]))
+    assert sorted(r.id for r in t.read().collect()) == [1, 2, 3]
 
 
 def test_compact_commit_preserves_snapshots(spark, tmp_path):

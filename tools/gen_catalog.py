@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Generate CATALOG.md: the full query catalog from the live registry —
-name, input tables, verification mode, and the operator's own doc. Re-run
-after adding queries; CI-friendly determinism (registry order)."""
+name, input tables, verification mode, and the operator's own doc, sorted
+by query name so the file depends on the registry alone. Re-run after
+adding a query or editing a query's doc; never edit CATALOG.md by hand."""
 import os
 import sys
 
@@ -21,11 +22,12 @@ def main() -> None:
         f"{len(specs) - n_oracle} rows-only by design (streaming/ANN/HLL "
         "surfaces whose semantics are pinned by behavioral tests instead).",
         "",
-        "Generated by tools/gen_catalog.py from the live registry — the "
-        "driver-priority ordering (first 50 = driver correctness rows).",
+        "Generated by tools/gen_catalog.py from the live registry, sorted by "
+        "query name. Edit a query's doc where it is registered and re-run "
+        "the generator.",
         "",
     ]
-    for i, (name, s) in enumerate(specs.items(), 1):
+    for i, (name, s) in enumerate(sorted(specs.items()), 1):
         mode = "oracle" if s.oracle else "rows-only"
         tables = ", ".join(s.tables) or "—"
         lines.append(f"## {i}. `{name}`   [{mode}] ({tables})")
